@@ -73,7 +73,6 @@ def pagerank(
     iterations: int = 5,
     damping: float = 0.85,
     handle_dangling: bool = True,
-    eager_every: int = 4,
     assume_distinct: bool = False,
 ) -> DataFrame:
     """Fixed-iteration power-method PageRank over a directed edge list.
@@ -87,8 +86,8 @@ def pagerank(
     static. Checkpointing is LAZY by default (the whole k-round chain
     compiles once and materializes in one action — measured 4x cheaper
     than a job per round at sf0.1), with an EAGER localCheckpoint every
-    `eager_every` rounds to truncate lineage so long chains never nest
-    more than `eager_every` joins deep (compile-time blowup trap).
+    4 rounds to truncate lineage so long chains never nest more than 4
+    joins deep (compile-time blowup trap).
 
     Dangling nodes (no out-edges) donate their mass uniformly; ranks sum
     to 1 every iteration (pinned in tests/test_graph_ops.py vs an exact
@@ -146,38 +145,38 @@ def pagerank(
         .localCheckpoint()
     )
     for it in range(iterations):
-        if handle_dangling:
-            # dangling mass: total rank parked on nodes with no out-edges
-            dangling = F.broadcast(
-                ranks.join(dangling_ids, "id", "left_semi").agg(
-                    F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm")
-                )
-            )
-        else:
-            dangling = F.broadcast(nodes.limit(1).select(F.lit(0.0).alias("__dm")))
         contribs = (
             ew.join(ranks.withColumnRenamed("id", "src"), "src")
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum(F.col("rank") * F.col("w")).alias("contrib"))
         )
+        nxt = nodes.join(contribs, "id", "left").crossJoin(n_frame)
+        dm = F.lit(0.0)
+        if handle_dangling:
+            # dangling mass: total rank parked on nodes with no out-edges
+            nxt = nxt.crossJoin(
+                F.broadcast(
+                    ranks.join(dangling_ids, "id", "left_semi").agg(
+                        F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm")
+                    )
+                )
+            )
+            dm = F.col("__dm")
         ranks = (
-            nodes.join(contribs, "id", "left")
-            .crossJoin(n_frame)
-            .crossJoin(dangling)
-            .select(
+            nxt.select(
                 "id",
                 (
                     (1.0 - damping) / F.col("__n")
-                    + damping * (F.coalesce("contrib", F.lit(0.0)) + F.col("__dm") / F.col("__n"))
+                    + damping * (F.coalesce("contrib", F.lit(0.0)) + dm / F.col("__n"))
                 ).alias("rank"),
             )
             # final round is ALWAYS eager: the setup caches (e/ew/nodes/
             # dangling_ids) are unpersisted right below, so the returned
             # frame must be materialized while they still serve the
-            # per-iteration joins — otherwise (iterations < eager_every)
-            # no eager round ever fires and the persists are dead weight
+            # per-iteration joins — otherwise (iterations < 4) no eager
+            # round ever fires and the persists are dead weight
             # recomputed at the caller's first action (ADVICE r06)
-            .localCheckpoint(eager=((it + 1) % eager_every == 0 or it == iterations - 1))
+            .localCheckpoint(eager=((it + 1) % 4 == 0 or it == iterations - 1))
         )
     e.unpersist()
     ew.unpersist()

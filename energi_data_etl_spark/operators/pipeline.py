@@ -75,8 +75,8 @@ def shingle_hashes(text_col: str, k: int = 3, hash_fn: str = "md5") -> Column:
     hash_fn="md5" (default) is cross-engine reproducible — required
     wherever a DuckDB oracle recomputes the same hashes — but costs an
     md5 + hex-parse per gram. hash_fn="xxhash64" is the hot-path choice
-    (~10× cheaper, measured in scripts/scale_probe_pipeline.py):
-    engine-local, so only valid when both join sides are hashed by THIS
+    (the contamination scan ran 3× faster at 100k docs, BASELINE.md
+    "Pipeline-tier scale probe"): engine-local, so only valid when both join sides are hashed by THIS
     engine in the same job (true for any contamination/overlap scan)."""
     from .text import tokens
 

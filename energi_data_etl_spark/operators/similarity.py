@@ -1071,7 +1071,7 @@ def semdedup_prune(
     deliberately forgoes: that query pins K=32 centroids (first 32
     vec_ids) so a DuckDB oracle can mirror the centroid set exactly,
     which makes its pair stage N²/(2K) — quadratic at fixed K (measured:
-    scripts/scale_probe_r11.py). This operator is the production shape:
+    BASELINE.md "Round-11 scale probe"). This operator is the production shape:
 
     * **K scales with N** (``K = max(32, N // target_cell)``) so the
       expected cell size — and with it Σ n_c²/2 ≈ N·target_cell/2

@@ -1103,9 +1103,10 @@ def bfs_reachability_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # recursion replays paths, not nodes: total rows ≈ Σ degree-products,
     # which passes Spark's 1M-row recursion guard around ~5M input rows
-    # (measured, scale_probe_r08c). Raise it and LEAVE it set — the
-    # returned plan executes the recursion at collect time (lazy-plan
-    # rule: never unset a conf the returned plan still needs).
+    # (measured: BASELINE.md "Round-8 ops-analytics scale probe"). Raise
+    # it and LEAVE it set — the returned plan executes the recursion at
+    # collect time (lazy-plan rule: never unset a conf the returned plan
+    # still needs).
     spark.conf.set("spark.sql.cteRecursionRowLimit", str(50_000_000))
     li = load_table(spark, "lineitem", sf_dir)
     # r18 opt (VERDICT r17 #5, guide §2.3 narrower types): the recursion
@@ -1837,8 +1838,8 @@ def shortest_path_layered_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumed — bound the edge BUILD to those layers BEFORE the
     # localCheckpoint, not after (output-identical; without this the
     # checkpoint materializes |V|-sized edges of which a constant number
-    # is used — measured 4.9x at 5x nodes in scripts/scale_probe_r11.py,
-    # ~flat with the bound pushed into the scan).
+    # is used — measured 4.9x at 5x nodes, ~flat with the bound pushed
+    # into the scan: BASELINE.md "Round-11 scale probe").
     a = nation.select(F.col("n_nationkey").alias("a"), F.expr("n_nationkey div 5").alias("layer")).filter(
         F.col("layer") < 4
     )

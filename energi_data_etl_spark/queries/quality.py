@@ -236,7 +236,7 @@ def fuzzy_join_prefix_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shuffles: gram df groupBy, the df join-back + per-name window
     (partitioned by name — never a global sort), the prefix-posting
     equi-join, the pair groupBy. All bounded; measured 100k→1M names
-    in scripts/scale_probe_r08.py. Certified end-to-end vs the
+    (BASELINE.md "Round-8 retrieval-stack scale probe"). Certified end-to-end vs the
     identical algorithm in DuckDB."""
     names = load_table(spark, "part", sf_dir).select("p_name").distinct()
     idx = F.sequence(F.lit(1), F.length("p_name") - 1)

@@ -529,8 +529,8 @@ def hierarchy_rollup_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     final rollup; depth is data-bounded (digits of the key), not
     row-bounded."""
     # Recursion produces N·(digits+1) rows — past ~125k customers that
-    # crosses Spark's 1M-row recursion guard (hit at 1M customers in
-    # scripts/scale_probe_r11b.py). Raise it and LEAVE it set — the
+    # crosses Spark's 1M-row recursion guard (hit at 1M customers,
+    # BASELINE.md "Round-11b window-completion scale probe"). Raise it and LEAVE it set — the
     # returned plan executes the recursion at collect time (lazy-plan
     # rule: never unset a conf the returned plan still needs; same
     # pattern as bfs_reachability_levels).

@@ -173,6 +173,34 @@ def _day_chunked_stream(spark: SparkSession, ev: DataFrame, base: str, cache_key
     return _chunked_file_stream(spark, parts, base, cache_key=cache_key)
 
 
+def _events_split_key(sf_dir: str, split: str, *params) -> str:
+    """Replay-cache key for a deterministic split of the events fixture:
+    the split's name, EVERY parameter its filters use, and the fixture
+    fingerprint — so changing a split parameter can never serve the
+    chunks of the old split (ADVICE r18)."""
+    return f"{split}{params!r}:{fixture_fingerprint(sf_dir, 'events')}"
+
+
+#: micro-batches of the event_id pmod split (_event_id_mod_stream)
+_EVENT_ID_SPLITS = 3
+
+
+def _event_id_mod_stream(spark: SparkSession, ev: DataFrame, base: str, sf_dir: str):
+    """Replay ``ev`` as one file per ``event_id pmod _EVENT_ID_SPLITS``
+    class, one micro-batch each. The split is a pure function of the
+    immutable fixture, so it is published once through the replay cache
+    instead of re-writing the files per run; streaming_foreachbatch_upsert
+    and streaming_update_mode_totals project the same columns and so
+    share one publish."""
+    n = _EVENT_ID_SPLITS
+    return _chunked_file_stream(
+        spark,
+        [ev.filter(F.pmod("event_id", F.lit(n)) == i) for i in range(n)],
+        base,
+        cache_key=_events_split_key(sf_dir, "event_id_pmod", n),
+    )
+
+
 @query(
     "streaming_tumbling_daily",
     tier="T3 (tumbling 1-day window agg — the reference transform as a stream)",
@@ -631,17 +659,7 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
 
     base = scratch_dir("febatch_")
     ev = load_table(spark, "events", sf_dir).select("event_id", "event_type", "value")
-    # r18 opt: same deterministic pmod-3 split streaming_update_mode_
-    # totals drains — one shared replay-cache publish serves both (and
-    # this builder previously relied on move-order mtimes, which a
-    # coarse-mtime filesystem could tie and reorder; the shared builder
-    # stamps strictly-increasing mtimes explicitly, ADVICE r14).
-    stream = _chunked_file_stream(
-        spark,
-        [ev.filter(F.pmod("event_id", F.lit(3)) == i) for i in range(3)],
-        base,
-        cache_key=f"mod3ev:{fixture_fingerprint(sf_dir, 'events')}",
-    )
+    stream = _event_id_mod_stream(spark, ev, base, sf_dir)
 
     from ..streaming.ops import foreachbatch_merge_sink
 
@@ -1172,6 +1190,11 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: streaming_late_data_drop's batch boundaries (inclusive last days):
+#: early batch, middle batch, and the replayed late head of batch 3.
+_LATE_DROP_CUTS = ("2024-01-20", "2024-01-25", "2024-01-05")
+
+
 @query(
     "streaming_late_data_drop",
     tier="T2 (event-time watermark: late arrivals dropped past finalized windows)",
@@ -1214,10 +1237,12 @@ def streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = scratch_dir("late_drop_")
     ev = load_table(spark, "events", sf_dir).select("event_id", "ts", "event_type", "value")
-    early = ev.filter(F.to_date("ts") <= "2024-01-20")
-    middle = ev.filter(F.to_date("ts").between("2024-01-21", "2024-01-25"))
-    late_replay = ev.filter(F.to_date("ts") <= "2024-01-05")
-    tail = ev.filter(F.to_date("ts") >= "2024-01-26")
+    d = F.to_date("ts")
+    early_end, middle_end, replay_end = _LATE_DROP_CUTS
+    early = ev.filter(d <= early_end)
+    middle = ev.filter((d > early_end) & (d <= middle_end))
+    late_replay = ev.filter(d <= replay_end)
+    tail = ev.filter(d > middle_end)
 
     # r18 opt: the three chunks are a pure deterministic split+replay of
     # the immutable fixture — publish them once through the shared
@@ -1229,7 +1254,7 @@ def streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark,
             [early, middle, late_replay.unionByName(tail)],
             base,
-            cache_key=f"late3ev:{fixture_fingerprint(sf_dir, 'events')}",
+            cache_key=_events_split_key(sf_dir, "late_drop", *_LATE_DROP_CUTS),
         )
         .withColumn("ts", F.col("ts").cast("timestamp"))  # watermark needs TimestampType, not NTZ
         .withWatermark("ts", "0 seconds")
@@ -1270,16 +1295,7 @@ def streaming_update_mode_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = scratch_dir("updmode_")
     ev = load_table(spark, "events", sf_dir).select("event_id", "event_type", "value")
-    # r18 opt: deterministic pmod-3 split of the immutable fixture —
-    # published once via the shared replay cache (r16 recipe) instead of
-    # re-writing three coalesced files per run. The key is shared with
-    # streaming_foreachbatch_upsert, which drains the identical split.
-    stream = _chunked_file_stream(
-        spark,
-        [ev.filter(F.pmod("event_id", F.lit(3)) == i) for i in range(3)],
-        base,
-        cache_key=f"mod3ev:{fixture_fingerprint(sf_dir, 'events')}",
-    )
+    stream = _event_id_mod_stream(spark, ev, base, sf_dir)
     agg = stream.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total_value")
     )

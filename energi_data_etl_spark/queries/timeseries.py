@@ -692,8 +692,9 @@ def time_weighted_average_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROUND(4). Scale: ONE shuffle to (type, day)-partitioned windows —
     parallelism grows with the calendar, never capped at |types| (a
     type-only window measured 4.8× at 5× events: five sort tasks, no
-    headroom; this shape measured ~1× — scale_probe_r08b) — then the
-    rollup reuses the same keys, so Spark elides the second exchange."""
+    headroom; this shape measured 2.7× — BASELINE.md "Round-8 event-tier
+    scale probe") — then the rollup reuses the same keys, so Spark
+    elides the second exchange."""
     ev = load_table(spark, "events", sf_dir).select(
         "event_type",
         "event_id",

@@ -5,20 +5,18 @@ must self-apply them), runs entry() at sf0.001, then every declared
 query at sf0.01 against its DuckDB oracle with the same canonicalization
 the driver uses. Exit code 1 on any mismatch.
 
-Usage: python scripts/driver_sim.py [sf_dir]
+Usage: python scripts/driver_sim.py [sf_dir] [--queries=NAME,NAME]
 """
 
 from __future__ import annotations
 
 import sys
 
-import duckdb
 from pyspark.sql import SparkSession
 
 sys.path.insert(0, ".")
 import __spark_entry__ as entry_mod  # noqa: E402
-from energi_data_etl_spark.plans.parity import compare_frames  # noqa: E402
-from energi_data_etl_spark.sources.tables import TABLES  # noqa: E402
+from energi_data_etl_spark.plans.parity import compare_frames, duckdb_connect  # noqa: E402
 
 
 def main() -> int:
@@ -40,6 +38,13 @@ def main() -> int:
             print(f"unrecognized argument: {a} (did you mean --queries=a,b?)")
             return 2
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
+    qs, osql = entry_mod.queries(), entry_mod.oracle_sql()
+    if only is not None:
+        unknown = only - set(qs)
+        if unknown:
+            print(f"unknown queries: {sorted(unknown)}")
+            return 2
+        qs = {n: f for n, f in qs.items() if n in only}
     spark = (
         SparkSession.builder.master("local[8]")
         .appName("driver-sim")
@@ -50,17 +55,7 @@ def main() -> int:
     print(f"entry rows: {n}")
     assert n > 0
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
-
-    qs, osql = entry_mod.queries(), entry_mod.oracle_sql()
-    if only is not None:
-        unknown = only - set(qs)
-        if unknown:
-            print(f"unknown queries: {sorted(unknown)}")
-            return 2
-        qs = {n: f for n, f in qs.items() if n in only}
+    con = duckdb_connect(sf_dir)
     fails = 0
     for name, fn in qs.items():
         try:

@@ -11,11 +11,12 @@ plus a one-line-per-query summary of anti-pattern signals:
   - scans whose PushedFilters is empty while a Filter sits above
     (guide §6 — pushdown)
 
-Usage: python scripts/plan_audit.py [--sf DIR] [--out plans/r17/audit]
+Usage: python scripts/plan_audit.py --out DIR   (fixture: $SPARK_GRAFT_SF_DIR)
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import re
 import sys
@@ -24,28 +25,25 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 
 
 def main() -> int:
-    args = sys.argv[1:]
-    sf_dir = "/root/testdata/sf0.1"
-    out_dir = os.path.join("plans", "r17", "audit")
-    if "--sf" in args:
-        sf_dir = args[args.index("--sf") + 1]
-    if "--out" in args:
-        out_dir = args[args.index("--out") + 1]
+    ap = argparse.ArgumentParser(description="Dump and summarize every declared query's physical plan.")
+    ap.add_argument("--out", required=True, metavar="DIR", help="directory for the plan dumps")
+    out_dir = ap.parse_args().out
     os.makedirs(out_dir, exist_ok=True)
 
     os.environ.setdefault("SPARK_GRAFT_DRAIN_PARTITIONS", "4")
+    from energi_data_etl_spark.plans.inspect import explain_str
     from energi_data_etl_spark.queries import QUERIES
     from energi_data_etl_spark.session import get_spark
+    from energi_data_etl_spark.sources.tables import default_sf_dir
 
-    spark = get_spark("plan-audit-r17")
+    sf_dir = default_sf_dir()
+    spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
 
     rows = []
     for name, q in QUERIES.items():
         try:
-            df = q.fn(spark, sf_dir)
-            txt = df._jdf.queryExecution().explainString(mode)
+            txt = explain_str(q.fn(spark, sf_dir))
         except Exception as exc:  # noqa: BLE001
             rows.append(f"{name}\tERROR\t{exc}")
             continue

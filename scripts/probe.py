@@ -1,15 +1,13 @@
-"""Parameterized scale-probe harness (VERDICT r11 item 8): the common
-machinery of the twelve scale_probe_r0*.py one-offs — full-shape
+"""Parameterized scale-probe harness (VERDICT r11 item 8): full-shape
 synthetic table generation at two sizes, warm-then-min-of-2 timing, and
-a ratio JSON line — folded into ONE module, so a new probe is a CLI
-invocation, not a new file:
+a ratio JSON line, so a new probe is a CLI invocation, not a new file:
 
     python scripts/probe.py --queries feature_equidepth_bins_sketch,streaming_ohlc_candles_append
     python scripts/probe.py --queries semdedup_prune_scaled --small 1000000 --big 5000000
 
-The historical scale_probe_r0*.py scripts stay in scripts/ as the
-provenance of BASELINE.md's recorded ratios (docstrings cite them by
-name); new ratios should be produced here.
+It replaced the per-round scale-probe one-offs; BASELINE.md keeps their
+recorded ratios, and each section names its one-off as
+<commit>:scripts/<file>.py for `git show`.
 
 Generator notes (lessons already paid for):
 * events.ts is written as ns-LONGS — the fixture's on-disk form: the

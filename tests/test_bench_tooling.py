@@ -1,21 +1,19 @@
-"""Pins scripts/bench_medians.py's run-file parsing (ADVICE r12): the
-aggregate line is selected by MARKER, never position, so a truncated
-tail or stray non-dict JSON line can't silently misattribute totals.
-No Spark session — pure file parsing."""
+"""Pins bench.py's tooling that runs without Spark: run-file parsing
+for --aggregate (ADVICE r12: the aggregate line is selected by MARKER,
+never position, so a truncated tail or stray non-dict JSON line can't
+silently misattribute totals), the reference-medians lookup, and
+isolated mode's up-front name check."""
 
 from __future__ import annotations
 
-import importlib.util
 import json
 import sys
 from pathlib import Path
 
-_spec = importlib.util.spec_from_file_location(
-    "bench_medians", Path(__file__).resolve().parents[1] / "scripts" / "bench_medians.py"
-)
-bench_medians = importlib.util.module_from_spec(_spec)
-sys.modules["bench_medians"] = bench_medians
-_spec.loader.exec_module(bench_medians)
+import pytest
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+import bench  # noqa: E402
 
 DETAIL = {"metric": "declared_query_detail", "queries": {"q1": 1.5, "q2": 0.5}}
 AGG = {"metric": "declared_query_suite_total", "value": 2.0, "sf": 0.1}
@@ -28,14 +26,14 @@ def _write(tmp_path, lines, name="run.json"):
 
 
 def test_two_line_format(tmp_path):
-    run = bench_medians._load_run(_write(tmp_path, [json.dumps(DETAIL), json.dumps(AGG)]))
+    run = bench._load_run(_write(tmp_path, [json.dumps(DETAIL), json.dumps(AGG)]))
     assert run["queries"] == DETAIL["queries"] and run["value"] == 2.0 and run["sf"] == 0.1
 
 
 def test_truncated_aggregate_line_keeps_detail(tmp_path, capsys):
     """A tail-truncated aggregate must NOT make the detail line the
     aggregate: queries stay full, totals become None with a warning."""
-    run = bench_medians._load_run(
+    run = bench._load_run(
         _write(tmp_path, [json.dumps(DETAIL), json.dumps(AGG)[:20]])
     )
     assert run["queries"] == DETAIL["queries"]
@@ -45,7 +43,7 @@ def test_truncated_aggregate_line_keeps_detail(tmp_path, capsys):
 
 def test_non_dict_json_lines_skipped(tmp_path):
     """A parseable bare JSON number/string must not raise on .get."""
-    run = bench_medians._load_run(
+    run = bench._load_run(
         _write(tmp_path, ["42", '"noise"', json.dumps(DETAIL), json.dumps(AGG)])
     )
     assert run["queries"] == DETAIL["queries"] and run["value"] == 2.0
@@ -53,12 +51,75 @@ def test_non_dict_json_lines_skipped(tmp_path):
 
 def test_legacy_single_line_format(tmp_path):
     legacy = {"metric": "x", "value": 3.0, "queries": {"q1": 3.0}, "sf": 0.1}
-    run = bench_medians._load_run(_write(tmp_path, [json.dumps(legacy)]))
+    run = bench._load_run(_write(tmp_path, [json.dumps(legacy)]))
     assert run == legacy
 
 
 def test_no_parseable_object_raises(tmp_path):
-    import pytest
-
     with pytest.raises(ValueError):
-        bench_medians._load_run(_write(tmp_path, ["not json", "[1, 2]"[:4]]))
+        bench._load_run(_write(tmp_path, ["not json", "[1, 2]"[:4]]))
+
+
+@pytest.mark.parametrize(
+    "files, sf, expected",
+    [
+        # newest round wins, compared as a number, not as text
+        ({"BENCH_MEDIANS_r9.json": 0.1, "BENCH_MEDIANS_r12.json": 0.1}, 0.1, "BENCH_MEDIANS_r12.json"),
+        # the 'opt' suffix sorts as its round number
+        ({"BENCH_MEDIANS_r9.json": 0.1, "BENCH_MEDIANS_r17opt.json": 0.1}, 0.1, "BENCH_MEDIANS_r17opt.json"),
+        ({"BENCH_MEDIANS_r17opt.json": 0.1, "BENCH_MEDIANS_r18.json": 0.1}, 0.1, "BENCH_MEDIANS_r18.json"),
+        # a newer file at another scale factor is ignored
+        ({"BENCH_MEDIANS_r5.json": 0.1, "BENCH_MEDIANS_r18.json": 0.01}, 0.1, "BENCH_MEDIANS_r5.json"),
+        ({"BENCH_MEDIANS_r5.json": 0.1}, 1.0, None),
+    ],
+)
+def test_reference_medians_lookup(tmp_path, files, sf, expected):
+    for name, file_sf in files.items():
+        (tmp_path / name).write_text(json.dumps({"sf": file_sf, "medians": {"from": name}}))
+    found = bench._reference_medians(sf, root=str(tmp_path))
+    if expected is None:
+        assert found is None
+    else:
+        assert found == (expected, {"from": expected})
+
+
+def test_isolated_mode_rejects_unknown_query_before_spark(monkeypatch, capsys):
+    """Like driver_sim --queries=, a typo'd name must fail fast instead of
+    paying a session start and the warm-up first."""
+    import energi_data_etl_spark.session as session
+
+    def no_spark(*a, **kw):
+        raise AssertionError("Spark session started before the name check")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    assert bench.main(["flagship_daily_avg", "no_such_query"]) != 0
+    assert "no_such_query" in capsys.readouterr().err
+
+
+def test_script_references_resolve():
+    """Every repo-relative scripts/<file>.py named in code or the living
+    docs exists, so deleting a script can't leave a dangling pointer. A
+    '<commit>:scripts/...' reference names a file in history (reach it
+    with git show) and is exempt; so is the reference's own batch script.
+    Historical round records (SURVEY.md, VERDICT.md, OPTIMIZATION_r*.md)
+    are out of scope."""
+    import re
+
+    root = Path(__file__).resolve().parents[1]
+    reference_scripts = {"energy_etl.py"}  # the source paper's script, not part of this repo
+    files = [
+        *(root / "energi_data_etl_spark").rglob("*.py"),
+        *(root / "tests").rglob("*.py"),
+        *(root / "scripts").glob("*.py"),
+        *(root / name for name in ("bench.py", "README.md", "CLAUDE.md", "BASELINE.md")),
+    ]
+    dangling = []
+    for path in files:
+        text = path.read_text()
+        for m in re.finditer(r"scripts/(\w+\.py)", text):
+            before = text[max(0, m.start() - 41) : m.start()]
+            if re.search(r"(\b[0-9a-f]{7,40}:|[\w/])$", before) or m.group(1) in reference_scripts:
+                continue
+            if not (root / "scripts" / m.group(1)).is_file():
+                dangling.append(f"{path.relative_to(root)}: {m.group(0)}")
+    assert not dangling, dangling

@@ -946,3 +946,68 @@ def test_heavy_hitters_verdicts_and_exactness(spark, sf_dir):
         assert r["guarantee_ok"] and r["overcount_ok"], r
         assert r["n_candidates"] == 8, r
         assert r["top1_n"] > r["n_events"] / 8, r
+
+
+def test_split_replay_cache_keys_track_split_parameters(monkeypatch, tmp_path):
+    """ADVICE r18 #1/#2, no Spark: replay-cache keys are built from the
+    same parameters the split filters use, so changing a split parameter
+    moves the cache path, while the two queries that drain the identical
+    event_id pmod-3 split still share one published cache. The queries
+    run against a fake frame (hand-built StructType) up to the point
+    where they hand their chunks to the cache builder."""
+    from types import SimpleNamespace
+
+    from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
+
+    import energi_data_etl_spark.queries.streaming as st
+    import energi_data_etl_spark.sources.tables as tables
+
+    events = StructType(
+        [
+            StructField("event_id", LongType()),
+            StructField("event_type", StringType()),
+            StructField("value", DoubleType()),
+        ]
+    )
+
+    class FakeFrame:
+        def __init__(self, schema):
+            self.schema = schema
+
+        def select(self, *cols):
+            return FakeFrame(StructType([events[c] for c in cols]))
+
+        def filter(self, cond):
+            return self
+
+    class Published(Exception):
+        pass
+
+    seen = []
+
+    def fake_publish(spark, parts, base, cache_key=None):
+        seen.append((len(parts), st._resolved_cache_path(cache_key, parts[0].schema)))
+        raise Published
+
+    monkeypatch.setenv("SPARK_GRAFT_CACHE_DIR", str(tmp_path))
+    monkeypatch.setattr(tables, "load_table", lambda spark, name, sf_dir: FakeFrame(events))
+    monkeypatch.setattr(st, "F", SimpleNamespace(pmod=lambda c, n: 0, lit=lambda v: v))
+    monkeypatch.setattr(st, "_chunked_file_stream", fake_publish)
+
+    def drain(name):
+        try:
+            getattr(st, name)(None, str(tmp_path))
+        except Published:
+            return seen[-1]
+        raise AssertionError(f"{name} never published its replay chunks")
+
+    upsert = drain("streaming_foreachbatch_upsert")
+    update = drain("streaming_update_mode_totals")
+    assert upsert == update and upsert[0] == 3
+    monkeypatch.setattr(st, "_EVENT_ID_SPLITS", 4)
+    n4, path4 = drain("streaming_update_mode_totals")
+    assert n4 == 4 and path4 != update[1]
+
+    key = st._events_split_key(str(tmp_path), "late_drop", *st._LATE_DROP_CUTS)
+    moved = st._events_split_key(str(tmp_path), "late_drop", "2024-01-19", *st._LATE_DROP_CUTS[1:])
+    assert st._resolved_cache_path(key, events) != st._resolved_cache_path(moved, events)
