@@ -12,9 +12,14 @@ don't grow with iterations (the classic iterative-Spark trap).
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 
 __all__ = ["connected_components", "pagerank"]
+
+
+def _div(a, b):
+    """BIGINT floor division (`a div b`; DuckDB `//` for non-negatives)."""
+    return F.call_function("div", a, b)
 
 
 def connected_components(pairs: DataFrame, a: str = "a", b: str = "b", max_iter: int = 20) -> DataFrame:
@@ -72,115 +77,118 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 5,
     damping: float = 0.85,
-    handle_dangling: bool = True,
-    assume_distinct: bool = False,
+    scale: int | None = None,
 ) -> DataFrame:
     """Fixed-iteration power-method PageRank over a directed edge list.
 
-    Returns (id, rank). Pure DataFrame ops: per iteration one shuffle for
-    the contribution aggregation (the edges⋈ranks join co-partitions on
-    the source id), scalar dangling mass attached via a broadcast
-    single-row crossJoin — no `.collect()` of node state, so rank frames
-    never touch the driver and the operator scales with the cluster.
-    Fixed iteration count (the batch-analytics norm) keeps the job DAG
-    static. Checkpointing is LAZY by default (the whole k-round chain
+    Precondition: the edges are DISTINCT (a duplicate would count its
+    contribution twice). Returns (id, rank). Pure DataFrame ops: per
+    iteration one shuffle for the contribution aggregation (the
+    edges⋈ranks join co-partitions on the source id); rank frames never
+    touch the driver, only two setup scalars do (N and the dangling-node
+    count). Fixed iteration count (the batch-analytics norm) keeps the
+    job DAG static. Checkpointing is LAZY (the whole k-round chain
     compiles once and materializes in one action — measured 4x cheaper
     than a job per round at sf0.1), with an EAGER localCheckpoint every
     4 rounds to truncate lineage so long chains never nest more than 4
-    joins deep (compile-time blowup trap).
+    joins deep (compile-time blowup trap), and on the final round.
 
-    Dangling nodes (no out-edges) donate their mass uniformly; ranks sum
-    to 1 every iteration (pinned in tests/test_graph_ops.py vs an exact
-    numpy power iteration). Callers that construct the graph undirected
-    (every node appears as a src) can pass handle_dangling=False to skip
-    the per-iteration dangling-mass branch (a semi-join + scalar agg
-    saved per round).
+    Dangling nodes (no out-edges) donate their mass uniformly. The rank
+    frame carries each node's dangling flag, and the dangling term is
+    added only when the graph has such nodes, so an undirected-by-
+    construction graph (every node is a src) skips the per-iteration
+    scalar agg.
+
+    Arithmetic: `scale=None` gives float ranks summing to 1 (pinned in
+    tests/test_graph_ops.py vs an exact numpy power iteration). An
+    integer `scale` gives FIXED-POINT BIGINT ranks of total mass S =
+    `scale`, every step floor-divided (Spark `div` == DuckDB `//`), so
+    the result is engine-exact and hash-certifiable:
+
+        r0 = S div N,   base = ((100 - p)·r0) div 100,   p = 100·damping
+        r'(v) = base + (p·(Σ_{u→v} r(u) div outdeg(u) + DG div N)) div 100
+
+    with DG the dangling mass. The floors only lose mass: per step less
+    than |E| (one `div outdeg` per edge) + 3N, after S mod N < N at r0.
 
     The 100 TB invariant: the EDGE LIST is shuffled exactly once, at
-    setup. 1/outdeg is pre-attached as a per-edge weight and the
-    weighted list hash-partitioned on src before persisting, so every
-    iteration's contribs join shuffles only the rank frame (|V| rows,
-    ≪ |E|) to meet it in place; dangling nodes are a static set
-    computed once (anti-join), not rediscovered via a per-iteration
-    outdeg join.
+    setup: hash-partitioned and sorted on src, outdeg attached, then
+    persisted, so every iteration's contribs join shuffles only the rank
+    frame (|V| rows, ≪ |E|) to meet it in place; the dangling flag is
+    computed once with the node set. Every setup cache is released
+    before return.
     """
     sc_parallelism = edges.sparkSession.sparkContext.defaultParallelism
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if not assume_distinct:
-        # duplicate edges would double-count contributions; callers whose
-        # edge build already dedups can skip this full-edge shuffle
-        e = e.distinct()
-    # e feeds THREE setup frames (ew, nodes, dangling anti-join) — persist
-    # or the upstream edge build (+ the distinct) recomputes per consumer
-    e = e.persist()
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # per-edge contribution weight, partitioned on the join key ONCE
+    # the edge list's one shuffle: partitioned and sorted on src, with
+    # outdeg counted in place by a window over that same layout (no
+    # aggregate + join). Cached SORTED on the join key, so each
+    # iteration's sort-merge join takes its ordering from the cache
+    # instead of re-sorting |E| rows (persist keeps the partitioning and
+    # ordering; a checkpoint scan reports neither)
     ew = (
-        e.join(outdeg, "src")
-        .select("src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w"))
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .repartition(sc_parallelism, "src")
-        # cache SORTED on the join key: the per-iteration sort-merge join
-        # then satisfies its ordering requirement from the cached layout
-        # instead of re-sorting |E| rows every round (r17 opt, guide §2.4 —
-        # "two operations keyed the same way share one exchange"; the sort
-        # is likewise paid once)
         .sortWithinPartitions("src")
+        .withColumn("outdeg", F.count(F.lit(1)).over(Window.partitionBy("src")))
         .persist()
     )
+    # one pass over both endpoint columns: a node is dangling iff it is
+    # never a src. Built from ew, so the setup aggregate below also
+    # materializes the edge cache; the first contribs join then takes its
+    # layout instead of re-exchanging a not-yet-built cache
     nodes = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
+        ew.select(F.col("src").alias("id"), F.lit(False).alias("dangling"))
+        .union(ew.select(F.col("dst").alias("id"), F.lit(True).alias("dangling")))
+        .groupBy("id")
+        .agg(F.min("dangling").alias("dangling"))
         .persist()
     )
-    n_frame = F.broadcast(nodes.agg(F.count(F.lit(1)).cast("double").alias("__n")))
-    if handle_dangling:
-        dangling_ids = nodes.join(
-            outdeg.select(F.col("src").alias("id")), "id", "left_anti"
-        ).persist()
+    try:
+        n, n_dangling = nodes.agg(F.count(F.lit(1)), F.count_if("dangling")).first()
+        n = max(n, 1)  # empty graph: no rows to rank, but keep the divisor nonzero
 
-    ranks = (
-        nodes.crossJoin(n_frame)
-        .select("id", (F.lit(1.0) / F.col("__n")).alias("rank"))
-        .localCheckpoint()
-    )
-    for it in range(iterations):
-        contribs = (
-            ew.join(ranks.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("rank") * F.col("w")).alias("contrib"))
-        )
-        nxt = nodes.join(contribs, "id", "left").crossJoin(n_frame)
-        dm = F.lit(0.0)
-        if handle_dangling:
-            # dangling mass: total rank parked on nodes with no out-edges
-            nxt = nxt.crossJoin(
-                F.broadcast(
-                    ranks.join(dangling_ids, "id", "left_semi").agg(
-                        F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm")
-                    )
+        # the arithmetic mode lives in these expressions only
+        if scale is None:
+            zero, init = F.lit(0.0), F.lit(1.0 / n)
+            share = F.col("rank") * (F.lit(1.0) / F.col("outdeg"))
+
+            def step(inc, dm):
+                return (1.0 - damping) / n + damping * (inc + dm / n)
+
+        else:
+            pct = round(damping * 100)
+            base = ((100 - pct) * (scale // n)) // 100
+            zero, init = F.lit(0).cast("long"), F.lit(scale // n).cast("long")
+            share = _div(F.col("rank"), F.col("outdeg"))
+
+            def step(inc, dm):
+                return F.lit(base) + _div(pct * (inc + _div(dm, F.lit(n))), F.lit(100))
+
+        # not checkpointed: the first round's ranks keep the node cache's
+        # hash partitioning on id, so they can meet the edge cache unshuffled
+        ranks = nodes.select("id", init.alias("rank"), "dangling")
+        for it in range(iterations):
+            contribs = (
+                ew.join(ranks.withColumnRenamed("id", "src"), "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.sum(share).alias("contrib"))
+            )
+            nxt = nodes.join(contribs, "id", "left")
+            dm = zero
+            if n_dangling:
+                # dangling mass: total rank parked on nodes with no out-edges
+                nxt = nxt.crossJoin(
+                    F.broadcast(ranks.filter("dangling").agg(F.coalesce(F.sum("rank"), zero).alias("__dm")))
                 )
+                dm = F.col("__dm")
+            ranks = (
+                nxt.select("id", step(F.coalesce("contrib", zero), dm).alias("rank"), "dangling")
+                # final round is ALWAYS eager: the setup caches are
+                # unpersisted on return, so the returned frame must be
+                # materialized while they still serve the per-iteration joins
+                .localCheckpoint(eager=((it + 1) % 4 == 0 or it == iterations - 1))
             )
-            dm = F.col("__dm")
-        ranks = (
-            nxt.select(
-                "id",
-                (
-                    (1.0 - damping) / F.col("__n")
-                    + damping * (F.coalesce("contrib", F.lit(0.0)) + dm / F.col("__n"))
-                ).alias("rank"),
-            )
-            # final round is ALWAYS eager: the setup caches (e/ew/nodes/
-            # dangling_ids) are unpersisted right below, so the returned
-            # frame must be materialized while they still serve the
-            # per-iteration joins — otherwise (iterations < 4) no eager
-            # round ever fires and the persists are dead weight
-            # recomputed at the caller's first action (ADVICE r06)
-            .localCheckpoint(eager=((it + 1) % 4 == 0 or it == iterations - 1))
-        )
-    e.unpersist()
-    ew.unpersist()
-    nodes.unpersist()
-    if handle_dangling:
-        dangling_ids.unpersist()
-    return ranks
+        return ranks.select("id", "rank")
+    finally:
+        ew.unpersist()
+        nodes.unpersist()

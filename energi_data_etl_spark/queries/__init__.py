@@ -136,8 +136,9 @@ RECERT: dict[str, int] = {
     # query's PLAN is rewritten after its last green row.
     # r18 optimization-round plan rewrites (value-identical, verified vs
     # oracle in-session; queued so the next driver window re-certifies):
-    # - pagerank_integer_twin: edw localCheckpoint -> persist (layout
-    #   survives into the iteration joins)
+    # - pagerank_integer_twin: now a thin caller of the operator's
+    #   fixed-point mode (graph.pagerank(scale=...)); the plan changed
+    #   again after the r18 edge-cache persist, so the entry stays
     # - basket trio + copurchase pair (graph_*): pair expansion now the
     #   shared sorted_pair_structs helper (embeds the size>=2 guard;
     #   also covers ADVICE r17 #1's ask to re-confirm the r17

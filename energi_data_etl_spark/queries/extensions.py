@@ -181,11 +181,10 @@ def pagerank_supplier_part(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("e")
     ).select("e.src", "e.dst")
-    # undirected-by-construction: every node appears as a src, so no
-    # dangling-mass branch is needed; supply is already distinct and the
-    # two directions cannot collide (even vs odd ids), so the operator's
-    # edge-dedup shuffle is skipped too
-    ranks = pagerank(edges, iterations=3, damping=0.85, handle_dangling=False, assume_distinct=True)
+    # distinct, as the operator requires: supply is distinct and the two
+    # directions cannot collide (even vs odd ids). Every node is a src,
+    # so the operator finds no dangling nodes and skips that term.
+    ranks = pagerank(edges, iterations=3, damping=0.85)
     return (
         ranks.select(
             F.when(F.col("id") % 2 == 0, F.lit("supplier")).otherwise(F.lit("part")).alias("node_kind"),

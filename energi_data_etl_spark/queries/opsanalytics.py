@@ -59,6 +59,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..operators.arrays import sorted_pair_structs
+from ..operators.graph import pagerank
 from ..session import scratch_dir
 from ..sources.tables import load_table
 from .catalog import query
@@ -1407,110 +1408,33 @@ def _pr_oracle() -> str:
     oracle=_pr_oracle(),
 )
 def pagerank_integer_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The correctness TWIN of the rows-only float PageRank
-    (operators/graph.py:64-181, `pagerank_supplier_part`): the same
-    damping / dangling-redistribution / contribution algebra in
-    FIXED-POINT INTEGER arithmetic, so every step is engine-exact and
-    the driver can hash-certify the whole ranking — the simhash-md5
-    precedent applied to the last rows-only family. Rule per
-    iteration, all BIGINT with floor division (Spark `div` == DuckDB
-    `//`):
+    """The fixed-point mode of the production PageRank operator
+    (`operators/graph.py::pagerank` with `scale`), over the supplier ->
+    part graph that `pagerank_supplier_part` ranks in float. The same
+    damping / dangling-redistribution / contribution algebra runs in
+    BIGINT with floor division, so every step is engine-exact and the
+    driver can hash-certify the whole ranking — the oracle certifies
+    the code path the float query runs. Rule per iteration:
 
         r'(v) = (15·(S div N)) div 100
               + (85·(Σ_{u→v} r(u) div outdeg(u) + DG div N)) div 100
 
     with S = 10^12 total mass and DG the dangling (part-side) mass.
     Three unrolled iterations — standard SQL forbids aggregation in a
-    recursive term, so the oracle chains CTEs, which is also exactly
-    what the Spark loop builds. Emits the top-20 (rank, node)
-    deterministically tie-broken.
+    recursive term, so the oracle chains CTEs. Emits the top-20
+    (rank, node) deterministically tie-broken.
 
-    The float operator stays the production path (pre-attached edge
-    weights, one edge shuffle, checkpointed iterations — its 100 TB
-    design); this twin certifies the ALGORITHM, accepting the
-    quantization (≤ N floor-losses per step of 1 micro-unit each,
-    total mass drift < N·iters ≪ S).
-
-    100 TB: same join/agg shapes as the float path; the per-iteration
-    frames are |V| rows, edges shuffled once into `ed`.
+    Node encoding is integer (supplier s -> 2s, part p -> 2p+1,
+    injective) so join keys are bigints; the "S123"/"P456" ids are
+    rebuilt only for the final 20-row projection, which keeps the
+    (rank DESC, node) tie-break order of the oracle.
     """
     li = load_table(spark, "lineitem", sf_dir)
-    # r17 opt (guide §2.3/§2.4): the iterations used to join on "S123"/
-    # "P456" STRING ids and re-join the raw edge list every round (an |E|
-    # shuffle per iteration). Now: integer node encoding (2s / 2p+1 —
-    # injective, the float twin's scheme) so join keys are bigints, outdeg
-    # pre-attached to the edges ONCE and the weighted edge frame
-    # hash-partitioned+sorted on the join key ONCE — each iteration
-    # shuffles only the |V|-row rank frame. The rank algebra is untouched
-    # (per-edge `rank div outdeg` is computed from the same integers, and
-    # integer sums are order-independent), so every rank_fp is identical;
-    # the string ids are rebuilt only for the final 20-row projection,
-    # which also keeps the (rank DESC, node) tie-break order identical.
-    sc_parallelism = spark.sparkContext.defaultParallelism
-    ed = (
-        li.select(
-            (F.col("l_suppkey") * 2).alias("a"),
-            (F.col("l_partkey") * 2 + 1).alias("b"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)  # feeds nodes, deg, and the edge-weight build
-    )
-    nodes = (
-        ed.select(F.col("a").alias("id"))
-        .union(ed.select("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = ed.groupBy(F.col("a").alias("id")).agg(F.count(F.lit(1)).alias("outdeg")).localCheckpoint(
-        eager=False
-    )
-    edw = (
-        ed.join(deg.withColumnRenamed("id", "a"), "a")
-        .select("a", "b", "outdeg")
-        .repartition(sc_parallelism, "a")
-        .sortWithinPartitions("a")
-        # r18 fix (VERDICT r17 #1): persist(), NOT localCheckpoint — a
-        # checkpointed scan reports UnknownPartitioning and no ordering,
-        # so every iteration re-exchanged AND re-sorted the |E|-row frame
-        # (the r17 after-plan showed Exchange+Sort above both join sides
-        # and the sortWithinPartitions above was dead work). persist
-        # PRESERVES the hash partitioning and the sort (graph.py:129,
-        # the float operator's proven pattern), so each iteration's
-        # sort-merge join exchanges+sorts only the |V|-row rank frame.
-        # Deliberately NOT unpersisted: the returned plan consumes the
-        # cache lazily at the driver's collect, and keeping the return
-        # lazy leaves the iteration joins visible to plan audits (one
-        # ~|E|-row cache entry per invocation — a documented exception
-        # to the r07 checkpoint-hygiene rule).
-        .persist()  # feeds every iteration's contrib join
-    )
-    n = nodes.count()  # bounded driver scalar: |distinct nodes|
-    init = _PR_SCALE // n
-    base = (15 * init) // 100
-    ranks = nodes.select("id", F.lit(init).cast("long").alias("rank"))
-    for _ in range(_PR_ITERS):
-        ranks = ranks.localCheckpoint(eager=False)  # consumed by dangling agg + contrib join
-        dg_frame = F.broadcast(
-            ranks.join(deg, "id", "left_anti").agg(
-                F.coalesce(F.sum("rank"), F.lit(0)).cast("long").alias("dg")
-            )
-        )
-        contribs = (
-            edw.join(ranks.withColumnRenamed("id", "a"), "a")
-            .groupBy(F.col("b").alias("id"))
-            .agg(F.sum(F.expr("rank div outdeg")).alias("inc"))
-        )
-        ranks = (
-            nodes.join(contribs, "id", "left")
-            .crossJoin(dg_frame)
-            .select(
-                "id",
-                (
-                    F.lit(base)
-                    + F.expr(f"(85 * (coalesce(inc, 0) + (dg div {n}))) div 100")
-                ).cast("long").alias("rank"),
-            )
-        )
+    ed = li.select(
+        (F.col("l_suppkey") * 2).alias("a"),
+        (F.col("l_partkey") * 2 + 1).alias("b"),
+    ).distinct()
+    ranks = pagerank(ed, src="a", dst="b", iterations=_PR_ITERS, scale=_PR_SCALE)
     node_str = F.concat(
         F.when(F.col("id") % 2 == 0, F.lit("S")).otherwise(F.lit("P")),
         F.expr("id div 2").cast("string"),
@@ -1820,8 +1744,9 @@ def shortest_path_layered_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-weighted edges between consecutive layers, source = node 0.
     The Spark side is the PRODUCTION pattern — iterative frontier
     relaxation, one broadcast-join + min-groupBy per layer (exactly
-    Bellman-Ford restricted to the DAG's topological order, the same
-    loop skeleton as connected_components/BFS) — while the DuckDB
+    Bellman-Ford restricted to the DAG's topological order; a fixed
+    layer count, not connected_components' run-to-convergence loop,
+    and bfs_reachability_levels is a WITH RECURSIVE CTE) — while the DuckDB
     oracle RECURSIVELY ENUMERATES every source path (5^4 = 625 on this
     fixture) and takes the definitional MIN per node, so the hash gate
     proves relaxation == min-over-all-paths, not twin agreement. All

@@ -3,9 +3,12 @@ SQL-oracle query can't exercise (chains, multi-cluster merges)."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
+from collections import Counter, defaultdict
 
-from energi_data_etl_spark.operators.graph import connected_components
+import pyspark.sql.functions as F
+import pytest
+
+from energi_data_etl_spark.operators.graph import connected_components, pagerank
 from energi_data_etl_spark.operators.skew import salted_agg
 
 
@@ -47,6 +50,10 @@ def test_salted_agg_equals_direct_agg_under_skew(spark):
     assert got["hot"][0] == 9000
 
 
+# small directed graph WITH a dangling node (4 has no out-edges)
+_PR_EDGES = [(1, 2), (1, 3), (2, 3), (3, 1), (3, 4), (5, 1), (5, 4)]
+
+
 def test_pagerank_matches_numpy_power_iteration(spark):
     """Exact-method check: the distributed fixed-iteration PageRank must
     reproduce a dense numpy power iteration (same damping, same dangling
@@ -54,9 +61,7 @@ def test_pagerank_matches_numpy_power_iteration(spark):
     node (4 has no out-edges — its mass spreads uniformly)."""
     import numpy as np
 
-    from energi_data_etl_spark.operators.graph import pagerank
-
-    edge_list = [(1, 2), (1, 3), (2, 3), (3, 1), (3, 4), (5, 1), (5, 4)]
+    edge_list = _PR_EDGES
     pairs = spark.createDataFrame(edge_list, "src long, dst long")
     got = {r.id: r.rank for r in pagerank(pairs, iterations=8, damping=0.85).collect()}
 
@@ -81,16 +86,51 @@ def test_pagerank_matches_numpy_power_iteration(spark):
     assert abs(sum(got.values()) - 1.0) < 1e-9  # mass conservation
 
 
+def test_pagerank_fixed_point_matches_floor_division_power_iteration(spark):
+    """Exact-method check of the fixed-point mode: on the same graph the
+    BIGINT ranks must EQUAL a pure-Python power iteration with floor
+    division at every step (the algebra the integer-twin oracle
+    certifies only through its top-20)."""
+    scale = 10**12
+    pairs = spark.createDataFrame(_PR_EDGES, "src long, dst long")
+    got = {r.id: r.rank for r in pagerank(pairs, iterations=8, damping=0.85, scale=scale).collect()}
+
+    ids = sorted({n for e in _PR_EDGES for n in e})
+    n = len(ids)
+    outdeg = Counter(s for s, _ in _PR_EDGES)
+    base = (15 * (scale // n)) // 100
+    r = {v: scale // n for v in ids}
+    for _ in range(8):
+        dg = sum(r[v] for v in ids if v not in outdeg)
+        inc: dict[int, int] = defaultdict(int)
+        for s, d in _PR_EDGES:
+            inc[d] += r[s] // outdeg[s]
+        r = {v: base + (85 * (inc[v] + dg // n)) // 100 for v in ids}
+
+    assert got == r
+
+
+@pytest.mark.parametrize("case", ["float", "fixed", "twin"])
+def test_pagerank_releases_every_cache(spark, sf_dir, case):
+    """No cache entry outlives the call: once the result is collected,
+    the session's CacheManager holds nothing the call added — for both
+    arithmetic modes and for the integer-twin query built on them."""
+    from energi_data_etl_spark.queries.opsanalytics import pagerank_integer_twin
+
+    spark.catalog.clearCache()
+    if case == "twin":
+        df = pagerank_integer_twin(spark, sf_dir)
+    else:
+        pairs = spark.createDataFrame(_PR_EDGES, "src long, dst long")
+        df = pagerank(pairs, iterations=2, scale=None if case == "float" else 10**12)
+    df.collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_pagerank_uniform_on_symmetric_cycle(spark):
     """On a symmetric cycle every node must end exactly uniform — any
     asymmetry in the contribution join would break this immediately."""
     edge_list = [(i, (i + 1) % 6) for i in range(6)]
     pairs = spark.createDataFrame(edge_list, "src long, dst long")
-    got = [r.rank for r in pagerank_import(pairs, iterations=4).collect()]
+    got = [r.rank for r in pagerank(pairs, iterations=4).collect()]
     assert all(abs(x - 1.0 / 6) < 1e-12 for x in got)
-
-
-def pagerank_import(pairs, iterations):
-    from energi_data_etl_spark.operators.graph import pagerank
-
-    return pagerank(pairs, iterations=iterations)

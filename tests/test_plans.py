@@ -5,6 +5,7 @@ dimension join not broadcast, projection not pruned."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from energi_data_etl_spark.plans.inspect import (
     assert_broadcast_join,
@@ -708,15 +709,21 @@ def test_q21_single_lineitem_scan_no_self_join(spark, sf_dir):
     assert plan.count("lineitem.parquet") == 1, plan.count("lineitem.parquet")
 
 
-def test_pagerank_edge_cache_is_sorted_on_join_key(spark, monkeypatch):
-    """r17 optimization guard: pagerank's cached weighted edge frame
-    must be repartitioned AND sorted within partitions on src, so
-    per-iteration sort-merge joins take their ordering from the cache
-    instead of re-sorting |E| rows every round. The query-level plans
-    hide the operator's subtree behind checkpoints, so this intercepts
-    persist() during a real pagerank() call and inspects the cached
-    frames' plans directly."""
-    import pyspark.sql.functions as F  # noqa: PLC0415 — local to mirror file style
+@pytest.mark.parametrize("scale", [None, 10**12], ids=["float", "fixed"])
+def test_pagerank_edge_cache_is_sorted_on_join_key(spark, monkeypatch, scale):
+    """Optimization guard, for both arithmetic modes: pagerank's edge
+    cache (edges + outdeg) must be persist()ed repartitioned AND sorted
+    within partitions on src (localCheckpoint DISCARDS partitioning and
+    ordering, so every iteration would re-exchange and re-sort |E|
+    rows), and each iteration join must consume that cache in place:
+    between the edge-cache InMemoryTableScan and the join above it there
+    is NO hash exchange and NO sort. Only that path is pinned:
+    exchanges elsewhere, such as the |V|-row rank frame meeting the
+    cache, are free to change. The returned frame is a checkpoint scan,
+    so persist() and localCheckpoint() are intercepted during a real
+    pagerank() call and the iteration frames inspected directly."""
+    import re
+
     from pyspark.sql.classic.dataframe import DataFrame as CDF
 
     from energi_data_etl_spark.operators.graph import pagerank
@@ -731,17 +738,50 @@ def test_pagerank_edge_cache_is_sorted_on_join_key(spark, monkeypatch):
     monkeypatch.setattr(CDF, "persist", spying_persist)
     edges = spark.range(1000).select(
         (F.col("id") % 50).alias("src"), ((F.col("id") * 7) % 50).alias("dst")
-    )
-    pagerank(edges, iterations=1).collect()
+    ).distinct()
+    # at this size the planner would broadcast the edge cache and bypass
+    # the sort-merge path under guard; at scale |E| is far above the
+    # broadcast threshold
+    prev_bhj = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        _, captured = _checkpoint_plans(
+            monkeypatch, lambda: pagerank(edges, iterations=2, scale=scale).collect(), mode="simple"
+        )
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bhj)
     ew_plans = [p for p in persisted_plans if "Sort [src" in p and "hashpartitioning(src" in p]
     assert ew_plans, "no persisted frame is sorted+partitioned on src:\n" + "\n---\n".join(
         p[:400] for p in persisted_plans
     )
 
+    def depth(ln: str) -> int:
+        return len(ln) - len(ln.lstrip(" :+-"))
 
-def _checkpoint_plans(monkeypatch, fn):
+    n_scans = 0
+    for plan in captured:
+        lines = plan.splitlines()
+        scans = [i for i, ln in enumerate(lines) if "InMemoryTableScan" in ln and "outdeg#" in ln]
+        n_scans += len(scans)
+        for i in scans:
+            # walk the ancestors of the cache scan up to the join consuming it
+            d, path = depth(lines[i]), []
+            for ln in reversed(lines[:i]):
+                if depth(ln) < d:
+                    d = depth(ln)
+                    node = ln.lstrip(" :+-")
+                    if "Join" in node:
+                        break
+                    path.append(node)
+            relayout = [n for n in path if re.match(r"(Sort \[|Exchange hashpartitioning)", n)]
+            assert not relayout, f"edge cache re-exchanged/re-sorted per iteration: {relayout}\n{plan}"
+    assert n_scans, "no iteration join reads the edge cache:\n" + "\n---\n".join(captured)
+
+
+def _checkpoint_plans(monkeypatch, fn, mode: str = "formatted"):
     """Run fn() with DataFrame.localCheckpoint intercepted; returns
-    (result, [formatted plan of each frame at its checkpoint moment]).
+    (result, [plan of each frame at its checkpoint moment, in explain
+    `mode`]).
     Checkpoint truncation hides these subtrees from every later explain
     (CLAUDE.md r17 lesson: sweep pre-checkpoint frames, not just final
     plans), so guards on checkpointed pipelines capture them here."""
@@ -751,7 +791,7 @@ def _checkpoint_plans(monkeypatch, fn):
     orig = CDF.localCheckpoint
 
     def spying(self, *a, **kw):
-        captured.append(explain_str(self))
+        captured.append(explain_str(self, mode=mode))
         return orig(self, *a, **kw)
 
     monkeypatch.setattr(CDF, "localCheckpoint", spying)
@@ -794,54 +834,3 @@ def test_no_inferred_generate_filter_in_bm25_hybrid_tf(spark, sf_dir, monkeypatc
                 assert "split(" not in cond and "xxhash64" not in cond, (
                     f"{name}: tokenize kernel cloned into a filter: {cond[:200]}"
                 )
-
-
-def test_pagerank_twin_edge_cache_preserves_layout(spark, sf_dir, monkeypatch):
-    """r18 guard (VERDICT r17 #1): the integer twin's weighted edge
-    frame must be persist()ed repartitioned + sorted on the join key
-    'a' (localCheckpoint DISCARDS partitioning and ordering, so every
-    iteration re-exchanged and re-sorted |E| rows), and the returned
-    plan's visible iteration join must consume the cache: between the
-    edge-cache InMemoryTableScan and the join above it there is NO
-    hash exchange and NO sort. Only that path is pinned (ADVICE r18
-    #4): exchanges elsewhere in the plan, such as the |V|-row rank
-    frame meeting the cache, are free to change."""
-    import re
-
-    from pyspark.sql.classic.dataframe import DataFrame as CDF
-
-    persisted_plans: list[str] = []
-    orig_persist = CDF.persist
-
-    def spying_persist(self, *a, **kw):
-        persisted_plans.append(explain_str(self, mode="simple"))
-        return orig_persist(self, *a, **kw)
-
-    monkeypatch.setattr(CDF, "persist", spying_persist)
-    df = QUERIES["pagerank_integer_twin"].fn(spark, sf_dir)
-    monkeypatch.undo()
-    ew_plans = [p for p in persisted_plans if "Sort [a#" in p and "hashpartitioning(a#" in p]
-    assert ew_plans, (
-        "no persisted frame is sorted+partitioned on a:\n"
-        + "\n---\n".join(p[:400] for p in persisted_plans)
-    )
-    final = explain_str(df, mode="simple")
-    lines = final.splitlines()
-
-    def depth(ln: str) -> int:
-        return len(ln) - len(ln.lstrip(" :+-"))
-
-    scans = [i for i, ln in enumerate(lines) if "InMemoryTableScan" in ln and "outdeg#" in ln]
-    assert scans, "the iteration join does not read the edge cache:\n" + final
-    for i in scans:
-        # walk the ancestors of the cache scan up to the join consuming it
-        d, path = depth(lines[i]), []
-        for ln in reversed(lines[:i]):
-            if depth(ln) < d:
-                d = depth(ln)
-                node = ln.lstrip(" :+-")
-                if "Join" in node:
-                    break
-                path.append(node)
-        relayout = [n for n in path if re.match(r"(Sort \[|Exchange hashpartitioning)", n)]
-        assert not relayout, f"edge cache re-exchanged/re-sorted per iteration: {relayout}\n{final}"
