@@ -40,22 +40,62 @@ __all__ = [
     "covariance_matrix",
 ]
 
-#: Above this many required fit points (24 pts/cell × K) the sampled
-#: driver-side k-means can no longer deliver its per-cell floor under
-#: the 500k collect cap — auto-switch to the distributed fit.
+#: Quantizer-quality floor: a k-means fit needs ~tens of points per
+#: cell or the centroids are noise (the r15 recall collapse at
+#: 1M/K=1953 traced to 5 points/cell).
+PTS_PER_CELL = 24
+
+#: Driver-collect cap of the sampled fit (≈250 MB of float64 at d=64).
+#: Where PTS_PER_CELL × K exceeds it, the fit runs distributed instead.
 DISTRIBUTED_FIT_THRESHOLD = 500_000
 
+#: Above this many cells the quantizer is two-level (coarse × fine):
+#: measured crossover, BASELINE.md r11 — two-level already wins at
+#: K=488 (1.54 vs 2.19 s @ 250k vectors) and 3.4× at K=1953; below a
+#: few hundred cells the flat matmul is trivial and picks a better cell
+#: set.
+TWO_LEVEL_MIN_CELLS = 256
 
-def _use_distributed_fit(fit_mode: str | None, n_centroids: int, pts_per_cell: int = 24) -> bool:
-    """Fit-path selection (VERDICT r16 item 1), exposed for tests:
-    explicit ``fit_mode`` wins; auto switches to the distributed fit
-    exactly where the sampled fit's 24/cell quality floor collides with
-    its 500k driver-collect cap (K > ~20.8k cells)."""
-    if fit_mode is not None:
-        if fit_mode not in ("sample", "distributed"):
-            raise ValueError(f"fit_mode must be 'sample' | 'distributed' | None, got {fit_mode!r}")
-        return fit_mode == "distributed"
-    return pts_per_cell * n_centroids > DISTRIBUTED_FIT_THRESHOLD
+
+def _use_distributed_fit(n_centroids: int) -> bool:
+    """True where the sampled fit's per-cell floor collides with its
+    driver-collect cap (K > ~20.8k cells)."""
+    return PTS_PER_CELL * n_centroids > DISTRIBUTED_FIT_THRESHOLD
+
+
+def _unit_rows(X):
+    """Row-normalized copy of a float64 (n, d) array; zero rows stay zero."""
+    import numpy as np
+
+    return X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+
+
+def _two_level_shape(n_centroids: int) -> tuple[int, int]:
+    """(k_coarse, k_fine) = (ceil(√K), ceil(K / k_coarse)) of the IMI quantizer."""
+    import math
+
+    k_coarse = max(2, math.isqrt(n_centroids - 1) + 1)
+    return k_coarse, max(1, -(-n_centroids // k_coarse))
+
+
+def _nearest_cell(v, quantizer):
+    """(n,) int32 nearest cell of each unit row of ``v`` — the corpus
+    assignment of every IVF quantizer. Flat: argmax over the (K, d)
+    centroids. Two-level ``(Cc, Cf, k_fine, n_valid)``: coarse argmax,
+    then fine argmax within that coarse cell only (N·2√K·d flops, not
+    N·K·d); cell = coarse·k_fine + fine. Padded fine slots alias slot 0
+    and never win the first-index argmax."""
+    import numpy as np
+
+    if not isinstance(quantizer, tuple):
+        return np.argmax(v @ quantizer.T, axis=1).astype(np.int32)
+    Cc, Cf, k_fine, _ = quantizer
+    coarse = np.argmax(v @ Cc.T, axis=1)
+    cells = np.empty(len(v), dtype=np.int32)
+    for ci in np.unique(coarse):
+        m = coarse == ci
+        cells[m] = ci * k_fine + np.argmax(v[m] @ Cf[ci].T, axis=1)
+    return cells
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -220,7 +260,7 @@ def fit_centroids_distributed(
     vec_col: str = "embedding",
     kmeans_iters: int = 5,
     seed: int = 42,
-    pts_per_cell: int = 24,
+    pts_per_cell: int = PTS_PER_CELL,
     corpus_count: int | None = None,
     two_level: bool = False,
 ):
@@ -264,8 +304,6 @@ def fit_centroids_distributed(
     twins) use the sampled fit, which this function deliberately does
     not replace below the cap (see _use_distributed_fit).
     """
-    import math
-
     import numpy as np
 
     spark = corpus.sparkSession
@@ -281,8 +319,7 @@ def fit_centroids_distributed(
             if not len(pdf):
                 continue
             v = np.vstack(pdf.iloc[:, 0].to_numpy()).astype(np.float64, copy=False)
-            v /= np.maximum(np.linalg.norm(v, axis=1, keepdims=True), 1e-12)
-            yield pd.DataFrame({"v": list(v)})
+            yield pd.DataFrame({"v": list(_unit_rows(v))})
 
     npart = max(sc.defaultParallelism, 8)
     fit = (
@@ -445,8 +482,7 @@ def fit_centroids_distributed(
         if not two_level:
             return _lloyd_distributed(min(n_centroids, max(n_fit, 1)))
 
-        k_coarse = max(2, math.isqrt(n_centroids - 1) + 1)  # ceil(sqrt(K))
-        k_fine = max(1, -(-n_centroids // k_coarse))  # ceil(K / Kc)
+        k_coarse, k_fine = _two_level_shape(n_centroids)
         Cc = _lloyd_distributed(min(k_coarse, max(n_fit, 1)))
         k_coarse = len(Cc)
         b_cc = sc.broadcast(Cc)
@@ -508,6 +544,80 @@ def fit_centroids_distributed(
         fit.unpersist()
 
 
+def _fit_quantizer(
+    corpus: DataFrame,
+    n_centroids: int,
+    vec_col: str,
+    sample_size: int,
+    kmeans_iters: int,
+    seed: int,
+    n_corpus: int,
+    two_level: bool | None = None,
+):
+    """The one IVF quantizer fit behind ann_ivf_knn and semdedup_prune:
+    spherical k-means returning the layout `_nearest_cell` reads — a
+    (K, d) array, or ``(Cc, Cf, k_fine, n_valid)`` when ``two_level``
+    (None: auto-on above TWO_LEVEL_MIN_CELLS).
+
+    Where `_use_distributed_fit` says so, the fit is
+    fit_centroids_distributed (the sample never leaves the executors).
+    Otherwise it runs Lloyd iterations on the driver over a seeded
+    UNIFORM sample (`df.sample`, not ordered-limit — an id-ordered prefix
+    is biased toward whatever the id order correlates with, e.g. ingest
+    time) of max(sample_size, min(PTS_PER_CELL·K,
+    DISTRIBUTED_FIT_THRESHOLD)) rows: the per-cell floor is capped so the
+    collect stays bounded, while an explicitly larger sample_size is
+    honored as passed. Bernoulli `sample(frac)` can undershoot despite
+    the 1.2× headroom (small corpora, unlucky draws); a materially short
+    fit set (<80% of the achievable size) is logged rather than silently
+    degrading the quantizer."""
+    import logging
+
+    import numpy as np
+
+    if two_level is None:
+        two_level = n_centroids > TWO_LEVEL_MIN_CELLS
+    if _use_distributed_fit(n_centroids):
+        return fit_centroids_distributed(
+            corpus,
+            n_centroids,
+            vec_col=vec_col,
+            kmeans_iters=kmeans_iters,
+            seed=seed,
+            corpus_count=n_corpus,
+            two_level=two_level,
+        )
+    target = max(sample_size, min(PTS_PER_CELL * n_centroids, DISTRIBUTED_FIT_THRESHOLD))
+    frac = min(1.0, 1.2 * target / max(n_corpus, 1))  # 1.2× then cap: sample() is per-row Bernoulli
+    sample = corpus.select(vec_col).sample(fraction=frac, seed=seed).limit(target).collect()
+    achievable = min(target, n_corpus)
+    if len(sample) < 0.8 * achievable:
+        logging.getLogger(__name__).warning(
+            "k-means fit sample has %d rows (< 80%% of the %d targeted) — quantizer quality may suffer",
+            len(sample), achievable,
+        )
+    X = _unit_rows(np.array([r[0] for r in sample], dtype=np.float64))
+    rng = np.random.RandomState(seed)
+    if not two_level:
+        return _local_spherical_kmeans(X, n_centroids, kmeans_iters, rng)
+    k_coarse, k_fine = _two_level_shape(n_centroids)
+    Cc = _local_spherical_kmeans(X, k_coarse, kmeans_iters, rng)
+    coarse_of = np.argmax(X @ Cc.T, axis=1)
+    Cf = np.zeros((len(Cc), k_fine, X.shape[1]), dtype=np.float64)
+    n_valid = np.ones(len(Cc), dtype=np.int64)
+    for ci in range(len(Cc)):
+        members = X[coarse_of == ci]
+        fine = _local_spherical_kmeans(members, k_fine, kmeans_iters, rng) if len(members) else Cc[ci : ci + 1]
+        # pad unfilled fine slots by aliasing the first fine centroid:
+        # padded slots never win the first-index argmax (corpus side) and
+        # are masked -inf on the probe side, keeping the array
+        # rectangular for one fused matmul per coarse group.
+        Cf[ci, : len(fine)] = fine
+        Cf[ci, len(fine) :] = fine[0]
+        n_valid[ci] = len(fine)
+    return Cc, Cf, k_fine, n_valid
+
+
 def ann_ivf_knn(
     queries: DataFrame,
     corpus: DataFrame,
@@ -522,19 +632,18 @@ def ann_ivf_knn(
     corpus_count: int | None = None,
     two_level: bool | None = None,
     probe_pool: int = 4,
-    fit_mode: str | None = None,
 ) -> DataFrame:
     """IVF-style ANN: coarse k-means quantizer → inverted lists per
     centroid cell → queries probe their `nprobe` nearest cells only.
 
-    ``two_level`` (auto-on once n_centroids > 256, the semdedup_prune
-    crossover measured in BASELINE.md r11) switches assignment to the
-    coarse×fine quantizer (FAISS IMI shape): √K coarse centroids, √K
-    fine per coarse cell. At 100 TB the inverted index must scale K
-    with N to keep cells bounded, and single-level assignment is the
-    same N·K·d wall SemDeDup hit — two-level is N·2√K·d. Corpus
-    vectors take coarse-argmax then fine-argmax (one cell); queries
-    use the multi-sequence refined probe (r16): pool the top
+    ``two_level`` (auto-on above TWO_LEVEL_MIN_CELLS, the measured
+    crossover) switches assignment to the coarse×fine quantizer (FAISS
+    IMI shape): √K coarse centroids, √K fine per coarse cell. At 100 TB
+    the inverted index must scale K with N to keep cells bounded, and
+    single-level assignment is the same N·K·d wall SemDeDup hit —
+    two-level is N·2√K·d. Corpus vectors take their one nearest cell
+    (`_nearest_cell`, shared with semdedup_prune); queries use the
+    multi-sequence refined probe (r16): pool the top
     ``probe_pool·√nprobe`` coarse cells, score every fine centroid in
     the pool, keep the GLOBAL top-nprobe cells — converging to exact
     flat top-nprobe cell selection as the pool grows, at query-side
@@ -543,20 +652,16 @@ def ann_ivf_knn(
     and the probe differ (recall pinned in tests/test_llm_ops.py for
     both modes).
 
-    Fit is driver-side Lloyd iterations on a seeded UNIFORM sample
-    (`df.sample`, not ordered-limit — an id-ordered prefix is biased
-    toward whatever the id order correlates with, e.g. ingest time) —
-    the standard IVF recipe: the quantizer is tiny and global, the
+    The quantizer comes from `_fit_quantizer` (seeded sample on the
+    driver, or distributed past DISTRIBUTED_FIT_THRESHOLD) — the
+    standard IVF recipe: the quantizer is tiny and global, the
     assignment is a broadcast map stage, and search joins on the cell
     id (shuffle by cell, never a cross join). recall/cost dial =
     n_centroids × nprobe.
 
     Pass `corpus_count` when the caller already knows it (catalog
     stats, a prior action) to skip the extra count() job over the full
-    corpus. Bernoulli `sample(frac)` can undershoot despite the 1.2×
-    headroom (small corpora, unlucky draws); a materially short fit set
-    (<80% of the achievable size) is logged rather than silently
-    degrading the quantizer.
+    corpus.
 
     Operating envelope (pinned by tests/test_llm_ops.py): recall
     tracks the probed fraction nprobe/n_centroids. The fixture's
@@ -570,145 +675,62 @@ def ann_ivf_knn(
     (PROBES_r16, worst-case 1M i.i.d. vectors / K=1953): recall@5 0.81
     at nprobe=384 and 0.88 at nprobe=512 (was 0.39 at np=64 before the
     r16 refined probe + fit-sample floor); corpus assignment cost
-    unchanged (nearest=1 path untouched) — the recall is bought on the
-    query side, where flops are per-QUERY, not per-corpus-vector.
+    unchanged — the recall is bought on the query side, where flops are
+    per-QUERY, not per-corpus-vector.
     """
-    import logging
+    import math
 
     import numpy as np
 
-    spark = corpus.sparkSession
     n_corpus = corpus_count if corpus_count is not None else corpus.count()
+    quantizer = _fit_quantizer(corpus, n_centroids, vec_col, sample_size, kmeans_iters, seed, n_corpus, two_level)
+    b_C = corpus.sparkSession.sparkContext.broadcast(quantizer)
 
-    if two_level is None:
-        two_level = n_centroids > 256  # measured crossover, BASELINE.md r11
+    def _probe(v):  # -> (n, width) distinct cell ids per query
+        Q = b_C.value
+        if nprobe <= 1:
+            return _nearest_cell(v, Q)[:, None]
+        if not isinstance(Q, tuple):
+            return np.argsort(-(v @ Q.T), axis=1)[:, :nprobe]
+        Ccm, Cfm, kf, nv = Q
+        # Multi-sequence refined probe (r16, VERDICT r15 #2): the old
+        # nc×nf grid took a FIXED ceil(nprobe/√nprobe) fine cells from
+        # each of the top-√nprobe coarse cells — a query whose true
+        # neighbors concentrate under one coarse cell got only nf of them
+        # (measured recall gap vs exact flat top-nprobe: 0.56 vs 0.68 at
+        # 100k/K=195). Now: pool the top `probe_pool·√nprobe` coarse
+        # cells, score EVERY fine centroid inside the pool against the
+        # query (the pre-normalized dot kernel — exact, not the coarse
+        # proxy), and keep the GLOBAL top-nprobe cells by that score. As
+        # probe_pool → Kc this converges to exact flat top-nprobe cell
+        # selection; at the default 4 the probe flops are
+        # (Kc + 4√nprobe·kf)·d per QUERY — query-side only, the corpus
+        # assignment is untouched, so the "assignment cost" axis of the
+        # operating curve is 1.0×.
+        nc = min(len(Ccm), max(1, probe_pool * (math.isqrt(nprobe - 1) + 1)))
+        coarse_top = np.argsort(-(v @ Ccm.T), axis=1)[:, :nc]
+        scores = np.full((len(v), nc * kf), -np.inf)
+        cells = np.zeros((len(v), nc * kf), dtype=np.int64)
+        for s in range(nc):
+            cc = coarse_top[:, s]
+            for ci in np.unique(cc):
+                m = cc == ci
+                sims = v[m] @ Cfm[ci].T
+                sims[:, nv[ci] :] = -np.inf  # padded alias slots
+                scores[np.where(m)[0][:, None], np.arange(s * kf, (s + 1) * kf)] = sims
+                cells[m, s * kf : (s + 1) * kf] = ci * kf + np.arange(kf)
+        width = min(nprobe, nc * kf)
+        top = np.argpartition(-scores, width - 1, axis=1)[:, :width]
+        return np.take_along_axis(cells, top, axis=1)
 
-    if _use_distributed_fit(fit_mode, n_centroids):
-        # VERDICT r16 item 1: past ~20k cells the sampled fit's 500k
-        # driver collect starves the 24/cell floor — fit distributedly
-        # (the sample never leaves the executors; driver sees K×d only).
-        fitted = fit_centroids_distributed(
-            corpus,
-            n_centroids,
-            vec_col=vec_col,
-            kmeans_iters=kmeans_iters,
-            seed=seed,
-            corpus_count=n_corpus,
-            two_level=two_level,
-        )
-    else:
-        # Quantizer-quality floor (r16, VERDICT r15 #2): a k-means fit
-        # needs ~tens of points per CELL or the fine centroids are noise —
-        # the r15 operating curve's recall collapse at 1M/K=1953 traced to
-        # the default 10k sample (5 points/cell). Scale the sample with K
-        # (24/cell), capped at 500k points (≈250 MB of float64 at d=64) so
-        # the driver-side fit stays bounded; the auto-switch above hands
-        # anything needing more to fit_centroids_distributed.
-        # The 500k cap binds only the AUTO-raised 24/cell floor: an
-        # explicitly larger sample_size is honored as passed (ADVICE r16).
-        sample_size = max(sample_size, min(24 * n_centroids, 500_000))
-        frac = min(1.0, 1.2 * sample_size / max(n_corpus, 1))  # 1.2× then cap: sample() is per-row Bernoulli
-        sample = corpus.select(id_col, vec_col).sample(fraction=frac, seed=seed).limit(sample_size).collect()
-        achievable = min(sample_size, n_corpus)
-        if len(sample) < 0.8 * achievable:
-            logging.getLogger(__name__).warning(
-                "ann_ivf_knn: k-means fit sample has %d rows (< 80%% of the %d targeted) — quantizer quality may suffer",
-                len(sample), achievable,
-            )
-        X = np.array([r[1] for r in sample], dtype=np.float64)
-        X /= np.linalg.norm(X, axis=1, keepdims=True)
-        rng = np.random.RandomState(seed)
-
-        def _fit(pts, k, iters):  # spherical k-means: cosine assignment
-            return _local_spherical_kmeans(pts, k, iters, rng)
-
-        if two_level:
-            import math
-
-            k_coarse = max(2, math.isqrt(n_centroids - 1) + 1)  # ceil(sqrt(K))
-            k_fine = max(1, -(-n_centroids // k_coarse))  # ceil(K / Kc)
-            Cc = _fit(X, k_coarse, kmeans_iters)
-            k_coarse = len(Cc)
-            coarse_of = np.argmax(X @ Cc.T, axis=1)
-            Cf = np.zeros((k_coarse, k_fine, X.shape[1]), dtype=np.float64)
-            n_valid = np.ones(k_coarse, dtype=np.int64)
-            for ci in range(k_coarse):
-                members = X[coarse_of == ci]
-                fine = _fit(members, k_fine, kmeans_iters) if len(members) else Cc[ci : ci + 1]
-                # pad unfilled fine slots by aliasing the first fine
-                # centroid: padded slots never win a strict argmax (corpus
-                # side) and are masked -inf on the probe side, keeping the
-                # array rectangular for one fused matmul per coarse group.
-                Cf[ci, : len(fine)] = fine
-                Cf[ci, len(fine) :] = fine[0]
-                n_valid[ci] = len(fine)
-            fitted = (Cc, Cf, k_fine, n_valid)
-        else:
-            fitted = _fit(X, n_centroids, kmeans_iters)
-
-    if two_level:
-        Cc, Cf, k_fine, n_valid = fitted
-        b_C = spark.sparkContext.broadcast((Cc, Cf, k_fine, n_valid))
-
-        def _probe(v, nearest):  # -> (n, width>=nearest) distinct cell ids
-            Ccm, Cfm, kf, nv = b_C.value
-            if nearest <= 1:
-                coarse = np.argmax(v @ Ccm.T, axis=1)
-                out = np.empty((len(v), 1), dtype=np.int64)
-                for ci in np.unique(coarse):
-                    m = coarse == ci
-                    out[m, 0] = ci * kf + np.argmax(v[m] @ Cfm[ci].T, axis=1)
-                return out
-            import math
-
-            # Multi-sequence refined probe (r16, VERDICT r15 #2): the
-            # old nc×nf grid took a FIXED ceil(nprobe/√nprobe) fine
-            # cells from each of the top-√nprobe coarse cells — a
-            # query whose true neighbors concentrate under one coarse
-            # cell got only nf of them (measured recall gap vs exact
-            # flat top-nprobe: 0.56 vs 0.68 at 100k/K=195). Now: pool
-            # the top `probe_pool·√nprobe` coarse cells, score EVERY
-            # fine centroid inside the pool against the query (the
-            # pre-normalized dot kernel — exact, not the coarse proxy),
-            # and keep the GLOBAL top-nprobe cells by that score. As
-            # probe_pool → Kc this converges to exact flat top-nprobe
-            # cell selection; at the default 4 the probe flops are
-            # (Kc + 4√nprobe·kf)·d per QUERY — query-side only, the
-            # corpus assignment (nearest=1 path) is untouched, so the
-            # "assignment cost" axis of the operating curve is 1.0×.
-            nc = min(len(Ccm), max(1, probe_pool * (math.isqrt(nearest - 1) + 1)))
-            coarse_top = np.argsort(-(v @ Ccm.T), axis=1)[:, :nc]
-            scores = np.full((len(v), nc * kf), -np.inf)
-            cells = np.zeros((len(v), nc * kf), dtype=np.int64)
-            for s in range(nc):
-                cc = coarse_top[:, s]
-                for ci in np.unique(cc):
-                    m = cc == ci
-                    sims = v[m] @ Cfm[ci].T
-                    sims[:, nv[ci] :] = -np.inf  # padded alias slots
-                    scores[np.where(m)[0][:, None], np.arange(s * kf, (s + 1) * kf)] = sims
-                    cells[m, s * kf : (s + 1) * kf] = ci * kf + np.arange(kf)
-            width = min(nearest, nc * kf)
-            top = np.argpartition(-scores, width - 1, axis=1)[:, :width]
-            return np.take_along_axis(cells, top, axis=1)
-
-    else:
-        b_C = spark.sparkContext.broadcast(fitted)
-
-        def _probe(v, nearest):
-            sims = v @ b_C.value.T
-            return np.argsort(-sims, axis=1)[:, :nearest]  # (n, nearest)
-
-    def cells(nearest: int):
+    def cells(assign):
         def assign_batches(batches):
             import pandas as pd
 
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                v = np.array(list(pdf.iloc[:, 1]), dtype=np.float64)
-                v = v / np.linalg.norm(v, axis=1, keepdims=True)
-                top = _probe(v, nearest)
+                top = assign(_unit_rows(np.array(list(pdf.iloc[:, 1]), dtype=np.float64)))
                 width = top.shape[1]
                 out = {
                     pdf.columns[0]: np.repeat(pdf.iloc[:, 0].to_numpy(), width),
@@ -721,8 +743,10 @@ def ann_ivf_knn(
 
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
-    qc = q.mapInPandas(cells(nprobe), "query_id long, __qv array<float>, cell int")
-    cc = c.mapInPandas(cells(1), "neighbor_id long, __cv array<float>, cell int")
+    qc = q.mapInPandas(cells(_probe), "query_id long, __qv array<float>, cell int")
+    cc = c.mapInPandas(
+        cells(lambda v: _nearest_cell(v, b_C.value)[:, None]), "neighbor_id long, __cv array<float>, cell int"
+    )
     scored = (
         qc.join(cc, "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -1062,9 +1086,6 @@ def semdedup_prune(
     kmeans_iters: int = 5,
     seed: int = 42,
     corpus_count: int | None = None,
-    two_level: bool | None = None,
-    eager: bool = False,
-    fit_mode: str | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, public) — the LINEAR-at-scale path
     that queries/llm.py::semdedup_cell_prune's fixture-certified twin
@@ -1077,20 +1098,19 @@ def semdedup_prune(
       expected cell size — and with it Σ n_c²/2 ≈ N·target_cell/2
       candidate pairs — stays CONSTANT per row: the pair stage is
       linear in N, exactly how the paper sizes its k-means.
-    * quantizer = spherical k-means fit driver-side on a seeded uniform
-      sample (same recipe as ann_ivf_knn above, kept separate so that
-      certified query's bytes stay untouched); centroids broadcast
-      (K×d doubles).
-    * assignment = one Arrow-batched numpy matmul per partition
-      (N×K·d flops vectorized — the interpreted fold that makes the
-      certified twin hash-replayable would be the bottleneck here).
-      The single-level assign flops (N²·d/target_cell) start to
+    * quantizer = ann_ivf_knn's spherical k-means (`_fit_quantizer`:
+      seeded uniform sample, or distributed past
+      DISTRIBUTED_FIT_THRESHOLD); centroids broadcast (K×d doubles).
+    * assignment = `_nearest_cell`, one Arrow-batched numpy matmul per
+      partition (N×K·d flops vectorized — the interpreted fold that
+      makes the certified twin hash-replayable would be the bottleneck
+      here). The single-level assign flops (N²·d/target_cell) start to
       dominate once K reaches the hundreds (measured 3.4× end-to-end
-      at K=1953 — BASELINE.md r11), so ``two_level`` (auto-on once
-      K > 256) switches to the standard coarse×fine quantizer (FAISS's
-      IMI shape): √K coarse centroids, √K fine centroids per coarse cell,
-      assign = argmax over coarse then argmax within the chosen coarse
-      — N·2√K·d flops, and the fit itself drops from sample×K to
+      at K=1953 — BASELINE.md r11), so above TWO_LEVEL_MIN_CELLS the
+      quantizer is the standard coarse×fine one (FAISS's IMI shape):
+      √K coarse centroids, √K fine centroids per coarse cell, assign =
+      argmax over coarse then argmax within the chosen coarse —
+      N·2√K·d flops, and the fit itself drops from sample×K to
       sample×2√K. Only the assign step changes; the pair stage, the
       prune rule, and the returned schema are identical.
     * per-cell pair compare = one numpy matmul per cell
@@ -1106,100 +1126,19 @@ def semdedup_prune(
     property, threshold agreement with exact cosine).
 
     Broadcast lifecycle: each call broadcasts its centroids (K×d
-    doubles — ~2 MB at K=1953/d=128). With the default ``eager=False``
-    the returned plan is lazy and reads the broadcast at collect time,
-    so it must NOT be unpersisted early — a long-lived session
-    hammering this operator (bench loops) accumulates one live block
-    per outstanding plan. ``eager=True`` is the bounded mode (VERDICT
-    r12 item 5): the result is materialized via
-    ``localCheckpoint(eager=True)`` and the broadcast destroyed before
-    returning, so NOTHING accumulates across calls — same total
-    compute, paid at call time instead of collect time. Loops and the
-    @query surface (queries/llm.py::semdedup_prune_scaled) use it.
+    doubles — ~2 MB at K=1953/d=128), materializes the result via
+    ``localCheckpoint(eager=True)`` and destroys the broadcast before
+    returning (VERDICT r12 item 5), so NOTHING accumulates across calls
+    in a long-lived session — the compute is paid at call time, not at
+    collect time.
     """
     import numpy as np
 
-    spark = corpus.sparkSession
     n_corpus = corpus_count if corpus_count is not None else corpus.count()
     n_centroids = max(32, n_corpus // target_cell)
-
-    if two_level is None:
-        # measured crossover (BASELINE.md r11): two-level already wins
-        # at K=488 (1.54 vs 2.19 s @ 250k vectors) and 3.4x at K=1953;
-        # below a few hundred cells the single-level matmul is trivial
-        # and skips one quantization stage (marginally better recall).
-        two_level = n_centroids > 256
-
-    if _use_distributed_fit(fit_mode, n_centroids):
-        # VERDICT r16 item 1: with K ∝ N the sampled fit's driver-side
-        # collect cap becomes the quantizer-quality wall past ~20k
-        # cells (N ≈ 10M rows at the default target_cell) — fit
-        # distributedly; only K×d centroid bytes reach the driver.
-        fitted = fit_centroids_distributed(
-            corpus,
-            n_centroids,
-            vec_col=vec_col,
-            kmeans_iters=kmeans_iters,
-            seed=seed,
-            corpus_count=n_corpus,
-            two_level=two_level,
-        )
-    else:
-        frac = min(1.0, 1.2 * max(sample_size, 2 * n_centroids) / max(n_corpus, 1))
-        sample = (
-            corpus.select(vec_col)
-            .sample(fraction=frac, seed=seed)
-            .limit(max(sample_size, 2 * n_centroids))
-            .collect()
-        )
-        X = np.array([r[0] for r in sample], dtype=np.float64)
-        X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-        rng = np.random.RandomState(seed)
-
-        def _spherical_kmeans(pts, k, iters):
-            return _local_spherical_kmeans(pts, k, iters, rng)
-
-        if two_level:
-            import math
-
-            k_coarse = max(2, math.isqrt(n_centroids - 1) + 1)  # ceil(sqrt(K))
-            k_fine = max(1, -(-n_centroids // k_coarse))  # ceil(K / Kc)
-            Cc = _spherical_kmeans(X, k_coarse, kmeans_iters)
-            k_coarse = len(Cc)
-            coarse_of = np.argmax(X @ Cc.T, axis=1)
-            d = X.shape[1]
-            Cf = np.zeros((k_coarse, k_fine, d), dtype=np.float64)
-            for c in range(k_coarse):
-                members = X[coarse_of == c]
-                fine = _spherical_kmeans(members, k_fine, kmeans_iters) if len(members) else Cc[c : c + 1]
-                # pad unfilled fine slots by repeating the first fine
-                # centroid: padded slots ALIAS a valid cell, never win a
-                # strict argmax over distinct vectors, and keep the array
-                # rectangular for one fused matmul per coarse group.
-                Cf[c, : len(fine)] = fine
-                Cf[c, len(fine) :] = fine[0]
-            fitted = (Cc, Cf, k_fine, None)
-        else:
-            fitted = _spherical_kmeans(X, n_centroids, kmeans_iters)
-
-    if two_level:
-        Cc, Cf, k_fine = fitted[0], fitted[1], fitted[2]
-        b_C = spark.sparkContext.broadcast((Cc, Cf, k_fine))
-
-        def _cells(v, payload):
-            Ccm, Cfm, kf = payload
-            coarse = np.argmax(v @ Ccm.T, axis=1)
-            cells = np.empty(len(v), dtype=np.int32)
-            for c in np.unique(coarse):
-                m = coarse == c
-                cells[m] = c * kf + np.argmax(v[m] @ Cfm[c].T, axis=1)
-            return cells
-
-    else:
-        b_C = spark.sparkContext.broadcast(fitted)
-
-        def _cells(v, payload):
-            return np.argmax(v @ payload.T, axis=1).astype(np.int32)
+    b_C = corpus.sparkSession.sparkContext.broadcast(
+        _fit_quantizer(corpus, n_centroids, vec_col, sample_size, kmeans_iters, seed, n_corpus)
+    )
 
     def assign_batches(batches):
         import pandas as pd
@@ -1208,15 +1147,8 @@ def semdedup_prune(
         for pdf in batches:
             if not len(pdf):
                 continue
-            v = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64, copy=False)
-            v = v / np.maximum(np.linalg.norm(v, axis=1, keepdims=True), 1e-12)
-            yield pd.DataFrame(
-                {
-                    "__id": pdf[id_col].to_numpy(),
-                    "__v": list(v),
-                    "cell": _cells(v, payload).astype(np.int32),
-                }
-            )
+            v = _unit_rows(np.vstack(pdf[vec_col].to_numpy()).astype(np.float64, copy=False))
+            yield pd.DataFrame({"__id": pdf[id_col].to_numpy(), "__v": list(v), "cell": _nearest_cell(v, payload)})
 
     assigned = corpus.select(id_col, vec_col).mapInPandas(
         assign_batches, schema="__id long, __v array<double>, cell int"
@@ -1247,19 +1179,13 @@ def semdedup_prune(
         .applyInPandas(prune_cell, schema="__id long, cell int, pruned boolean")
         .select(F.col("__id").alias(id_col), "cell", "pruned")
     )
-    if eager:
-        # materialize now, then release the centroid broadcast: the
-        # checkpointed RDD no longer references it, so repeated calls
-        # leave zero live broadcast blocks behind (bounded-accumulation
-        # contract; the checkpoint itself is GC-cleaned with the frame).
-        # destroy() in a finally so a failure mid-materialization can't
-        # leak the broadcast (ADVICE r13). Cluster note: localCheckpoint
-        # truncates lineage — if an executor holding checkpoint blocks
-        # is later lost, the frame FAILS rather than recomputing; on a
-        # real cluster prefer eager=False (keeps lineage) or a reliable
-        # checkpoint dir when executor churn is expected.
-        try:
-            result = result.localCheckpoint(eager=True)
-        finally:
-            b_C.destroy()
-    return result
+    # Materialize now, then release the centroid broadcast: the
+    # checkpointed RDD no longer references it, so repeated calls leave
+    # zero live broadcast blocks behind. destroy() sits in a finally so a
+    # failure mid-materialization cannot leak the broadcast (ADVICE r13).
+    # localCheckpoint truncates lineage: if an executor holding its
+    # blocks is lost, the frame fails rather than recomputing.
+    try:
+        return result.localCheckpoint(eager=True)
+    finally:
+        b_C.destroy()

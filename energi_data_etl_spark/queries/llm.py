@@ -466,10 +466,11 @@ def embedding_neardup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.neardup_pairs_matmul(e, threshold=0.4)
 
 
-@query(
-    "ann_ivf_topk",
-    tier="L3 (IVF coarse-quantizer ANN — the clustered-data scale path; verdict-oracled vs exact twin)",
-    oracle="""
+#: The IVF queries' shared verdict oracle. DuckDB has no IVF, so it pins
+#: the exact top-1 columns (hash-certified) plus n_ann=5 and
+#: corpus_recall_ok TRUE; a quantizer or probe regression fails the gate
+#: through the recall verdict.
+_IVF_VERDICT_ORACLE = """
         WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         scored AS (
             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -491,125 +492,84 @@ def embedding_neardup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                TRUE AS corpus_recall_ok
         FROM topk
         GROUP BY query_id
-    """,
+    """
+
+
+def _ivf_verdict(spark: SparkSession, sf_dir: str, recall_floor: float, **ivf) -> DataFrame:
+    """Exact top-5 of query vectors 0-9 compared inside the query with
+    ``ann_ivf_knn(k=5, **ivf)``. Per query vector the output carries the
+    exact top-1 neighbor and cosine and the exact/ANN result counts; the
+    verdict is CORPUS-level — mean top-5 recall over the query set ≥
+    ``recall_floor`` — because per-query recall is legitimately spiky
+    for a coarse quantizer (a query whose true neighbors sit just across
+    a Voronoi face probes the wrong cells)."""
+    e = load_table(spark, "embeddings", sf_dir)
+    q = e.filter(F.col("vec_id") < 10)
+    ex = S.exact_knn(q, e, k=5).localCheckpoint(eager=False)
+    ann = S.ann_ivf_knn(q, e, k=5, **ivf).localCheckpoint(eager=False)
+    hits = ex.select("query_id", "neighbor_id").join(
+        ann.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"], "left_semi"
+    )
+    corpus = hits.agg(F.count(F.lit(1)).alias("__hits")).crossJoin(
+        ex.agg(F.count(F.lit(1)).alias("__n_exact_all"))
+    )
+    ann_n = ann.groupBy("query_id").agg(F.count(F.lit(1)).cast("long").alias("n_ann"))
+    ex_agg = ex.groupBy("query_id").agg(
+        F.max(F.when(F.col("rank") == 1, F.col("neighbor_id"))).cast("long").alias("exact_top1_id"),
+        F.max(F.when(F.col("rank") == 1, F.col("cos_sim"))).alias("exact_top1_cos"),
+        F.count(F.lit(1)).cast("long").alias("n_exact"),
+    )
+    return (
+        ex_agg.join(ann_n, "query_id", "left")
+        .crossJoin(F.broadcast(corpus))
+        .select(
+            "query_id",
+            "exact_top1_id",
+            "exact_top1_cos",
+            "n_exact",
+            F.coalesce(F.col("n_ann"), F.lit(0)).cast("long").alias("n_ann"),
+            (F.col("__hits") >= recall_floor * F.col("__n_exact_all")).alias("corpus_recall_ok"),
+        )
+    )
+
+
+@query(
+    "ann_ivf_topk",
+    tier="L3 (IVF coarse-quantizer ANN — the clustered-data scale path; verdict-oracled vs exact twin)",
+    oracle=_IVF_VERDICT_ORACLE,
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with a driver-checkable verdict (VERDICT r07 item 3,
     completing the ANN tier): spherical k-means coarse quantizer
     (16 cells, seeded ≤10k driver-side sample), inverted cell lists,
-    nprobe=4 — compared inside the query against the exact brute-force
-    top-5. Per query vector the output carries the exact top-1
-    neighbor and cosine (hash-certified vs DuckDB) and the exact/ANN
-    result counts; the verdict is CORPUS-level — mean top-5 recall
-    over the query set ≥ 0.4 — because per-query recall is legitimately
-    spiky for a coarse quantizer (a query whose true neighbors sit
-    just across a Voronoi face probes the wrong cells: measured
-    per-query recall at sf0.1 spans 0.0–1.0, mean 0.5; sf0.001/0.01
-    means 0.64/0.68 — all deterministic, seeded). DuckDB has no IVF,
-    so the oracle pins n_ann=5 and corpus_recall_ok TRUE; a
-    quantizer/list regression drops the mean below the floor and
-    fails the gate. Recall-vs-nprobe dials stay in
-    tests/test_llm_ops.py."""
-    e = load_table(spark, "embeddings", sf_dir)
-    q = e.filter(F.col("vec_id") < 10)
-    ex = S.exact_knn(q, e, k=5).localCheckpoint(eager=False)
-    ann = S.ann_ivf_knn(q, e, k=5).localCheckpoint(eager=False)
-    hits = ex.select("query_id", "neighbor_id").join(
-        ann.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"], "left_semi"
-    )
-    corpus = hits.agg(F.count(F.lit(1)).alias("__hits")).crossJoin(
-        ex.agg(F.count(F.lit(1)).alias("__n_exact_all"))
-    )
-    ann_n = ann.groupBy("query_id").agg(F.count(F.lit(1)).cast("long").alias("n_ann"))
-    ex_agg = ex.groupBy("query_id").agg(
-        F.max(F.when(F.col("rank") == 1, F.col("neighbor_id"))).cast("long").alias("exact_top1_id"),
-        F.max(F.when(F.col("rank") == 1, F.col("cos_sim"))).alias("exact_top1_cos"),
-        F.count(F.lit(1)).cast("long").alias("n_exact"),
-    )
-    return (
-        ex_agg.join(ann_n, "query_id", "left")
-        .crossJoin(F.broadcast(corpus))
-        .select(
-            "query_id",
-            "exact_top1_id",
-            "exact_top1_cos",
-            "n_exact",
-            F.coalesce(F.col("n_ann"), F.lit(0)).cast("long").alias("n_ann"),
-            (F.col("__hits") >= 0.4 * F.col("__n_exact_all")).alias("corpus_recall_ok"),
-        )
-    )
+    nprobe=4, gated at a 0.4 corpus recall floor (`_ivf_verdict`).
+    Measured per-query recall at sf0.1 spans 0.0–1.0, mean 0.5;
+    sf0.001/0.01 means 0.64/0.68 — all deterministic, seeded.
+    Recall-vs-nprobe dials stay in tests/test_llm_ops.py."""
+    return _ivf_verdict(spark, sf_dir, 0.4)
 
 
 @query(
     "ann_ivf_two_level_topk",
     tier="L3 (two-level IMI quantizer IVF ANN — the corpus-scaled-K path; verdict-oracled vs exact twin)",
-    oracle="""
-        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        scored AS (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   LIST_COSINE_SIMILARITY(q.v, c.v) AS cos_raw
-            FROM e q JOIN e c ON q.vec_id < 10 AND q.vec_id <> c.vec_id
-        ),
-        topk AS (
-            SELECT query_id, neighbor_id, cos_raw,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                                      ORDER BY cos_raw DESC, neighbor_id ASC) AS rnk
-            FROM scored
-            QUALIFY rnk <= 5
-        )
-        SELECT query_id,
-               CAST(MAX(CASE WHEN rnk = 1 THEN neighbor_id END) AS BIGINT) AS exact_top1_id,
-               ROUND(MAX(CASE WHEN rnk = 1 THEN cos_raw END), 4) AS exact_top1_cos,
-               CAST(COUNT(*) AS BIGINT) AS n_exact,
-               CAST(5 AS BIGINT) AS n_ann,
-               TRUE AS corpus_recall_ok
-        FROM topk
-        GROUP BY query_id
-    """,
+    oracle=_IVF_VERDICT_ORACLE,
 )
 def ann_ivf_two_level_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The r14 two-level (IMI-shaped) IVF quantizer certified at the
-    driver surface, same verdict shape as ann_ivf_topk: coarse×fine
-    spherical k-means (√K coarse, √K fine per coarse), corpus vectors
-    assigned coarse-argmax→fine-argmax, queries probing the top
-    ceil(√nprobe) coarse cells × ceil(nprobe/nc) fine cells within each
-    (nprobe=8 ⇒ 9 of 16 cells). At 100 TB this is the assignment shape
+    driver surface, same verdict as ann_ivf_topk (`_ivf_verdict`):
+    coarse×fine spherical k-means (√K coarse, √K fine per coarse),
+    corpus vectors assigned coarse-argmax→fine-argmax, queries probed
+    with the multi-sequence refined probe — pool the top
+    probe_pool·√nprobe coarse cells, score every fine centroid in the
+    pool, keep the global top nprobe. At the fixture's K=16 (4×4) with
+    nprobe=8 the pool holds all 4 coarse cells, so the probe is the
+    exact flat top-8 of 16 cells. At 100 TB this is the assignment shape
     that survives K ∝ N: probe at 1M vectors / K=1953 measured 3.44 s
     two-level vs 10.60 s single-level at EQUAL corpus recall
     (PROBES_r14.json). Fixture recall (worst-case i.i.d. vectors,
-    measured 0.76/0.82/0.80 at sf0.001/0.01/0.1) gates at the 0.5
-    corpus floor; the exact top-1 columns stay hash-certified against
-    DuckDB, and the oracle pins n_ann=5 / corpus_recall_ok TRUE —
-    DuckDB has no IVF, so a quantizer or probe regression fails the
-    gate through the recall verdict."""
-    e = load_table(spark, "embeddings", sf_dir)
-    q = e.filter(F.col("vec_id") < 10)
-    ex = S.exact_knn(q, e, k=5).localCheckpoint(eager=False)
-    ann = S.ann_ivf_knn(q, e, k=5, nprobe=8, two_level=True).localCheckpoint(eager=False)
-    hits = ex.select("query_id", "neighbor_id").join(
-        ann.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"], "left_semi"
-    )
-    corpus = hits.agg(F.count(F.lit(1)).alias("__hits")).crossJoin(
-        ex.agg(F.count(F.lit(1)).alias("__n_exact_all"))
-    )
-    ann_n = ann.groupBy("query_id").agg(F.count(F.lit(1)).cast("long").alias("n_ann"))
-    ex_agg = ex.groupBy("query_id").agg(
-        F.max(F.when(F.col("rank") == 1, F.col("neighbor_id"))).cast("long").alias("exact_top1_id"),
-        F.max(F.when(F.col("rank") == 1, F.col("cos_sim"))).alias("exact_top1_cos"),
-        F.count(F.lit(1)).cast("long").alias("n_exact"),
-    )
-    return (
-        ex_agg.join(ann_n, "query_id", "left")
-        .crossJoin(F.broadcast(corpus))
-        .select(
-            "query_id",
-            "exact_top1_id",
-            "exact_top1_cos",
-            "n_exact",
-            F.coalesce(F.col("n_ann"), F.lit(0)).cast("long").alias("n_ann"),
-            (F.col("__hits") >= 0.5 * F.col("__n_exact_all")).alias("corpus_recall_ok"),
-        )
-    )
+    measured 0.74/0.90/0.72 at sf0.001/0.01/0.1) gates at the 0.5
+    corpus floor."""
+    return _ivf_verdict(spark, sf_dir, 0.5, nprobe=8, two_level=True)
 
 
 @query(
@@ -1741,8 +1701,8 @@ def semdedup_cell_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 def semdedup_two_level_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The TWO-LEVEL coarse x fine quantizer assign path under the
     driver's hash gate (VERDICT r11 item 3): semdedup_prune auto-switches
-    to this FAISS-IMI-shaped assignment once K > 256
-    (operators/similarity.py:671-699 — measured 3.4x at K=1953,
+    to this FAISS-IMI-shaped assignment above TWO_LEVEL_MIN_CELLS
+    (operators/similarity.py::_nearest_cell — measured 3.4x at K=1953,
     BASELINE.md r11), but that operator's k-means fit is numpy-RNG and
     not oracle-replayable; this twin pins the SAME two-stage assign
     topology with md5-free deterministic seeds (the semdedup_cell_prune
@@ -1861,14 +1821,11 @@ def semdedup_prune_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     every operator gets a @query surface) run end-to-end on the fixture
     corpus: seeded spherical-k-means quantizer (K = N/target_cell),
     broadcast centroids, Arrow numpy assign, per-cell blocked prune —
-    operators/similarity.py:585. Emits the per-cell audit rollup (pure
+    operators/similarity.py::semdedup_prune. Emits the per-cell audit rollup (pure
     counts, deterministic given the seeded fit) rather than the per-row
     frame so the bench row stays small."""
     corpus = load_table(spark, "embeddings", sf_dir).select("vec_id", "embedding")
-    # eager: materialize + destroy the centroid broadcast before
-    # returning, so bench/probe loops over this query accumulate zero
-    # live broadcast blocks (operators/similarity.py lifecycle note)
-    out = S.semdedup_prune(corpus, threshold=0.4, target_cell=64, seed=42, eager=True)
+    out = S.semdedup_prune(corpus, threshold=0.4, target_cell=64, seed=42)
     return (
         out.groupBy("cell")
         .agg(

@@ -618,41 +618,6 @@ def _embedding_corpus(spark, n_vec: int, clustered: bool = False,
     return e
 
 
-def probe_fit_compare(spark, n_vec: int, target_cell: int, nprobe: int,
-                      n_queries: int, clustered: bool, n_clusters: int,
-                      noise: float = 0.15) -> dict:
-    """VERDICT r16 item 1 'done' gate: at corpus-scaled K past the
-    sampled fit's 500k collect cap, measure recall@5 + wall time for
-    fit_mode='sample' (starved pts/cell) vs 'distributed' (24/cell,
-    uncapped) through the full ann_ivf_knn two-level path."""
-    from energi_data_etl_spark.operators import similarity as S
-
-    e = _embedding_corpus(spark, n_vec, clustered, n_clusters, noise)
-    q = e.filter(F.col("vec_id") < n_queries)
-    k_centroids = max(32, n_vec // target_cell)
-    sampled_pts_per_cell = round(min(500_000, n_vec) / k_centroids, 1)
-    exact = {(r.query_id, r.neighbor_id) for r in S.exact_knn(q, e, k=5).collect()}
-    out: dict[str, dict] = {}
-    for mode in ("sample", "distributed"):
-        t0 = time.time()
-        got = {
-            (r.query_id, r.neighbor_id)
-            for r in S.ann_ivf_knn(
-                q, e, k=5, n_centroids=k_centroids, nprobe=nprobe,
-                corpus_count=n_vec, two_level=True, fit_mode=mode,
-            ).collect()
-        }
-        sec = round(time.time() - t0, 2)
-        recall = round(len(got & exact) / max(len(exact), 1), 3)
-        out[mode] = {"sec": sec, "recall": recall}
-        print(f"[fit {mode}] K={k_centroids} nprobe={nprobe} {sec}s recall {recall}",
-              flush=True)
-    e.unpersist()
-    return {"n_vec": n_vec, "k_centroids": k_centroids, "nprobe": nprobe,
-            "clustered": clustered, "noise": noise, "n_queries": n_queries,
-            "sampled_pts_per_cell": sampled_pts_per_cell, "modes": out}
-
-
 def probe_heavy_hitters(spark, ev_small: int, ev_big: int) -> dict:
     """VERDICT r16 item 3 (streaming-tier 10× screen): drain the
     SpaceSaving heavy-hitters stateful op at volume under both state
@@ -782,12 +747,10 @@ def main() -> int:
                     help="probe ann_ivf_knn single- vs two-level quantizer at corpus-scaled K")
     ap.add_argument("--ann-sweep", action="store_true",
                     help="IMI recall-vs-nprobe operating curve at corpus-scaled K")
-    ap.add_argument("--fit-compare", action="store_true",
-                    help="sampled vs distributed quantizer fit: recall + time at K past the 500k cap")
     ap.add_argument("--heavy-hitters", action="store_true",
                     help="drain the SpaceSaving stateful op at volume (heap vs RocksDB)")
     ap.add_argument("--clustered", action="store_true",
-                    help="use the mixture-of-Gaussians corpus for --fit-compare/--ann-sweep")
+                    help="use the mixture-of-Gaussians corpus for --ann-sweep")
     ap.add_argument("--n-clusters", type=int, default=1000,
                     help="mixture components for --clustered")
     ap.add_argument("--noise", type=float, default=0.15,
@@ -833,9 +796,6 @@ def main() -> int:
         result = probe_ann_sweep(spark, args.vecs, args.target_cell, nprobes, args.nq,
                                  clustered=args.clustered, n_clusters=args.n_clusters,
                                  noise=args.noise)
-    elif args.fit_compare:
-        result = probe_fit_compare(spark, args.vecs, args.target_cell, args.nprobe,
-                                   args.nq, args.clustered, args.n_clusters, args.noise)
     elif args.heavy_hitters:
         result = probe_heavy_hitters(spark, args.small, args.big)
     elif args.api_epochs:

@@ -123,3 +123,28 @@ def test_script_references_resolve():
             if not (root / "scripts" / m.group(1)).is_file():
                 dangling.append(f"{path.relative_to(root)}: {m.group(0)}")
     assert not dangling, dangling
+
+
+def test_program_code_cites_symbols_not_line_numbers():
+    """Program code cites other in-repo code by symbol
+    (`operators/similarity.py::semdedup_prune`), never as `path.py:<line>`:
+    a line number drifts with every edit above it and then points at the
+    wrong code. Citations of the reference's own batch script
+    (energy_etl.py:<line>) name a file outside this repo and are exempt."""
+    import re
+
+    root = Path(__file__).resolve().parents[1]
+    files = [
+        *(root / "energi_data_etl_spark").rglob("*.py"),
+        *(root / "scripts").glob("*.py"),
+        root / "bench.py",
+        root / "__spark_entry__.py",
+    ]
+    cited = [
+        f"{path.relative_to(root)}:{text.count(chr(10), 0, m.start()) + 1}: {m.group(0)}"
+        for path in files
+        for text in [path.read_text()]
+        for m in re.finditer(r"([\w/.]+\.py):\d+", text)
+        if Path(m.group(1)).name != "energy_etl.py"
+    ]
+    assert not cited, f"cite a symbol (path.py::name) instead of a line: {cited}"

@@ -419,24 +419,6 @@ def test_semdedup_prune_is_deterministic(spark):
     assert (r1["cell"].to_numpy() == r2["cell"].to_numpy()).all()
 
 
-def test_semdedup_prune_eager_mode_matches_lazy(spark):
-    """eager=True (materialize + destroy the centroid broadcast before
-    returning — the bounded-accumulation mode the @query surface uses)
-    must produce byte-identical decisions to the default lazy plan,
-    and the returned frame must remain collectible AFTER the broadcast
-    is destroyed (the destroy would throw at collect if the checkpoint
-    hadn't severed the dependency)."""
-    corpus = _planted_corpus(spark, 150, 15)
-    lazy = S.semdedup_prune(corpus, threshold=0.9, target_cell=64).toPandas().sort_values("vec_id")
-    eager = (
-        S.semdedup_prune(corpus, threshold=0.9, target_cell=64, eager=True)
-        .toPandas()
-        .sort_values("vec_id")
-    )
-    assert (lazy["pruned"].to_numpy() == eager["pruned"].to_numpy()).all()
-    assert (lazy["cell"].to_numpy() == eager["cell"].to_numpy()).all()
-
-
 def test_semdedup_two_level_twin_boundary_margins():
     """The semdedup_two_level_twin hash gate relies on both engines'
     sequential dot-product folds producing IEEE-identical values; that
@@ -507,14 +489,16 @@ def test_semdedup_two_level_twin_boundary_margins():
         assert pair_margin > 1e-8, f"sf{sf}: pair cosine within {pair_margin} of 0.4 cutoff"
 
 
-def test_semdedup_prune_two_level_quantizer(spark):
-    """The coarse x fine assign path (auto-on at K > 256, forced here)
-    must satisfy the same partition / recall / exactness contract as
-    single-level: identical-by-construction duplicates follow the same
-    quantization path through both levels, so same-cell recall holds."""
+def test_semdedup_prune_two_level_quantizer(spark, monkeypatch):
+    """The coarse x fine assign path (auto-on above TWO_LEVEL_MIN_CELLS,
+    forced here) must satisfy the same partition / recall / exactness
+    contract as single-level: identical-by-construction duplicates follow
+    the same quantization path through both levels, so same-cell recall
+    holds."""
+    monkeypatch.setattr(S, "TWO_LEVEL_MIN_CELLS", 0)
     n_base, n_dups = 400, 40
     corpus = _planted_corpus(spark, n_base, n_dups)
-    out = S.semdedup_prune(corpus, threshold=0.95, target_cell=64, two_level=True).toPandas()
+    out = S.semdedup_prune(corpus, threshold=0.95, target_cell=64).toPandas()
     assert len(out) == n_base + n_dups and out["vec_id"].is_unique
     dup_rows = out[out["vec_id"] >= n_base]
     assert int(dup_rows["pruned"].sum()) >= 0.9 * n_dups
@@ -618,21 +602,16 @@ def test_ann_imi_operating_point_floor(spark):
 # fit_centroids_distributed — the distributed quantizer fit (VERDICT r16 #1):
 # removes the 500k driver-collect cap that starved K > ~20k cells of fit
 # quality. These tests pin the selection rule, the fit's cluster recovery on
-# structured data, and end-to-end parity of the fit_mode="distributed" path
-# through ann_ivf_knn and semdedup_prune.
+# structured data, and end-to-end parity of the distributed path (forced by
+# lowering DISTRIBUTED_FIT_THRESHOLD) through ann_ivf_knn and semdedup_prune.
 # ---------------------------------------------------------------------------
 
 
 def test_use_distributed_fit_selection():
-    """Explicit mode wins; auto flips exactly where 24 pts/cell exceeds
-    the 500k sampled-fit collect cap (K > ~20.8k)."""
-    assert S._use_distributed_fit("sample", 10**9) is False
-    assert S._use_distributed_fit("distributed", 2) is True
-    assert S._use_distributed_fit(None, 16) is False
-    assert S._use_distributed_fit(None, 20_833) is False  # 24*K = 499,992
-    assert S._use_distributed_fit(None, 20_834) is True   # 24*K = 500,016
-    with pytest.raises(ValueError):
-        S._use_distributed_fit("bogus", 16)
+    """The fit flips exactly where 24 pts/cell exceeds the 500k
+    sampled-fit collect cap (K > ~20.8k)."""
+    assert S._use_distributed_fit(20_833) is False  # 24*K = 499,992
+    assert S._use_distributed_fit(20_834) is True   # 24*K = 500,016
 
 
 def _clustered_corpus(spark, n_clusters=8, per_cluster=250, dim=16, noise=0.15, seed=7):
@@ -695,40 +674,85 @@ def test_fit_centroids_distributed_two_level_shape_contract(spark):
             assert np.array_equal(Cf[ci, fi], Cf[ci, 0])
 
 
-def test_ann_ivf_distributed_fit_recall_matches_sampled(spark):
-    """fit_mode='distributed' through the full ann_ivf_knn path: same
+def test_ann_ivf_distributed_fit_recall_matches_sampled(spark, monkeypatch):
+    """The distributed fit through the full ann_ivf_knn path: same
     output contract, and recall vs exact within noise of the sampled
     fit on a clustered corpus (both quantizers recover the mixture)."""
     df, _ = _clustered_corpus(spark)
     q = df.filter(F.col("vec_id") % 250 < 2)  # 16 queries, 2 per cluster
     exact = {(r.query_id, r.neighbor_id) for r in S.exact_knn(q, df, k=5).collect()}
 
-    def recall(mode):
+    def recall():
         got = {
             (r.query_id, r.neighbor_id)
             for r in S.ann_ivf_knn(
-                q, df, k=5, n_centroids=8, nprobe=2, corpus_count=2000,
-                two_level=False, fit_mode=mode,
+                q, df, k=5, n_centroids=8, nprobe=2, corpus_count=2000, two_level=False,
             ).collect()
         }
         return len(got & exact) / len(exact)
 
-    r_sample, r_dist = recall("sample"), recall("distributed")
+    r_sample = recall()
+    monkeypatch.setattr(S, "DISTRIBUTED_FIT_THRESHOLD", 0)
+    r_dist = recall()
     assert r_dist >= 0.85, f"distributed-fit recall {r_dist}"
     assert r_dist >= r_sample - 0.1, f"distributed {r_dist} vs sampled {r_sample}"
 
 
-def test_semdedup_prune_distributed_fit_planted_recall(spark):
+def test_semdedup_prune_distributed_fit_planted_recall(spark, monkeypatch):
     """semdedup_prune with the distributed fit keeps the partition
     property and the planted-duplicate recall bar of the sampled path."""
+    monkeypatch.setattr(S, "DISTRIBUTED_FIT_THRESHOLD", 0)
     n_base, n_dups = 400, 40
     corpus = _planted_corpus(spark, n_base, n_dups)
-    out = S.semdedup_prune(
-        corpus, threshold=0.95, target_cell=64, fit_mode="distributed"
-    ).toPandas()
+    out = S.semdedup_prune(corpus, threshold=0.95, target_cell=64).toPandas()
     assert len(out) == n_base + n_dups
     assert out["vec_id"].is_unique
     dup_rows = out[out["vec_id"] >= n_base]
     assert int(dup_rows["pruned"].sum()) >= 0.9 * n_dups
     originals = out[out["vec_id"] < n_dups]
     assert int(originals["pruned"].sum()) == 0
+
+
+# ---------------------------------------------------------------------------
+# The one IVF quantizer: _fit_quantizer + _nearest_cell serve ann_ivf_knn
+# and semdedup_prune alike.
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("two_level", [False, True], ids=["one_level", "two_level"])
+def test_fit_quantizer_survives_zero_vector_in_sample(spark, two_level):
+    """A zero vector in the fit sample must not poison a centroid: an
+    unguarded normalisation turns it into a NaN row, whose NaN dot
+    products win every argmax, so one centroid goes NaN and every point
+    lands in that single cell."""
+    import numpy as np
+
+    rng = np.random.RandomState(3)
+    X = rng.randn(500, 16)
+    X[0] = 0.0
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in row]) for i, row in enumerate(X)], "vec_id long, embedding array<double>"
+    )
+    Q = S._fit_quantizer(df, 16, "embedding", 10_000, 10, 42, 500, two_level=two_level)
+    assert isinstance(Q, tuple) is two_level
+    for part in (Q[:2] if two_level else (Q,)):
+        assert np.isfinite(part).all()
+    assert len(np.unique(S._nearest_cell(S._unit_rows(X), Q))) > 1
+
+
+@pytest.mark.parametrize("min_cells", [256, 0], ids=["one_level", "two_level"])
+def test_semdedup_prune_cells_are_shared_kernel_of_shared_fit(spark, monkeypatch, min_cells):
+    """semdedup_prune's `cell` column is `_nearest_cell` applied to
+    `_fit_quantizer` with the operator's own fit arguments — one
+    quantizer for both IVF operators, at one and at two levels."""
+    import numpy as np
+
+    monkeypatch.setattr(S, "TWO_LEVEL_MIN_CELLS", min_cells)
+    corpus = _planted_corpus(spark, 400, 40)
+    out = S.semdedup_prune(corpus, threshold=0.95, target_cell=64).toPandas().sort_values("vec_id")
+    Q = S._fit_quantizer(corpus, 32, "embedding", 20_000, 5, 42, 440)  # K = max(32, 440 // 64)
+    assert isinstance(Q, tuple) is (min_cells == 0)
+    rows = sorted(corpus.collect())
+    X = S._unit_rows(np.array([r.embedding for r in rows], dtype=np.float64))
+    assert [r.vec_id for r in rows] == out["vec_id"].tolist()
+    assert (S._nearest_cell(X, Q) == out["cell"].to_numpy()).all()
