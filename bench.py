@@ -6,7 +6,7 @@ default) and runs on local[$SPARK_GRAFT_CPUS].
     python bench.py NAME [NAME ...] [--n 3] [--plans DIR]   # isolated
     python bench.py --aggregate OUT RUN.json [RUN.json ...]
 
-Suite mode times every declared bench query and prints TWO JSON lines:
+Suite mode times every declared query and prints TWO JSON lines:
 the per-query detail line first, then the compact aggregate
 (declared_query_suite_total). Isolated mode times only the named
 queries, N warm runs each, and prints the per-query min plus all runs;
@@ -152,43 +152,18 @@ def _warm_up(spark, queries, sf_dir: str) -> None:
     warm_dir = os.path.join(os.path.dirname(os.path.normpath(sf_dir)), "sf0.001")
     if not os.path.isdir(warm_dir):
         warm_dir = sf_dir
-    # flagship warms the JVM/codegen path, grouped_median_udaf spawns the
-    # Python/Arrow worker pool (otherwise whichever Python-path query
-    # happens to run first in catalog order absorbs the pool cold-start —
-    # r06 saw a phantom 3x "regression" from exactly that after a
-    # rotation reorder).
-    _materialize(queries["flagship_daily_avg"].fn(spark, warm_dir))
-    _materialize(queries["grouped_median_udaf"].fn(spark, warm_dir))
-    # two more one-time paths that otherwise tax whichever query runs
-    # them first in catalog order (r07 saw phantom 6x/2.3x "regressions"
-    # when the FIRST_50 rotation moved their owners to cold positions;
-    # isolated re-runs were at r06 levels): the regex tokenizer's
-    # codegen/JIT (token_count over text) and the localCheckpoint +
-    # range-exchange machinery. Warmed at sf0.001 they cost ~0.3 s each.
-    _materialize(queries["token_budget_packing"].fn(spark, warm_dir))
-    _materialize(queries["global_row_index"].fn(spark, warm_dir))
-    # Structured Streaming engine init (micro-batch planner, state-store
-    # machinery): the r08 window rotation put seven streaming queries at
-    # catalog positions 1-7, where the first one absorbed ~3 s of
-    # one-time init (isolated re-runs at r07 levels). One tiny bounded
-    # stream at sf0.001 pays it here instead.
-    _materialize(queries["streaming_tumbling_daily"].fn(spark, warm_dir))
-    # ...and the Python DataSource reader machinery (interpreter worker
-    # spin-up per micro-batch), which the api_source_* trio at window
-    # positions 1-7 otherwise pays first.
-    _materialize(queries["api_source_daily_rollup"].fn(spark, warm_dir))
-    # Cold-position guard (VERDICT r12 item 6): two rounds running,
-    # queries newly promoted to suite positions 1-3 by the rotation
-    # showed 2x "regressions" that vanished on isolated re-run — pure
-    # suite-head cold-start (scheduler/codegen/page-cache). Warm the
-    # head of the rotation itself, untimed, at sf0.001 so position
-    # moves stop reading as per-query drift in the aggregated medians.
-    for _name, _q in list(queries.items())[:4]:
-        if _q.bench:
-            try:
-                _materialize(_q.fn(spark, warm_dir))
-            except Exception as exc:  # noqa: BLE001 — warmup must never kill the run
-                print(f"warmup failed for {_name}: {exc}", file=sys.stderr)
+    # One-time costs that would otherwise land on whichever query meets
+    # them first (phantom 2-6x slowdowns that vanish on isolated re-run),
+    # in order: JVM/codegen, the Python/Arrow worker pool, the regex
+    # tokenizer's JIT, localCheckpoint + range exchange (~0.3 s each),
+    # Structured Streaming init (~3 s) and the Python DataSource reader.
+    # Last, the catalog head: the suite's first queries run cold whatever
+    # they are (sf0.1, 4 cores: up to 1.7-3.0x the r18 reference medians
+    # in three suites without this, at most 1.55x in two with it).
+    for name in ("flagship_daily_avg", "grouped_median_udaf", "token_budget_packing",
+                 "global_row_index", "streaming_tumbling_daily", "api_source_daily_rollup",
+                 *list(queries)[:4]):
+        _materialize(queries[name].fn(spark, warm_dir))
 
 
 def _suite(spark, queries, sf_dir: str) -> int:
@@ -196,8 +171,6 @@ def _suite(spark, queries, sf_dir: str) -> int:
     sf = float(m.group(1).rstrip(".")) if m else -1.0
     timings: dict[str, float] = {}
     for name, q in queries.items():
-        if not q.bench:
-            continue
         t0 = time.perf_counter()
         try:
             _materialize(q.fn(spark, sf_dir))

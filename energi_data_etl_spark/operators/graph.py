@@ -27,9 +27,10 @@ def connected_components(pairs: DataFrame, a: str = "a", b: str = "b", max_iter:
 
     Returns (id, component) where component = min vertex id reachable.
     Deterministic. Each iteration: label(v) ← min(label(v),
-    min_{u∈N(v)} label(u)); stop when no label changed (or max_iter,
-    which bounds cost on adversarial chains — 2^max_iter diameter
-    coverage is ample for dedup graphs).
+    min_{u∈N(v)} label(u)); stop when no label changed or after
+    max_iter rounds. Labels move ONE hop per round, so coverage is
+    max_iter hops: a wider component comes back split, without warning
+    (a 30-node path gives 10 components at the default max_iter=20).
 
     Driver-sync budget: exactly ONE action per iteration. The `__changed`
     flag rides inside the label frame through a LAZY localCheckpoint,

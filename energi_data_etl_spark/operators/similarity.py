@@ -57,6 +57,11 @@ DISTRIBUTED_FIT_THRESHOLD = 500_000
 TWO_LEVEL_MIN_CELLS = 256
 
 
+#: Floor under every L2 norm divided by: a zero vector normalises to zero
+#: (cosine 0) instead of raising DIVIDE_BY_ZERO; other norms are unchanged.
+NORM_FLOOR = 1e-12
+
+
 def _use_distributed_fit(n_centroids: int) -> bool:
     """True where the sampled fit's per-cell floor collides with its
     driver-collect cap (K > ~20.8k cells)."""
@@ -67,7 +72,7 @@ def _unit_rows(X):
     """Row-normalized copy of a float64 (n, d) array; zero rows stay zero."""
     import numpy as np
 
-    return X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    return X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), NORM_FLOOR)
 
 
 def _two_level_shape(n_centroids: int) -> tuple[int, int]:
@@ -110,8 +115,12 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")))
 
 
+def _floored_norm(a: Column) -> Column:
+    return F.greatest(l2_norm(a), F.lit(NORM_FLOOR))
+
+
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+    return dot(a, b) / (_floored_norm(a) * _floored_norm(b))
 
 
 def unit_vector(a: Column) -> Column:
@@ -126,10 +135,10 @@ def unit_vector(a: Column) -> Column:
     l2_norm(a))`` re-evaluates the O(d) fold per ELEMENT — O(d²) per
     vector. Binding it as an outer lambda variable keeps the exact same
     fold (same summation order, bit-identical quotients) evaluated
-    exactly once."""
+    exactly once. A zero vector stays zero (NORM_FLOOR)."""
     return F.element_at(
         F.transform(
-            F.array(l2_norm(a)),
+            F.array(_floored_norm(a)),
             lambda n: F.transform(a, lambda x: x.cast("double") / n),
         ),
         1,

@@ -22,7 +22,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["Query", "QUERIES", "query", "spark_queries", "oracle_sqls"]
+__all__ = ["Query", "QUERIES", "query", "oracle_sqls"]
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -34,26 +34,21 @@ class Query:
     oracle: str | None  # DuckDB SQL; None → driver records rows-only check
     tier: str  # SURVEY.md §2 operator ids this query certifies, e.g. "A1+P5"
     doc: str = ""
-    bench: bool = True  # include in bench.py headline set
 
 
 QUERIES: dict[str, Query] = {}
 
 
-def query(name: str, *, oracle: str | None, tier: str, doc: str = "", bench: bool = True):
+def query(name: str, *, oracle: str | None, tier: str, doc: str = ""):
     """Decorator registering a Spark query (and its DuckDB oracle twin)."""
 
     def deco(fn: SparkQuery) -> SparkQuery:
         if name in QUERIES:
             raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = Query(name=name, fn=fn, oracle=oracle, tier=tier, doc=doc or (fn.__doc__ or ""), bench=bench)
+        QUERIES[name] = Query(name=name, fn=fn, oracle=oracle, tier=tier, doc=doc or (fn.__doc__ or ""))
         return fn
 
     return deco
-
-
-def spark_queries() -> dict[str, SparkQuery]:
-    return {name: q.fn for name, q in QUERIES.items()}
 
 
 def oracle_sqls() -> dict[str, str]:

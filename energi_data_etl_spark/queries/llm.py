@@ -98,7 +98,6 @@ def dedup_bag_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                TRUE                                     AS recall_ok
         FROM pairs
     """,
-    bench=True,
 )
 def neardup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup with a driver-checkable verdict (VERDICT r07

@@ -738,7 +738,6 @@ def time_weighted_average_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY event_type, h
         ORDER BY event_type, h
     """,
-    bench=True,
 )
 def ohlc_hourly_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OHLC resampling — the canonical irregular→regular downsample

@@ -5,7 +5,8 @@ schema, WRITE_APPEND, and a utcnow() audit column
 (scripts/energy_etl.py:86-111). The engine's durable store is
 date-partitioned Parquet: append mode gives the same incremental
 semantics, the partition column makes the watermark query (A2/T1) a
-metadata operation, and downstream date filters become partition
+MAX over partition values (one task per date partition, see
+`latest_watermark`), and downstream date filters become partition
 pruning — the layout decision that matters most at 100 TB (SURVEY §4.3).
 """
 
@@ -73,8 +74,9 @@ def write_bucketed_table(
 
 def latest_watermark(spark: SparkSession, path: str, col: str = "date"):
     """MAX(partition column) — the reference's watermark query (:22-37).
-    On a partitioned table this reads ONLY partition metadata (partition
-    pruning gives an empty scan per partition), not the data files.
+    It is not a metadata-only read: it runs Spark jobs with one task per
+    date partition, decoding only the partition column (perfbench `etl`,
+    seed 1: 1.07 s of a 2.50 s one-day `run_incremental`).
     Returns None on empty/missing table (reference's cold-start fallback
     path, :42-46)."""
     try:

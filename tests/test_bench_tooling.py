@@ -148,3 +148,25 @@ def test_program_code_cites_symbols_not_line_numbers():
         if Path(m.group(1)).name != "energy_etl.py"
     ]
     assert not cited, f"cite a symbol (path.py::name) instead of a line: {cited}"
+
+
+def test_package_reads_no_round_artifact():
+    """The package behaves the same whatever round artifacts
+    (CORRECTNESS_r*.json, BENCH_r*.json, ...) sit at the repo root: no
+    string literal in its code names one, so nothing can glob or open
+    them. Docstrings may cite one as evidence (`PROBES_r14.json`)."""
+    import ast
+    import re
+
+    artifact = re.compile(r"\b[A-Z][A-Z0-9_]*_r(?:\d+|\*)[\w*]*\.json\b")
+    scopes = (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+    found = []
+    for path in (Path(__file__).resolve().parents[1] / "energi_data_etl_spark").rglob("*.py"):
+        tree = ast.parse(path.read_text())
+        docs = {id(n.body[0].value) for n in ast.walk(tree) if isinstance(n, scopes) and ast.get_docstring(n, False)}
+        found += [
+            f"{path.name}:{n.lineno}: {n.value!r}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Constant) and isinstance(n.value, str) and id(n) not in docs and artifact.search(n.value)
+        ]
+    assert not found, f"program code names a round artifact: {found}"

@@ -756,3 +756,23 @@ def test_semdedup_prune_cells_are_shared_kernel_of_shared_fit(spark, monkeypatch
     X = S._unit_rows(np.array([r.embedding for r in rows], dtype=np.float64))
     assert [r.vec_id for r in rows] == out["vec_id"].tolist()
     assert (S._nearest_cell(X, Q) == out["cell"].to_numpy()).all()
+
+
+@pytest.mark.parametrize("op", ["exact_knn", "ann_ivf_knn", "ann_lsh_knn"])
+def test_knn_scores_zero_vector_as_zero(spark, op):
+    """One all-zero embedding neither aborts the query (ANSI
+    DIVIDE_BY_ZERO on its norm) nor changes other scores; it scores 0 as
+    query and as neighbour. LSH may fill fewer than k slots per query."""
+    import numpy as np
+
+    X = np.random.RandomState(11).randn(200, 8)
+    X[5] = 0.0
+    e = spark.createDataFrame([(i, row.tolist()) for i, row in enumerate(X)], "vec_id long, embedding array<double>")
+    kw = {"dim": 8} if op == "ann_lsh_knn" else {}
+    rows = getattr(S, op)(e.filter(F.col("vec_id") < 10), e, k=5, **kw).collect()
+    unit = S._unit_rows(X)
+    for r in rows:
+        assert r.cos_sim == pytest.approx(unit[r.query_id] @ unit[r.neighbor_id], abs=1e-4), r
+    assert {r.cos_sim for r in rows if 5 in (r.query_id, r.neighbor_id)} == {0.0}
+    counts = np.bincount([r.query_id for r in rows], minlength=10)
+    assert (counts == 5).all() or (op == "ann_lsh_knn" and counts[5] > 0), counts

@@ -39,120 +39,20 @@ def test_rows_only_query_runs(spark, oracle_sf_dir, name):
     assert len(df.columns) > 0
 
 
-# The driver certifies the FIRST 50 queries in registration order each
-# round; queries/__init__.py computes the round's window (FIRST_50)
-# from the committed CORRECTNESS_r*.json ledger — self-executing as of
-# r11 — and reorders the registry to match. Assert the registry agrees
-# so an accidental import reshuffle or catalog insertion doesn't
-# silently change which queries get certified (ADVICE r03). Changing
-# the rotation ON PURPOSE = edit PRIORITY in queries/__init__.py.
+def test_catalog_order_is_registration_order():
+    """QUERIES is a plain registry: one contiguous run per query module,
+    the runs in queries/__init__.py's import order. A module registered
+    by another module's import, or any reorder after import, breaks it."""
+    import itertools
+    import re
 
+    import energi_data_etl_spark.queries as pkg
 
-def test_first_50_registration_order_pinned():
-    from energi_data_etl_spark.queries import FIRST_50
-
-    assert list(QUERIES)[:50] == FIRST_50
-
-
-def test_first_50_window_invariants():
-    from energi_data_etl_spark.queries import CANARY, FIRST_50
-
-    assert len(FIRST_50) == len(set(FIRST_50)) == 50
-    assert FIRST_50[0] == CANARY
-    # oracled-only: a rows-only query would burn a slot on err:no_oracle
-    assert all(QUERIES[n].oracle is not None for n in FIRST_50)
-
-
-def test_compute_first_50_selection_rules():
-    """The pure selection rule on synthetic ledgers: never-certified in
-    PRIORITY order first, then plan-changed RECERT entries, then
-    stalest-first fill; failed (non-green) rows stay in the pool and
-    are retried next round."""
-    from energi_data_etl_spark.queries import CANARY, PRIORITY, RECERT, compute_first_50
-
-    oracled = [n for n, q in QUERIES.items() if q.oracle is not None]
-    # empty ledger -> canary + first 49 of PRIORITY (all never-certified)
-    w = compute_first_50({})
-    assert w[0] == CANARY and w[1:] == PRIORITY[:49]
-    # everything green at round 5 except two PRIORITY members -> those
-    # two lead the body; RECERT members green at r5 (<= their rewrite
-    # round) slot next; then the stalest fill in registration order
-    never = [PRIORITY[3], PRIORITY[7]]
-    green = {n: 5 for n in oracled if n not in never}
-    w = compute_first_50(green)
-    assert w[:3] == [CANARY, PRIORITY[3], PRIORITY[7]]
-    due_recert = [n for n in RECERT if n in green and green[n] <= RECERT[n]]
-    assert w[3 : 3 + len(due_recert)] == due_recert
-    reg = [n for n in QUERIES if n in green and n != CANARY and n not in due_recert]
-    assert w[3 + len(due_recert) :] == reg[: 47 - len(due_recert)]
-    # staleness ordering: one query last-green r2 jumps ahead of r5 rows
-    # (but stays behind the RECERT tier)
-    green2 = dict(green)
-    stale_name = reg[40]
-    green2[stale_name] = 2
-    w2 = compute_first_50(green2)
-    assert w2[3 + len(due_recert)] == stale_name
-
-
-def test_recert_entries_are_registered_oracled_queries():
-    """compute_first_50 silently skips RECERT names that aren't
-    registered oracled queries — correct for robustness, but it means a
-    TYPO'd entry would never put the rewritten plan in front of the
-    driver. Pin every entry to a real, oracled query."""
-    from energi_data_etl_spark.queries import RECERT
-
-    for name in RECERT:
-        assert name in QUERIES, f"RECERT entry {name!r} is not a registered query"
-        assert QUERIES[name].oracle is not None, f"RECERT entry {name!r} has no oracle"
-
-
-def test_recert_tier_drops_out_once_recertified():
-    """A RECERT entry green in a round LATER than its rewrite round is
-    no longer selected ahead of staleness (the tier self-empties).
-    Exercised with a synthetic RECERT dict — the live one is empty
-    whenever there is no plan-rewrite backlog (r16 cleared all six)."""
-    from energi_data_etl_spark.queries import CANARY, compute_first_50
-
-    oracled = [n for n, q in QUERIES.items() if q.oracle is not None]
-    name, changed = "join_star_revenue", 15
-    synth_recert = {name: changed}
-    # all green at changed+1 -> nothing never-certified, nothing due
-    green = {n: changed + 1 for n in oracled}
-    w = compute_first_50(green, recert=synth_recert)
-    assert w[0] == CANARY
-    # the recert entry appears only at its registration-order stale slot,
-    # not at the head of the body
-    reg = [n for n in QUERIES if n != CANARY and n in green]
-    assert w[1:] == reg[:49]
-    # green exactly AT the rewrite round -> due (plan never met driver)
-    green_due = dict(green)
-    green_due[name] = changed
-    w_due = compute_first_50(green_due, recert=synth_recert)
-    assert w_due[1] == name
-
-
-def test_certified_rounds_latest_row_wins():
-    """VERDICT r16 item 8: a green row followed by a LATER error row
-    de-certifies the query (it re-enters the never-certified tier); a
-    later green row re-certifies at the new round."""
-    from energi_data_etl_spark.queries import certified_rounds
-
-    ok = {"rows_match": True, "schema_match": True, "hash_match": True}
-    bad = {"rows_match": True, "schema_match": True, "hash_match": False}
-    ledgers = [
-        (5, {"a": ok, "b": ok, "c": bad}),
-        (8, {"a": bad, "c": ok}),
-    ]
-    green = certified_rounds(ledgers=ledgers)
-    # a: green r5 then err r8 -> never-certified (latest row wins)
-    assert "a" not in green
-    # b: green r5, untouched since -> certified at 5
-    assert green["b"] == 5
-    # c: err r5 then green r8 -> certified at 8
-    assert green["c"] == 8
-    # out-of-order delivery must not change the verdict
-    green_rev = certified_rounds(ledgers=list(reversed(ledgers)))
-    assert green_rev == green
+    imported = re.findall(r"^from \. import (\w+)", open(pkg.__file__, encoding="utf-8").read(), re.M)
+    runs = [m.rsplit(".", 1)[1] for m, _ in itertools.groupby(q.fn.__module__ for q in QUERIES.values())]
+    assert len(runs) == len(set(runs)), f"a module's queries are split: {runs}"
+    assert runs == [m for m in imported if m in runs], f"runs {runs} != import order {imported}"
+    assert list(QUERIES)[0] == "dashboard_cards"
 
 
 def test_entry_smoke(spark, sf_dir):
@@ -189,37 +89,3 @@ def test_readme_counts_match_registry():
     correctness = re.search(r"(\d+) of (\d+) declared queries carry", readme)
     assert correctness, "README Correctness section lost its 'M of N declared queries' line"
     assert (int(correctness.group(1)), int(correctness.group(2))) == (m, n)
-
-
-def test_never_certified_queries_head_the_live_window():
-    """Live-ledger invariant (not a synthetic one): every oracled query
-    with NO green row in any committed CORRECTNESS_r*.json must sit
-    inside the actual FIRST_50 — a new query that misses the window
-    stays uncertified for a full round with no error anywhere. Holds
-    trivially while the never-certified set is < 50; if a session ever
-    lands 50+ new queries at once this fails loudly instead of
-    silently deferring certification."""
-    import glob
-    import json
-
-    from energi_data_etl_spark.queries import FIRST_50
-
-    green = set()
-    for path in glob.glob("CORRECTNESS_r*.json"):
-        try:
-            data = json.load(open(path))
-        except Exception:
-            continue
-        rows = data.get("queries", data) if isinstance(data, dict) else {}
-        for name, row in (rows or {}).items():
-            if isinstance(row, dict) and row.get("rows_match") and row.get("hash_match", True):
-                green.add(name)
-    never = [n for n, q in QUERIES.items() if q.oracle is not None and n not in green]
-    # ADVICE r14: the old `if len(never) <= 49` guard silently PASSED in
-    # the exact scenario this test exists for — fail loudly instead.
-    assert len(never) <= 49, (
-        f"{len(never)} never-certified queries cannot all fit the 50-slot window "
-        "(land fewer new queries per session, or stage them across rounds)"
-    )
-    missing = [n for n in never if n not in FIRST_50]
-    assert not missing, f"never-certified queries outside the window: {missing}"
