@@ -136,7 +136,6 @@ def lsh_candidate_pairs(
     bands: int = 16,
     rows: int = 4,
     max_bucket_size: int | None = 256,
-    log_dropped: bool = False,
 ) -> DataFrame:
     """LSH banding: docs agreeing on ALL rows of ≥1 band become a
     candidate pair. Returns distinct (a, b) with a < b.
@@ -157,9 +156,7 @@ def lsh_candidate_pairs(
     see tests/test_dedup_guardrails.py) is genuinely sacrificed for
     boundedness — the standard big-corpus call, made visible here via
     `lsh_bucket_stats` before committing to a cap on a new corpus.
-    `max_bucket_size=None` disables the cap; `log_dropped=True` runs an
-    eager count of discarded buckets (a deliberate extra action — keep
-    it off in lazy pipelines, use `lsh_bucket_stats` for audits).
+    `max_bucket_size=None` disables the cap. No action runs here.
 
     Plan shape with the cap on: `banded` is persisted (it feeds the
     sizes groupBy AND both sides of the pair join — unpersisted, the
@@ -174,16 +171,6 @@ def lsh_candidate_pairs(
         banded = banded.localCheckpoint(eager=False)
         sizes = banded.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("__n"))
         dropped_keys = sizes.filter(F.col("__n") > max_bucket_size)
-        if log_dropped:
-            import logging
-
-            dropped = dropped_keys.agg(
-                F.count(F.lit(1)).alias("buckets"), F.coalesce(F.sum("__n"), F.lit(0)).alias("members")
-            ).first()
-            logging.getLogger(__name__).warning(
-                "lsh_candidate_pairs: dropping %d mega-buckets (%d member rows) over cap %d",
-                dropped["buckets"], dropped["members"], max_bucket_size,
-            )
         banded = banded.join(
             F.broadcast(dropped_keys.select("band", "bucket")), ["band", "bucket"], "left_anti"
         )

@@ -30,7 +30,6 @@ __all__ = [
     "unit_vector",
     "exact_knn",
     "neardup_pairs_matmul",
-    "hyperplane_buckets",
     "ann_lsh_knn",
     "ann_lsh_bucket_stats",
     "ann_ivf_knn",
@@ -772,41 +771,14 @@ def ann_ivf_knn(
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
-    """Deterministic Gaussian hyperplanes (Box–Muller on seeded PRNG) —
-    no numpy dependency on executors; planes ship as literals."""
+    """Deterministic Gaussian hyperplanes (Box–Muller on seeded PRNG):
+    the same planes on every executor for the same (dim, seed)."""
     rng = random.Random(seed)
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def hyperplane_buckets(
-    df: DataFrame, vec_col: str = "embedding", dim: int = 64, n_planes: int = 8, seed: int = 42
-) -> DataFrame:
-    """Sign-random-projection LSH bucket id (0..2^n_planes-1) as a pure
-    projection. Cosine-similar vectors collide with prob 1 - θ/π per
-    plane.
-
-    CAPPED at n_planes*dim <= 1024 literal floats: each plane ships as a
-    literal array expression, and big literal-array plans are the
-    measured Catalyst-compile blowup documented in CLAUDE.md (30 s+ of
-    planning for 36 planes x 64 dims). For anything larger use the
-    broadcast-numpy `_multi_buckets` path (one matmul per Arrow batch),
-    which `ann_lsh_knn` already uses."""
-    if n_planes * dim > 1024:
-        raise ValueError(
-            f"hyperplane_buckets ships {n_planes}x{dim} literal floats into the plan; "
-            "above 1024 this blows up Catalyst compile time — use the broadcast-numpy "
-            "_multi_buckets path (see ann_lsh_knn) instead."
-        )
-    planes = _hyperplanes(dim, n_planes, seed)
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        proj = dot(F.col(vec_col), F.array(*[F.lit(v) for v in plane]))
-        bucket = bucket + F.when(proj > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(F.lit(0).cast("long"))
-    return df.withColumn("bucket", bucket)
-
-
 def _multi_buckets(
-    df: DataFrame, id_name: str, vec_name: str, dim: int, n_tables: int, n_planes: int, seed: int
+    df: DataFrame, id_name: str, vec_name: str, n_tables: int, n_planes: int, seed: int
 ) -> DataFrame:
     """(table, bucket) pairs for L independent hyperplane tables —
     OR-amplification: a near pair only needs to collide in ONE table.
@@ -815,26 +787,29 @@ def _multi_buckets(
     stacked into a (L·p × d) matrix, sign bits packed per table).
     A pure-expression formulation needs L·p literal plane arrays in the
     plan — measured to blow up Catalyst compile time (30 s+ of planning
-    for 36 planes), so the vectorized kernel wins twice here.
+    for 36 planes), so the vectorized kernel wins twice here. The
+    kernel draws the planes itself, for the width d of the vectors it
+    sees, once per task and width.
     """
     import numpy as np
 
-    planes = np.array(
-        [row for t in range(n_tables) for row in _hyperplanes(dim, n_planes, seed + 1000 * t)],
-        dtype=np.float64,
-    )  # (L·p, d)
-    b_planes = df.sparkSession.sparkContext.broadcast(planes)
     weights = (1 << np.arange(n_planes)).astype(np.int64)
 
     def bucketize(batches):
         import pandas as pd
 
-        P = b_planes.value
+        planes: dict = {}  # width → (L·p, d) stacked planes
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             vecs = np.array(list(pdf[vec_name]), dtype=np.float64)  # (n, d)
-            bits = (vecs @ P.T) > 0  # (n, L·p)
+            d = vecs.shape[1]
+            if d not in planes:
+                planes[d] = np.array(
+                    [row for t in range(n_tables) for row in _hyperplanes(d, n_planes, seed + 1000 * t)],
+                    dtype=np.float64,
+                )
+            bits = (vecs @ planes[d].T) > 0  # (n, L·p)
             out = []
             for t in range(n_tables):
                 buckets = bits[:, t * n_planes : (t + 1) * n_planes] @ weights  # (n,)
@@ -875,7 +850,6 @@ def ann_lsh_bucket_stats(
     corpus: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
     n_tables: int = 12,
     n_planes: int = 3,
     seed: int = 42,
@@ -889,7 +863,7 @@ def ann_lsh_bucket_stats(
     to a cap on a new embedding distribution."""
     cb = _multi_buckets(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")),
-        "neighbor_id", "__cv", dim, n_tables, n_planes, seed,
+        "neighbor_id", "__cv", n_tables, n_planes, seed,
     )
     sizes = cb.groupBy("table", "bucket").agg(F.count(F.lit(1)).alias("n_members"))
     return _mega_bucket_caps(sizes, max_bucket_frac, min_bucket_cap)
@@ -901,7 +875,6 @@ def ann_lsh_knn(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
     n_tables: int = 12,
     n_planes: int = 3,
     seed: int = 42,
@@ -938,11 +911,11 @@ def ann_lsh_knn(
     # -> 13.7 s on the 250k-corpus LSH path (BASELINE round-15b)
     qb = _multi_buckets(
         queries.select(F.col(id_col).alias("query_id"), unit_vector(F.col(vec_col)).alias("__qv")),
-        "query_id", "__qv", dim, n_tables, n_planes, seed,
+        "query_id", "__qv", n_tables, n_planes, seed,
     )
     cb = _multi_buckets(
         corpus.select(F.col(id_col).alias("neighbor_id"), unit_vector(F.col(vec_col)).alias("__cv")),
-        "neighbor_id", "__cv", dim, n_tables, n_planes, seed,
+        "neighbor_id", "__cv", n_tables, n_planes, seed,
     )
     if max_bucket_frac is not None:
         # cb feeds the sizes groupBy AND the candidate join: persist, or

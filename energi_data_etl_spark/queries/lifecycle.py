@@ -119,7 +119,7 @@ _API_ZONES = ("SE1", "SE2", "SE3", "SE4")
 
 def _write_api_fixtures(start, end, repeat: int = 1) -> str:
     """Lay per-day JSON fixtures out exactly like the API URL space
-    ({year}/{month:02d}-{day:02d}_{zone}.json), with the lifecycle
+    (`ApiConfig.at(root).url`), with the lifecycle
     fixture's exact-arithmetic hourly prices (zi*1000 + day_no*10 +
     hour) so oracles re-derive every value in closed form. Returns the
     fixture root.
@@ -133,6 +133,8 @@ def _write_api_fixtures(start, end, repeat: int = 1) -> str:
     import os
     import tempfile
 
+    from ..sources.http_json import ApiConfig
+
     # repeat>1 models an at-least-once upstream (each hourly record
     # delivered `repeat` times) for the stateful-dedup certification;
     # the suffix keeps the deterministic roots disjoint per variant
@@ -140,11 +142,10 @@ def _write_api_fixtures(start, end, repeat: int = 1) -> str:
     base = os.path.join(
         tempfile.gettempdir(), f"api_src_{start.isoformat()}_{end.isoformat()}{suffix}"
     )
+    docs = ApiConfig.at(base)
     day = start
     while day <= end:
         day_no = (day - datetime.date(2024, 1, 1)).days
-        fdir = f"{base}/{day.year}"
-        os.makedirs(fdir, exist_ok=True)
         for zi, zone in enumerate(_API_ZONES, start=1):
             recs = [
                 {
@@ -161,7 +162,8 @@ def _write_api_fixtures(start, end, repeat: int = 1) -> str:
             # dump could expose a half-written file to another reader —
             # write to a unique temp name and os.replace() into place
             # (ADVICE r06)
-            final = f"{fdir}/{day.month:02d}-{day.day:02d}_{zone}.json"
+            final = docs.url(zone, day)
+            os.makedirs(os.path.dirname(final), exist_ok=True)
             tmp = f"{final}.{os.getpid()}.tmp"
             with open(tmp, "w") as f:
                 json.dump(recs * repeat, f)

@@ -18,21 +18,24 @@ tasks with per-task retry (the reference's 3×5 s budget, :61-78) —
 and the source composes with every downstream DataFrame op, checkpoint,
 and AQE decision like any built-in format.
 
-Offline contract: the container has no network, so the test path reads
-the same per-day JSON documents from a `fixture_dir` laid out exactly
-like the API URL space ({year}/{month:02d}-{day:02d}_{zone}.json);
-the HTTP branch reuses the identical parse, so fixture replay
-certifies everything but the socket (SURVEY §2.1 "tested via fixture
-replay").
+It is a thin adapter over `sources/http_json.py`, the one API client:
+the reader's string options become an `ApiConfig`, whose `url`
+formats the zone-day document path for both branches — the HTTP
+branch (`get_json` under `with_retry`, headers from `ApiConfig.headers`)
+and the offline branch, which reads the same documents from a
+`fixture_dir` laid out exactly like the API URL space (the container
+has no network; SURVEY §2.1 "tested via fixture replay"). Batch and
+stream readers yield the same Arrow batch of `PRICES_SCHEMA` rows, and
+both uplink writers write their documents with `write_document`.
 """
 
 from __future__ import annotations
 
 import json
-from contextlib import contextmanager
 from dataclasses import dataclass
 from datetime import date as Date
 from datetime import timedelta
+from functools import partial
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -41,17 +44,28 @@ from pyspark.sql.datasource import (
     DataSourceStreamWriter,
     DataSourceWriter,
     InputPartition,
-    WriterCommitMessage,
 )
 
-from .http_json import DEFAULT_URL_TEMPLATE, DEFAULT_ZONES, with_retry
-
-#: the schema every partition yields — matches http_json.LANDING_SCHEMA
-#: minus the free-form passthrough fields the API never populates
-PRICES_SCHEMA = (
-    "zone string, date date, SEK_per_kWh double, EUR_per_kWh double, "
-    "EXR double, time_start string, time_end string"
+from .http_json import (
+    DEFAULT_URL_TEMPLATE,
+    DEFAULT_ZONES,
+    PRICES_SCHEMA,
+    ApiConfig,
+    UplinkCommit,
+    get_json,
+    with_retry,
+    write_document,
 )
+
+#: Arrow type of each `PRICES_SCHEMA` column type
+_ARROW_TYPES = {"string": "string", "date": "date32", "double": "float64"}
+
+
+def _arrow_schema():
+    import pyarrow as pa
+
+    cols = (c.split() for c in PRICES_SCHEMA.split(","))
+    return pa.schema([(name, getattr(pa, _ARROW_TYPES[kind])()) for name, kind in cols])
 
 
 @dataclass
@@ -66,10 +80,16 @@ class EnergiPricesReader(DataSourceReader):
         self.end = Date.fromisoformat(options["end"])
         self.zones = tuple(z.strip() for z in options.get("zones", ",".join(DEFAULT_ZONES)).split(","))
         self.fixture_dir = options.get("fixture_dir")
-        self.url_template = options.get("url_template", DEFAULT_URL_TEMPLATE)
-        self.api_token = options.get("api_token")
-        self.num_retries = int(options.get("num_retries", "3"))
-        self.retry_sleep_s = float(options.get("retry_sleep_s", "5"))
+        fields = {
+            "num_retries": int(options.get("num_retries", "3")),
+            "retry_sleep_s": float(options.get("retry_sleep_s", "5")),
+            "api_token": options.get("api_token"),
+        }
+        self.config = (
+            ApiConfig.at(self.fixture_dir, **fields)
+            if self.fixture_dir is not None
+            else ApiConfig(url_template=options.get("url_template", DEFAULT_URL_TEMPLATE), **fields)
+        )
         #: tolerate days the API hasn't published yet (404 / missing
         #: fixture) by yielding zero rows for that partition instead of
         #: failing the task — the backfill-over-a-sparse-range mode
@@ -89,60 +109,18 @@ class EnergiPricesReader(DataSourceReader):
     def fetch_records(self, partition: ZoneDayPartition) -> list[dict]:
         """The day's raw API documents (fixture replay or HTTP+retry);
         [] when skip_missing tolerates an unpublished day."""
-        day = Date.fromisoformat(partition.day)
-        if self.fixture_dir is not None:
-            path = (
-                f"{self.fixture_dir}/{day.year}/"
-                f"{day.month:02d}-{day.day:02d}_{partition.zone}.json"
-            )
-            try:
-                with open(path) as f:
-                    return json.load(f)
-            except FileNotFoundError:
-                if self.skip_missing:
-                    return []
-                raise
-        else:  # pragma: no cover - no network in the test container
-            import urllib.error
-            import urllib.request
-
-            url = self.url_template.format(
-                year=day.year, month=day.month, day=day.day, zone=partition.zone
-            )
-            headers = {"Authorization": f"Bearer {self.api_token}"} if self.api_token else {}
-
-            def fetch():
-                try:
-                    req = urllib.request.Request(url, headers=headers)  # noqa: S310
-                    with urllib.request.urlopen(req, timeout=30) as resp:  # noqa: S310
-                        return json.loads(resp.read().decode("utf-8"))
-                except urllib.error.HTTPError as exc:
-                    # a 404 is deterministic (day not published) — when
-                    # tolerated, short-circuit INSIDE the retry loop so
-                    # skip_missing never burns the 3x5s retry budget on it
-                    if self.skip_missing and exc.code == 404:
-                        return None
-                    raise
-
-            records = with_retry(fetch, self.num_retries, self.retry_sleep_s)
-            return records if records is not None else []
-
-    def rows(self, partition: ZoneDayPartition) -> list[tuple]:
-        """Row-tuple form of a partition (the streaming runner consumes
-        row tuples; the batch path yields Arrow batches instead)."""
-        day = Date.fromisoformat(partition.day)
-        return [
-            (
-                partition.zone,
-                day,
-                rec.get("SEK_per_kWh"),
-                rec.get("EUR_per_kWh"),
-                rec.get("EXR"),
-                rec.get("time_start"),
-                rec.get("time_end"),
-            )
-            for rec in self.fetch_records(partition)
-        ]
+        cfg = self.config
+        url = cfg.url(partition.zone, Date.fromisoformat(partition.day))
+        if self.fixture_dir is None:
+            get = partial(get_json, url, cfg.headers(), missing_ok=self.skip_missing)
+            return with_retry(get, cfg.num_retries, cfg.retry_sleep_s)
+        try:
+            with open(url) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            if self.skip_missing:
+                return []
+            raise
 
     def read(self, partition: ZoneDayPartition):
         records = self.fetch_records(partition)
@@ -154,17 +132,8 @@ class EnergiPricesReader(DataSourceReader):
         import pyarrow as pa
 
         day = Date.fromisoformat(partition.day)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([partition.zone] * len(records), pa.string()),
-                pa.array([day] * len(records), pa.date32()),
-                pa.array([r.get("SEK_per_kWh") for r in records], pa.float64()),
-                pa.array([r.get("EUR_per_kWh") for r in records], pa.float64()),
-                pa.array([r.get("EXR") for r in records], pa.float64()),
-                pa.array([r.get("time_start") for r in records], pa.string()),
-                pa.array([r.get("time_end") for r in records], pa.string()),
-            ],
-            names=["zone", "date", "SEK_per_kWh", "EUR_per_kWh", "EXR", "time_start", "time_end"],
+        yield pa.RecordBatch.from_pylist(
+            [{"zone": partition.zone, "date": day, **rec} for rec in records], schema=_arrow_schema()
         )
 
 
@@ -237,9 +206,8 @@ class EnergiPricesStreamReader(DataSourceStreamReader):
         return parts
 
     def read(self, partition: ZoneDayPartition):
-        # executor-side: same fetch/parse as the batch reader, tuple
-        # form (the streaming runner consumes row tuples)
-        return iter(self._batch.rows(partition))
+        # executor-side: the batch reader's fetch and Arrow batch
+        return self._batch.read(partition)
 
     def commit(self, end: dict) -> None:
         # offsets are externally durable (the API's history is
@@ -270,187 +238,24 @@ class EnergiPricesDataSource(DataSource):
         return EnergiUplinkStreamWriter(self.options)
 
 
-@dataclass
-class UplinkCommit(WriterCommitMessage):
-    """Per-task commit message: which document the task produced and how
-    many rows it carries. Must stay picklable (plain dataclass)."""
+class _UplinkDocuments:
+    """What both uplink writers share: the required ``uplink_dir``, the
+    per-task document (`http_json.write_document` under ``PREFIX``),
+    the abort that removes a failed job's documents, and the locked
+    read-merge-publish of ``MANIFEST``."""
 
-    path: str
-    n_rows: int
-
-
-@contextmanager
-def _manifest_lock(uplink_dir: str):
-    """Exclusive advisory lock serializing manifest read-modify-write.
-
-    Spark calls ``commit`` once per job on the driver, so a single
-    query never races itself — but two CONCURRENT jobs appending into
-    the same uplink_dir would interleave their read→merge→rename and
-    one job's documents could vanish from the published manifest.
-    flock on a sidecar lock file closes that window on POSIX local /
-    NFS-with-locking storage; for object stores (no flock) the deploy
-    contract is single-writer-per-uplink_dir, which the streaming path
-    satisfies by construction (one driver owns the query)."""
-    import fcntl
-    import os
-
-    os.makedirs(uplink_dir, exist_ok=True)
-    fd = os.open(os.path.join(uplink_dir, ".manifest.lock"), os.O_CREAT | os.O_RDWR, 0o644)
-    try:
-        fcntl.flock(fd, fcntl.LOCK_EX)
-        yield
-    finally:
-        fcntl.flock(fd, fcntl.LOCK_UN)
-        os.close(fd)
-
-
-class EnergiUplinkWriter(DataSourceWriter):
-    """The WRITE half of the connector (Spark 4 Python DataSource
-    writer): each task serializes its partition as one JSON-lines
-    document — the shape a batch POST to a reporting API would carry —
-    and the COMMIT/ABORT protocol makes the whole job exactly-once:
-
-    * ``write`` (executors) emits the document under a task-unique name
-      and returns an :class:`UplinkCommit`;
-    * ``commit`` (driver) atomically publishes ``manifest.json`` listing
-      ONLY successfully-committed documents (tmp + rename — the same
-      atomic-publish idiom as queries/lifecycle.py's fixture writer);
-    * ``abort`` removes whatever partial documents the failed job left.
-
-    Readers that honor the manifest (see lifecycle.api_sink_roundtrip)
-    never observe output of failed or speculative tasks — task retries
-    produce orphan files that the manifest simply never references.
-
-    Offline contract: the container has no network, so the "POST"
-    lands in ``uplink_dir`` (same serialization the HTTP branch would
-    send; fixture symmetry with the reader's replay dir). At cluster
-    scale ``uplink_dir`` is shared storage — or the write() body swaps
-    the file write for the actual POST with http_json.with_retry, the
-    commit protocol unchanged.
-    """
-
-    def __init__(self, options, overwrite: bool) -> None:  # noqa: ANN001
-        self.uplink_dir = options.get("uplink_dir")
-        if not self.uplink_dir:
-            raise ValueError("energi_prices writer requires .option('uplink_dir', ...)")
-        self.overwrite = overwrite
-
-    def write(self, iterator):  # noqa: ANN001
-        import json as _json
-        import os
-        import uuid
-
-        os.makedirs(self.uplink_dir, exist_ok=True)
-        path = os.path.join(self.uplink_dir, f"doc-{uuid.uuid4().hex}.jsonl")
-        n = 0
-        tmp = path + ".inprogress"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            for row in iterator:
-                fh.write(_json.dumps(row.asDict(), default=str, sort_keys=True))
-                fh.write("\n")
-                n += 1
-        os.rename(tmp, path)
-        return UplinkCommit(path=path, n_rows=n)
-
-    def commit(self, messages) -> None:  # noqa: ANN001
-        import json as _json
-        import os
-
-        files = sorted(m.path for m in messages if m is not None)
-        total = sum(m.n_rows for m in messages if m is not None)
-        manifest = os.path.join(self.uplink_dir, "manifest.json")
-        # append mode folds this job's documents into the committed set;
-        # overwrite mode replaces it — so the manifest is always the
-        # complete exactly-once view across jobs; the lock serializes
-        # concurrent appending jobs' read-modify-write
-        with _manifest_lock(self.uplink_dir):
-            if not self.overwrite and os.path.exists(manifest):
-                with open(manifest, encoding="utf-8") as fh:
-                    prev = _json.load(fh)
-                files = sorted(set(prev["files"]) | set(files))
-                total += prev["n_rows"]
-            tmp = manifest + ".inprogress"
-            with open(tmp, "w", encoding="utf-8") as fh:
-                _json.dump({"files": files, "n_rows": total}, fh)
-            os.rename(tmp, manifest)
-
-    def abort(self, messages) -> None:  # noqa: ANN001
-        import contextlib
-        import os
-
-        for m in messages:
-            if m is not None:
-                with contextlib.suppress(OSError):
-                    os.remove(m.path)
-
-
-class EnergiUplinkStreamWriter(DataSourceStreamWriter):
-    """The STREAMING write half of the connector (Spark 4 Python
-    DataSource stream writer) — completes the connector matrix
-    (batch read / stream read / batch write / stream write).
-
-    Exactly-once story: the epoch manifest. Each micro-batch's tasks
-    emit task-unique JSONL documents (same batch-POST serialization as
-    :class:`EnergiUplinkWriter`); ``commit(messages, batchId)`` then
-    REPLACES the manifest entry for that epoch atomically. Replacement
-    (not append) is what makes a micro-batch RETRY idempotent: the
-    replayed batch's fresh documents overwrite the stale epoch entry,
-    and whatever the failed attempt wrote stays orphaned — present on
-    disk, referenced by nothing. Manifest-honoring readers therefore
-    see each epoch exactly once no matter how many times the engine
-    re-runs it (certified under a forced double-commit of the same
-    batchId in tests/test_api_and_formats.py).
-
-    At cluster scale the documents are the POSTs (swap the file write
-    for http_json.with_retry keyed by (batchId, task) — the dedup key
-    an idempotent receiver needs is already in the name) and the
-    manifest lives in shared storage; the protocol is unchanged.
-    """
-
-    MANIFEST = "stream_manifest.json"
+    PREFIX = ""
+    MANIFEST = ""
 
     def __init__(self, options) -> None:  # noqa: ANN001
         self.uplink_dir = options.get("uplink_dir")
         if not self.uplink_dir:
-            raise ValueError("energi_prices stream writer requires .option('uplink_dir', ...)")
+            raise ValueError(f"{type(self).__name__} requires .option('uplink_dir', ...)")
 
-    def write(self, iterator):  # noqa: ANN001
-        import json as _json
-        import os
-        import uuid
+    def write(self, iterator) -> UplinkCommit:  # noqa: ANN001
+        return write_document(self.uplink_dir, self.PREFIX, (row.asDict() for row in iterator))
 
-        os.makedirs(self.uplink_dir, exist_ok=True)
-        path = os.path.join(self.uplink_dir, f"epochdoc-{uuid.uuid4().hex}.jsonl")
-        n = 0
-        tmp = path + ".inprogress"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            for row in iterator:
-                fh.write(_json.dumps(row.asDict(), default=str, sort_keys=True))
-                fh.write("\n")
-                n += 1
-        os.rename(tmp, path)
-        return UplinkCommit(path=path, n_rows=n)
-
-    def commit(self, messages, batchId: int) -> None:  # noqa: ANN001, N803
-        import json as _json
-        import os
-
-        files = sorted(m.path for m in messages if m is not None)
-        total = sum(m.n_rows for m in messages if m is not None)
-        manifest = os.path.join(self.uplink_dir, self.MANIFEST)
-        with _manifest_lock(self.uplink_dir):
-            epochs: dict = {}
-            if os.path.exists(manifest):
-                with open(manifest, encoding="utf-8") as fh:
-                    epochs = _json.load(fh)["epochs"]
-            # idempotent per epoch: a retried micro-batch REPLACES its entry
-            epochs[str(batchId)] = {"files": files, "n_rows": total}
-            tmp = manifest + ".inprogress"
-            with open(tmp, "w", encoding="utf-8") as fh:
-                _json.dump({"epochs": epochs}, fh)
-            os.rename(tmp, manifest)
-
-    def abort(self, messages, batchId: int) -> None:  # noqa: ANN001, N803
+    def abort(self, messages, batchId: int | None = None) -> None:  # noqa: ANN001, N803
         import contextlib
         import os
 
@@ -458,3 +263,91 @@ class EnergiUplinkStreamWriter(DataSourceStreamWriter):
             if m is not None:
                 with contextlib.suppress(OSError):
                     os.remove(m.path)
+
+    def _publish(self, merge) -> None:  # noqa: ANN001
+        """Replace the manifest with ``merge(published)`` (None before the
+        first commit), staged + renamed under an exclusive flock: two
+        concurrent jobs appending into one uplink_dir would otherwise
+        interleave read→merge→rename and drop one job's documents. On
+        object stores (no flock) the contract is one writer per
+        uplink_dir, which a stream (one driver) meets by construction."""
+        import fcntl
+        import os
+
+        os.makedirs(self.uplink_dir, exist_ok=True)
+        manifest = os.path.join(self.uplink_dir, self.MANIFEST)
+        fd = os.open(os.path.join(self.uplink_dir, ".manifest.lock"), os.O_CREAT | os.O_RDWR, 0o644)
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX)
+            published = None
+            if os.path.exists(manifest):
+                with open(manifest, encoding="utf-8") as fh:
+                    published = json.load(fh)
+            tmp = manifest + ".inprogress"
+            with open(tmp, "w", encoding="utf-8") as fh:
+                json.dump(merge(published), fh)
+            os.rename(tmp, manifest)
+        finally:
+            fcntl.flock(fd, fcntl.LOCK_UN)
+            os.close(fd)
+
+
+class EnergiUplinkWriter(_UplinkDocuments, DataSourceWriter):
+    """The WRITE half of the connector: each task writes its partition
+    as one JSON-lines document (the body a batch POST to a reporting API
+    would carry) and returns an :class:`UplinkCommit`; ``commit``
+    (driver) publishes ``manifest.json`` listing ONLY committed
+    documents, and ``abort`` removes a failed job's documents. Readers
+    that honor the manifest (lifecycle.api_sink_roundtrip) never see
+    output of failed or speculative tasks: retries leave orphans the
+    manifest never references.
+
+    Offline, the "POST" lands in ``uplink_dir``; at cluster scale that is
+    shared storage, or ``write`` swaps the file for the POST under
+    http_json.with_retry with the commit protocol unchanged."""
+
+    PREFIX, MANIFEST = "doc-", "manifest.json"
+
+    def __init__(self, options, overwrite: bool) -> None:  # noqa: ANN001
+        super().__init__(options)
+        self.overwrite = overwrite
+
+    def commit(self, messages) -> None:  # noqa: ANN001
+        done = [m for m in messages if m is not None]
+        files, total = {m.path for m in done}, sum(m.n_rows for m in done)
+
+        # append mode folds this job's documents into the committed set;
+        # overwrite mode replaces it — so the manifest is always the
+        # complete exactly-once view across jobs
+        def merge(published):  # noqa: ANN001, ANN202
+            if published is None or self.overwrite:
+                return {"files": sorted(files), "n_rows": total}
+            return {"files": sorted(files | set(published["files"])), "n_rows": total + published["n_rows"]}
+
+        self._publish(merge)
+
+
+class EnergiUplinkStreamWriter(_UplinkDocuments, DataSourceStreamWriter):
+    """The STREAMING write half of the connector, completing the matrix
+    (batch/stream × read/write). Each micro-batch's tasks write
+    documents as :class:`EnergiUplinkWriter` does; ``commit(messages,
+    batchId)`` then REPLACES that epoch's manifest entry. Replacement,
+    not append, makes a micro-batch RETRY idempotent: the replay's
+    documents supersede the stale entry and the failed attempt's stay
+    orphaned, so manifest-honoring readers see each epoch exactly once
+    (tests/test_api_and_formats.py forces a double commit of one
+    batchId). At cluster scale the documents are POSTs keyed by
+    (batchId, task), the dedup key an idempotent receiver needs."""
+
+    PREFIX, MANIFEST = "epochdoc-", "stream_manifest.json"
+
+    def commit(self, messages, batchId: int) -> None:  # noqa: ANN001, N803
+        done = [m for m in messages if m is not None]
+        entry = {"files": sorted(m.path for m in done), "n_rows": sum(m.n_rows for m in done)}
+
+        # idempotent per epoch: a retried micro-batch REPLACES its entry
+        def merge(published):  # noqa: ANN001, ANN202
+            epochs = published["epochs"] if published else {}
+            return {"epochs": {**epochs, str(batchId): entry}}
+
+        self._publish(merge)

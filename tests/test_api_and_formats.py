@@ -208,6 +208,108 @@ def test_python_datasource_skip_missing_days(spark, tmp_path):
         read().collect()
 
 
+_HOUR = {"SEK_per_kWh": 1.5, "EUR_per_kWh": 0.1, "EXR": 11.0, "time_start": "00:00", "time_end": "01:00"}
+
+
+class _PriceApiStub:
+    """A scripted price API: each GET is recorded as (url, Authorization)
+    and answered with the URL's next scripted status (default 200); 200
+    carries one hourly record, any other status is an HTTP error. It
+    serves in-process through a patched `urllib.request.urlopen`, or to
+    executors over a localhost HTTP server."""
+
+    def __init__(self, script: dict) -> None:
+        self.script = {url: list(statuses) for url, statuses in script.items()}
+        self.calls: list[tuple] = []
+
+    def answer(self, url: str, auth) -> int:  # noqa: ANN001
+        self.calls.append((url, auth))
+        pending = self.script.get(url)
+        return pending.pop(0) if pending else 200
+
+    def urlopen(self, req, timeout=None):  # noqa: ANN001
+        import io
+        import json
+        import urllib.error
+
+        status = self.answer(req.full_url, req.get_header("Authorization"))
+        if status != 200:
+            raise urllib.error.HTTPError(req.full_url, status, "stub", None, None)
+        return io.BytesIO(json.dumps([_HOUR]).encode())
+
+
+def test_energi_prices_http_branch_gets_with_retry_and_token(monkeypatch):
+    """The reader's HTTP branch, in-process: the URL comes from
+    `url_template`, the Bearer header from `api_token`, a transient error
+    is retried, and with skip_missing a 404 yields [] after ONE call."""
+    import urllib.error
+    import urllib.request
+
+    from energi_data_etl_spark.sources.api_datasource import EnergiPricesReader, ZoneDayPartition
+
+    day2, day3 = "http://mirror.test/prices/2024/01-02_SE1.json", "http://mirror.test/prices/2024/01-03_SE1.json"
+    stub = _PriceApiStub({day2: [503], day3: [404]})
+    monkeypatch.setattr(urllib.request, "urlopen", stub.urlopen)
+    options = {
+        "start": "2024-01-02", "end": "2024-01-03", "zones": "SE1",
+        "url_template": "http://mirror.test/prices/{year}/{month:02d}-{day:02d}_{zone}.json",
+        "api_token": "sekrit", "retry_sleep_s": "0", "skip_missing": "true",
+    }
+    reader = EnergiPricesReader(options)
+    assert reader.fetch_records(ZoneDayPartition(zone="SE1", day="2024-01-02")) == [_HOUR]
+    assert stub.calls == [(day2, "Bearer sekrit")] * 2  # one 503, retried once
+    stub.calls.clear()
+    assert reader.fetch_records(ZoneDayPartition(zone="SE1", day="2024-01-03")) == []
+    assert stub.calls == [(day3, "Bearer sekrit")]  # the 404 burns no retry
+
+    # without skip_missing the 404 fails the partition once the budget is spent
+    stub.calls.clear()
+    stub.script[day3] = [404, 404]
+    strict = EnergiPricesReader({**options, "skip_missing": "false", "num_retries": "2"})
+    with pytest.raises(urllib.error.HTTPError):
+        strict.fetch_records(ZoneDayPartition(zone="SE1", day="2024-01-03"))
+    assert len(stub.calls) == 2
+
+
+def test_fetch_to_landing_default_fetcher_is_the_same_get(spark, tmp_path):
+    """`fetch_to_landing` without a fetcher GETs `ApiConfig.url` on the
+    executors through the same GET as the reader: the stub, served on
+    localhost, sees the Bearer header and one retried transient error."""
+    import datetime
+    import http.server
+    import json
+    import threading
+
+    from energi_data_etl_spark.sources.http_json import ApiConfig, fetch_plan, fetch_to_landing
+
+    stub = _PriceApiStub({"/prices/2024/01-02_SE1.json": [503]})
+
+    class Handler(http.server.BaseHTTPRequestHandler):
+        def do_GET(self):  # noqa: N802
+            status = stub.answer(self.path, self.headers.get("Authorization"))
+            body = json.dumps([_HOUR]).encode() if status == 200 else b""
+            self.send_response(status)
+            self.send_header("Content-Length", str(len(body)))
+            self.end_headers()
+            self.wfile.write(body)
+
+        def log_message(self, *args):  # noqa: ANN002
+            pass
+
+    server = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    try:
+        cfg = ApiConfig.at(f"http://127.0.0.1:{server.server_port}/prices", api_token="sekrit", retry_sleep_s=0)
+        plan = fetch_plan(spark, datetime.date(2024, 1, 2), datetime.date(2024, 1, 2), zones=("SE1",))
+        fetch_to_landing(plan, str(tmp_path / "land"), config=cfg)
+    finally:
+        server.shutdown()
+        server.server_close()
+    assert stub.calls == [("/prices/2024/01-02_SE1.json", "Bearer sekrit")] * 2
+    landed = [json.loads(line) for p in (tmp_path / "land").glob("*.jsonl") for line in p.read_text().splitlines()]
+    assert landed == [{"zone": "SE1", "date": "2024-01-02", **_HOUR}]
+
+
 def test_compact_parquet_reduces_files_preserving_content(spark, sf_dir, tmp_path):
     """Compaction: 40 tiny files -> the byte-sized target count, rows
     and values identical, and sort_cols keeps per-file min/max ranges

@@ -150,6 +150,14 @@ def test_program_code_cites_symbols_not_line_numbers():
     assert not cited, f"cite a symbol (path.py::name) instead of a line: {cited}"
 
 
+def _docstrings(tree) -> list:  # noqa: ANN001
+    """The module, class and function docstring nodes of ``tree``."""
+    import ast
+
+    scopes = (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+    return [n.body[0].value for n in ast.walk(tree) if isinstance(n, scopes) and ast.get_docstring(n, False)]
+
+
 def test_package_reads_no_round_artifact():
     """The package behaves the same whatever round artifacts
     (CORRECTNESS_r*.json, BENCH_r*.json, ...) sit at the repo root: no
@@ -159,14 +167,32 @@ def test_package_reads_no_round_artifact():
     import re
 
     artifact = re.compile(r"\b[A-Z][A-Z0-9_]*_r(?:\d+|\*)[\w*]*\.json\b")
-    scopes = (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
     found = []
     for path in (Path(__file__).resolve().parents[1] / "energi_data_etl_spark").rglob("*.py"):
         tree = ast.parse(path.read_text())
-        docs = {id(n.body[0].value) for n in ast.walk(tree) if isinstance(n, scopes) and ast.get_docstring(n, False)}
+        docs = {id(d) for d in _docstrings(tree)}
         found += [
             f"{path.name}:{n.lineno}: {n.value!r}"
             for n in ast.walk(tree)
             if isinstance(n, ast.Constant) and isinstance(n.value, str) and id(n) not in docs and artifact.search(n.value)
         ]
     assert not found, f"program code names a round artifact: {found}"
+
+
+def test_api_document_path_is_formatted_once():
+    """The price API's zone-day document path ({year}/{month}-{day}_{zone}
+    with zero-padded month and day) is spelled once in program code —
+    `http_json.DOC_PATH` — and every URL and fixture path is formatted
+    through `ApiConfig.url`. Docstrings may quote it."""
+    import ast
+    import re
+
+    spelling = re.compile(r"02d\}-\{|%02d-%02d")
+    found = []
+    for path in (Path(__file__).resolve().parents[1] / "energi_data_etl_spark").rglob("*.py"):
+        text = path.read_text()
+        docs = {i for d in _docstrings(ast.parse(text)) for i in range(d.lineno, d.end_lineno + 1)}
+        found += [
+            f"{path.name}:{i}" for i, line in enumerate(text.splitlines(), 1) if i not in docs and spelling.search(line)
+        ]
+    assert len(found) == 1, f"the API document path is spelled {len(found)} times: {found}"

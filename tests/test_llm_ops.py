@@ -768,8 +768,7 @@ def test_knn_scores_zero_vector_as_zero(spark, op):
     X = np.random.RandomState(11).randn(200, 8)
     X[5] = 0.0
     e = spark.createDataFrame([(i, row.tolist()) for i, row in enumerate(X)], "vec_id long, embedding array<double>")
-    kw = {"dim": 8} if op == "ann_lsh_knn" else {}
-    rows = getattr(S, op)(e.filter(F.col("vec_id") < 10), e, k=5, **kw).collect()
+    rows = getattr(S, op)(e.filter(F.col("vec_id") < 10), e, k=5).collect()
     unit = S._unit_rows(X)
     for r in rows:
         assert r.cos_sim == pytest.approx(unit[r.query_id] @ unit[r.neighbor_id], abs=1e-4), r

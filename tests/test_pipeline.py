@@ -74,8 +74,26 @@ def test_fetch_plan_is_zone_day_grid(spark):
     plan = fetch_plan(spark, datetime.date(2024, 1, 1), datetime.date(2024, 1, 3), zones=("SE1", "SE2"))
     rows = plan.collect()
     assert len(rows) == 6
-    urls = {r.url for r in rows}
-    assert "https://www.elprisetjustnu.se/api/v1/prices/2024/01-02_SE1.json" in urls  # :02d padding (ref :19)
+    url = ApiConfig().url("SE1", datetime.date(2024, 1, 2))
+    assert url == "https://www.elprisetjustnu.se/api/v1/prices/2024/01-02_SE1.json"  # :02d padding (ref :19)
+
+
+def test_run_incremental_fetches_configured_url_template(spark, tmp_path):
+    """`ApiConfig.url_template` decides every URL the backfill fetches:
+    a mirror template reaches the fetcher for every zone-day. The
+    fetcher echoes its URL into the landed record, so the landing
+    documents show which URLs the executors asked for."""
+    mirror = "http://mirror.test/energi/{zone}/{year}{month:02d}{day:02d}.json"
+
+    def echo_url(url: str) -> list[dict]:
+        return [{"SEK_per_kWh": 1.0, "EUR_per_kWh": 0.1, "EXR": 11.0, "time_start": url, "time_end": url}]
+
+    land = tmp_path / "land"
+    today = datetime.date(2024, 1, 3)
+    assert run_incremental(spark, str(tmp_path / "fact"), echo_url, str(land), today, zones=("SE1", "SE2"),
+                           cold_start_days=2, config=ApiConfig(url_template=mirror, retry_sleep_s=0))
+    fetched = {json.loads(line)["time_start"] for p in land.glob("*.jsonl") for line in p.read_text().splitlines()}
+    assert fetched == {f"http://mirror.test/energi/{z}/202401{d:02d}.json" for z in ("SE1", "SE2") for d in (1, 2, 3)}
 
 
 def test_api_token_header_reaches_fetcher(spark, tmp_path):
