@@ -8,8 +8,9 @@ append, energy_etl.py:22-108). Generalized here into engine operators:
   newer than the rollup's watermark, aggregate, append. On a
   date-partitioned source the pruning is partition elimination; the
   appended rollup is itself date-partitioned, so the watermark read
-  decodes only the partition column (still one task per date
-  partition). Aggregate and append cost O(new data), not O(history).
+  decodes only the partition column (a local session lists the
+  partitions on the driver). Aggregate and append cost O(new data),
+  not O(history).
 * ``streaming_rollup`` — the same rollup maintained by a stream:
   foreachBatch + dynamic partition overwrite, so a late event that
   reopens a day REPLACES that day's rollup row instead of duplicating

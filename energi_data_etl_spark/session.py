@@ -5,6 +5,16 @@ code runs unchanged on a 1000-executor cluster — local[] is only the
 test harness. AQE handles runtime re-planning (partition coalescing,
 skew-join splitting, SMJ→broadcast demotion); shuffle partition count is
 only the *initial* value under AQE, so an over-estimate is cheap.
+
+Partition listing is the one setting that depends on where the session
+runs. Spark lists a path read of more than
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` (default 32)
+directories with a job of one task per directory. In a local session
+those tasks are threads of the driver's own JVM making the same
+file-system calls, so the job is pure overhead on every read of the
+date-partitioned fact table; `local_listing_conf` lists on the driver
+instead. A cluster session keeps Spark's parallel listing, the right
+call against S3 or HDFS at 100 TB.
 """
 
 from __future__ import annotations
@@ -13,7 +23,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "cpu_count", "apply_engine_conf", "scratch_dir"]
+__all__ = ["get_spark", "cpu_count", "apply_engine_conf", "scratch_dir", "local_listing_conf"]
 
 
 def scratch_dir(prefix: str, dir: str | None = None) -> str:  # noqa: A002
@@ -65,6 +75,23 @@ ENGINE_CONF: dict[str, str] = {
 }
 
 
+#: Partition directories a local session lists on the driver before Spark
+#: falls back to its listing job (one task per directory). Measured with
+#: `spark.read.parquet` of a date-partitioned table, local[4], min of 6:
+#: 120 directories take 0.72 s as a job and 0.10 s on the driver; 1,000
+#: directories take 3.88 s and 0.16 s. A table with more directories than
+#: this still gets the parallel job.
+LOCAL_LISTING_THRESHOLD = 1024
+
+
+def local_listing_conf(master: str) -> dict[str, str]:
+    """The partition-listing conf for a session on ``master``: driver-side
+    listing for ``local[...]``, nothing (Spark's default) otherwise."""
+    if master.startswith("local"):
+        return {"spark.sql.sources.parallelPartitionDiscovery.threshold": str(LOCAL_LISTING_THRESHOLD)}
+    return {}
+
+
 def apply_engine_conf(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine configs to an existing session.
 
@@ -76,8 +103,16 @@ def apply_engine_conf(spark: SparkSession) -> SparkSession:
     the 200 default, which AQE coalesces for batch but CANNOT for
     stateful streaming (AQE is disabled there) — 200 near-empty state
     tasks per micro-batch otherwise.
+
+    A local session also lists partition directories on the driver
+    (`local_listing_conf`).
     """
-    for k, v in {**ENGINE_CONF, "spark.sql.shuffle.partitions": str(cpu_count())}.items():
+    conf = {
+        **ENGINE_CONF,
+        **local_listing_conf(spark.sparkContext.master),
+        "spark.sql.shuffle.partitions": str(cpu_count()),
+    }
+    for k, v in conf.items():
         try:
             spark.conf.set(k, v)
         except Exception:
@@ -87,9 +122,10 @@ def apply_engine_conf(spark: SparkSession) -> SparkSession:
 
 def get_spark(app_name: str = "energi-data-etl-spark", cpus: int | None = None) -> SparkSession:
     n = cpus or cpu_count()
+    master = f"local[{n}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(f"local[{n}]")
+        .master(master)
         # Initial shuffle parallelism = core count; AQE coalesces down.
         # On a real cluster this would be ~2-3× total cores instead.
         .config("spark.sql.shuffle.partitions", str(n))
@@ -99,6 +135,6 @@ def get_spark(app_name: str = "energi-data-etl-spark", cpus: int | None = None) 
         # lives outside the repo checkout
         .config("spark.sql.warehouse.dir", os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/energi_warehouse"))
     )
-    for k, v in ENGINE_CONF.items():
+    for k, v in {**ENGINE_CONF, **local_listing_conf(master)}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -13,7 +13,7 @@ import pyspark.sql.functions as F
 
 from energi_data_etl_spark.pipeline.energy import run_incremental
 from energi_data_etl_spark.sources.http_json import ApiConfig, fetch_plan, with_retry
-from energi_data_etl_spark.sources.sinks import latest_watermark, write_fact_table
+from energi_data_etl_spark.sources.sinks import align_to_table_schema, latest_watermark, write_fact_table
 
 
 def make_fake_fetcher(price_for):
@@ -150,6 +150,116 @@ def test_retry_exhausts_and_raises():
 def test_write_fact_table_skips_empty(spark, tmp_path):
     empty = spark.createDataFrame([], "date date, zone string, avg_price double")
     assert not write_fact_table(empty, str(tmp_path / "t"))  # reference :82 guard
+    # no data file lands (Spark may commit a _SUCCESS marker), so the
+    # path still reads as a cold start: no watermark, nothing to align to
+    table = tmp_path / "t"
+    assert not [f for f in table.rglob("*") if f.is_file() and not f.name.startswith(("_", "."))]
+    assert latest_watermark(spark, str(table), "date") is None
+    assert align_to_table_schema(empty, spark, str(table)) is empty
+    today = datetime.date(2024, 1, 10)
+    fetcher = make_fake_fetcher(lambda zone, d, h: 1.0)
+    assert run_incremental(spark, str(table), fetcher, str(tmp_path / "land"), today, zones=("SE1",), cold_start_days=2)
+    assert spark.read.parquet(str(table)).count() == 3  # today-2 .. today
+    assert latest_watermark(spark, str(table), "date") == today
+
+
+LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _date_partitioned_table(path, n_days: int) -> None:
+    """A fact table of `n_days` `date=` partitions from 2023-01-01, two
+    zones each, in the layout `write_fact_table` produces (written with
+    pyarrow, so building it starts no Spark job)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for i in range(n_days):
+        part = path / f"date={datetime.date(2023, 1, 1) + datetime.timedelta(days=i)}"
+        part.mkdir(parents=True)
+        pq.write_table(pa.table({"zone": ["SE1", "SE2"], "avg_price": [float(i), 2.0 * i]}), part / "part-0.parquet")
+
+
+def test_partitioned_reads_start_no_listing_job(spark, tmp_path):
+    """Guard: reading a 100-partition fact table must not start Spark's
+    listing job, which runs one task per `date=` directory. The session
+    lists them on the driver, so the watermark runs a handful of tasks
+    and the bare read at most a schema job. Tasks are counted as the
+    benchmark's traced run counts them."""
+    from perfbench.trace import Tracer
+
+    n = 100
+    table = tmp_path / "fact"
+    _date_partitioned_table(table, n)
+    tracer = Tracer(spark.sparkContext, "listing-guard")
+    tracer.enabled = True
+    with tracer.span("sinks.latest_watermark") as wm:
+        latest_watermark(spark, str(table), "date")
+    with tracer.span("read") as read:
+        spark.read.parquet(str(table))
+    assert 0 < wm["jobs"] and wm["tasks"] < n, wm
+    assert read["tasks"] < n, read
+
+
+def test_partition_listing_modes_agree(spark, tmp_path):
+    """Spark's parallel listing job and the driver-side listing see the
+    same table: 100 pyarrow partitions, one Spark-appended partition,
+    a `_temporary/` directory holding a data file, and a `date=`
+    directory holding only a `_SUCCESS` marker and a `.crc` file."""
+    from energi_data_etl_spark.pipeline.energy import zone_summary
+
+    table = tmp_path / "fact"
+    _date_partitioned_table(table, 100)
+    appended = spark.createDataFrame(
+        [(datetime.date(2023, 6, 1), "SE3", 7.0)], "date date, zone string, avg_price double"
+    )
+    assert write_fact_table(appended, str(table), audit=False)
+    stray = table / "_temporary" / "0" / "date=2099-01-01"
+    stray.mkdir(parents=True)
+    (table / "date=2023-04-10" / "part-0.parquet").rename(stray / "part-0.parquet")
+    marker_only = table / "date=2098-01-01"
+    marker_only.mkdir()
+    (marker_only / "_SUCCESS").write_text("")
+    (marker_only / ".part-0.parquet.crc").write_text("")
+
+    def answers():
+        fact = spark.read.parquet(str(table))
+        summary = sorted(tuple(r) for r in zone_summary(fact, value_col="avg_price").collect())
+        return latest_watermark(spark, str(table), "date"), fact.count(), summary
+
+    engine = spark.conf.get(LISTING_THRESHOLD)
+    try:
+        spark.conf.set(LISTING_THRESHOLD, "32")  # Spark's default: the listing job
+        parallel = answers()
+    finally:
+        spark.conf.set(LISTING_THRESHOLD, engine)
+    driver = answers()
+    assert driver == parallel
+    assert driver[0] == datetime.date(2023, 6, 1)
+    assert driver[1] == 2 * 99 + 1  # date=2023-04-10 moved under _temporary/
+
+
+def test_local_sessions_list_partitions_on_the_driver():
+    """The session rule: a `local[...]` master lists partition
+    directories on the driver, any other master keeps Spark's parallel
+    listing. Checked on master strings, so no cluster starts."""
+    from types import SimpleNamespace
+
+    from energi_data_etl_spark.session import LOCAL_LISTING_THRESHOLD, apply_engine_conf
+
+    class Conf(dict):
+        def set(self, key, value):
+            self[key] = value
+
+    def applied(master):
+        fake = SimpleNamespace(sparkContext=SimpleNamespace(master=master), conf=Conf())
+        return apply_engine_conf(fake).conf
+
+    for master in ("local", "local[4]", "local[*]"):
+        assert applied(master)[LISTING_THRESHOLD] == str(LOCAL_LISTING_THRESHOLD)
+    for master in ("yarn", "spark://host:7077", "k8s://https://host:443", "mesos://host:5050"):
+        conf = applied(master)
+        assert LISTING_THRESHOLD not in conf
+        assert conf["spark.sql.session.timeZone"] == "UTC"  # the rest of the engine conf still applies
 
 
 def test_partition_pruning_on_fact_table(spark, tmp_path):
