@@ -16,10 +16,6 @@ noop sink (every partition computes; no driver-side result transfer).
 Aggregate mode folds suite-mode stdout captures into per-query medians
 and mins at OUT (the BENCH_MEDIANS_r*.json shape) and flags >2x median
 drift against the reference medians.
-
-A cold-cache run (fresh streaming replay caches):
-
-    SPARK_GRAFT_CACHE_DIR=$(mktemp -d) python bench.py
 """
 
 from __future__ import annotations

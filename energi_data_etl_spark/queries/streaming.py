@@ -30,128 +30,60 @@ def _events_path(sf_dir: str) -> str:
     return f"{sf_dir}/events.parquet"
 
 
-def _chunked_file_stream(
-    spark: SparkSession, parts: list[DataFrame], base: str, cache_key: str | None = None
-):
+def _chunked_file_stream(spark: SparkSession, parts: list[DataFrame], base: str):
     """Replay a partitioned bounded frame as a file stream: each part
-    becomes one single-file chunk opened with maxFilesPerTrigger=1 —
-    one part per micro-batch. Spark's FileStreamSource orders files by
-    MODIFICATION TIME ONLY (filenames are not a tiebreak), so each
-    chunk's mtime is stamped explicitly, strictly increasing in list
-    order — sequential write order alone could tie on a coarse-mtime
-    filesystem and silently reorder the replay (ADVICE r14). The
-    ordering contract every replay harness below relies on lives here
-    and nowhere else.
+    becomes one single-file chunk under ``base/src`` opened with
+    maxFilesPerTrigger=1 — one part per micro-batch.
 
-    ``cache_key`` (r16): when the chunk CONTENT is a pure function of
-    the key — a deterministic projection/split of an immutable fixture
-    table — the chunks are published once to a deterministic directory
-    (atomic rename, the `_shared_events_src` recipe) and every later
-    query/run streams from it instead of re-writing ~1 s of coalesced
-    parquet per drain (the r15 write-replay-chunks-ONCE lesson; the
-    suppressor pair shares one key, so the second drain pays zero
-    setup). Checkpoints stay per-query — sharing SOURCE files across
-    streaming queries is always safe."""
+    The chunks are written in ONE Spark job: every part is tagged with
+    its chunk index, the tagged parts are unioned (a union, not a
+    split, so overlapping parts such as streaming_late_data_drop's
+    replayed head each keep their rows) and written once with
+    ``partitionBy("_chunk")`` from a single task (``coalesce(1)``; a
+    ``repartition`` on ``_chunk`` would add a shuffle job under AQE),
+    which leaves one file per non-empty chunk and keeps ``_chunk`` out
+    of the file schema.
+    An empty part writes no ``_chunk=i`` directory, so it gets a
+    schema-only file instead: it still replays as a 0-row micro-batch
+    and later batches keep their numbers.
+
+    Spark's FileStreamSource orders files by MODIFICATION TIME ONLY
+    (filenames are not a tiebreak), so each chunk's mtime is stamped
+    explicitly, strictly increasing in list order — write order alone
+    could tie on a coarse-mtime filesystem and silently reorder the
+    replay (ADVICE r14). The ordering contract every replay harness
+    below relies on lives here and nowhere else."""
     import glob
     import os
     import shutil
+    from functools import reduce
 
-    def build(src: str) -> None:
-        os.makedirs(src)
-        for i, part in enumerate(parts):
-            tmp_i = f"{src}.__part{i}"
-            part.coalesce(1).write.parquet(tmp_i)
-            dst = f"{src}/{i:02d}.parquet"
-            shutil.move(glob.glob(f"{tmp_i}/part-*.parquet")[0], dst)
-            shutil.rmtree(tmp_i, ignore_errors=True)
-            t = 1_700_000_000 + i  # strictly increasing, 1 s apart
-            os.utime(dst, (t, t))
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    if cache_key is None:
-        src = f"{base}/src"
-        build(src)
-    else:
-        # fold the projection into the hashed key so a changed column
-        # list can never silently serve a stale cache (ADVICE r16);
-        # callers fold the source-content fingerprint + chunking params
-        # in via fixture_fingerprint and their key tag.
-        src = _resolved_cache_path(cache_key, parts[0].schema)
-        if not os.path.isdir(src):
-            # stage NEXT TO the final path (same filesystem — a rename
-            # from the per-run temp scratch into ~/.cache could EXDEV)
-            stage = f"{src}.__stage_{os.getpid()}"
-            shutil.rmtree(stage, ignore_errors=True)
-            build(stage)  # mtimes survive the rename
-            try:
-                os.rename(stage, src)
-            except OSError:
-                # another run won the publish — but only trust that if
-                # the winner's directory actually exists; otherwise the
-                # rename failed for a real reason (permissions, EXDEV)
-                # and this run streams its own complete stage dir
-                # (ADVICE r16).
-                if os.path.isdir(src):
-                    shutil.rmtree(stage, ignore_errors=True)
-                else:
-                    src = stage
-    return spark.readStream.schema(parts[0].schema).option("maxFilesPerTrigger", 1).parquet(src)
+    stage, src = f"{base}/chunks", f"{base}/src"
+    schema = parts[0].schema
+    tagged = [p.withColumn("_chunk", F.lit(i)) for i, p in enumerate(parts)]
+    reduce(DataFrame.unionByName, tagged).coalesce(1).write.partitionBy("_chunk").parquet(stage)
+    os.makedirs(src)
+    for i in range(len(parts)):
+        dst = f"{src}/{i:02d}.parquet"
+        written = glob.glob(f"{stage}/_chunk={i}/part-*.parquet")
+        if written:
+            shutil.move(written[0], dst)
+        else:
+            pq.write_table(to_arrow_schema(schema).empty_table(), dst)
+        t = 1_700_000_000 + i  # strictly increasing, 1 s apart
+        os.utime(dst, (t, t))
+    shutil.rmtree(stage, ignore_errors=True)
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
 
 
-def fixture_fingerprint(sf_dir: str, table: str) -> str:
-    """abspath + mtime_ns + size of a fixture parquet — folded into
-    replay-cache keys so a REGENERATED fixture at the same path can
-    never silently serve stale chunks (ADVICE r16)."""
-    import os
-
-    p = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
-    try:
-        st = os.stat(p)
-        return f"{p}:{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        return p
-
-
-def _resolved_cache_path(cache_key: str, schema) -> str:
-    """The full replay-cache path for a (caller key, projection) pair —
-    the schema suffix keeps the hit-check in _id_chunked_stream and the
-    build in _chunked_file_stream on one key."""
-    return _replay_cache_path(f"{cache_key}|schema={schema.simpleString()}")
-
-
-def _replay_cache_path(cache_key: str) -> str:
-    """Deterministic cache dir under a USER-OWNED root (not the
-    world-writable temp dir, where another user could squat the name —
-    ADVICE r16). Override with SPARK_GRAFT_CACHE_DIR."""
-    import hashlib
-    import os
-
-    key = hashlib.md5(cache_key.encode()).hexdigest()[:12]
-    return os.path.join(_cache_root(), f"replay_{key}")
-
-
-def _cache_root() -> str:
-    import os
-
-    root = os.environ.get("SPARK_GRAFT_CACHE_DIR") or os.path.join(
-        os.path.expanduser("~"), ".cache", "energi_data_etl_spark"
-    )
-    os.makedirs(root, exist_ok=True)
-    return root
-
-
-def _id_chunked_stream(
-    spark: SparkSession, df: DataFrame, base: str, n_chunks: int = 3, cache_key: str | None = None
-):
+def _id_chunked_stream(spark: SparkSession, df: DataFrame, base: str, n_chunks: int = 3):
     """Id-ordered replay: split on doc_id ranges so ids arrive
     non-decreasing across micro-batches — the certification harness for
     arrival-ordered streaming semantics (neardup suppression,
     blocklist guards)."""
-    import os
-
-    if cache_key is not None and os.path.isdir(_resolved_cache_path(cache_key, df.schema)):
-        # cache hit: skip the bounds collect entirely (2 Spark jobs) —
-        # filters don't change the schema, so stream straight off it
-        return _chunked_file_stream(spark, [df], base, cache_key=cache_key)
     bounds = df.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]  # bounded driver scalars
     mn, mx = int(bounds[0]), int(bounds[1])
     step = (mx - mn + n_chunks) // n_chunks  # ceil of the id span
@@ -159,10 +91,10 @@ def _id_chunked_stream(
         df.filter((F.col("doc_id") >= mn + i * step) & (F.col("doc_id") < mn + (i + 1) * step))
         for i in range(n_chunks)
     ]
-    return _chunked_file_stream(spark, parts, base, cache_key=cache_key)
+    return _chunked_file_stream(spark, parts, base)
 
 
-def _day_chunked_stream(spark: SparkSession, ev: DataFrame, base: str, cache_key: str | None = None):
+def _day_chunked_stream(spark: SparkSession, ev: DataFrame, base: str):
     """Time-ordered replay of an events-shaped frame (has a ``ts``
     timestamp): three ~10-day January chunks, one micro-batch each
     (the fixture spans Jan 1-30 at every SF)."""
@@ -170,35 +102,15 @@ def _day_chunked_stream(spark: SparkSession, ev: DataFrame, base: str, cache_key
         ev.filter((F.dayofmonth("ts") >= lo) & (F.dayofmonth("ts") <= hi))
         for lo, hi in [(1, 10), (11, 20), (21, 31)]
     ]
-    return _chunked_file_stream(spark, parts, base, cache_key=cache_key)
+    return _chunked_file_stream(spark, parts, base)
 
 
-def _events_split_key(sf_dir: str, split: str, *params) -> str:
-    """Replay-cache key for a deterministic split of the events fixture:
-    the split's name, EVERY parameter its filters use, and the fixture
-    fingerprint — so changing a split parameter can never serve the
-    chunks of the old split (ADVICE r18)."""
-    return f"{split}{params!r}:{fixture_fingerprint(sf_dir, 'events')}"
-
-
-#: micro-batches of the event_id pmod split (_event_id_mod_stream)
-_EVENT_ID_SPLITS = 3
-
-
-def _event_id_mod_stream(spark: SparkSession, ev: DataFrame, base: str, sf_dir: str):
-    """Replay ``ev`` as one file per ``event_id pmod _EVENT_ID_SPLITS``
-    class, one micro-batch each. The split is a pure function of the
-    immutable fixture, so it is published once through the replay cache
-    instead of re-writing the files per run; streaming_foreachbatch_upsert
-    and streaming_update_mode_totals project the same columns and so
-    share one publish."""
-    n = _EVENT_ID_SPLITS
-    return _chunked_file_stream(
-        spark,
-        [ev.filter(F.pmod("event_id", F.lit(n)) == i) for i in range(n)],
-        base,
-        cache_key=_events_split_key(sf_dir, "event_id_pmod", n),
-    )
+def _event_id_mod_stream(spark: SparkSession, ev: DataFrame, base: str, n: int = 3):
+    """Replay ``ev`` as one file per ``event_id pmod n`` class, one
+    micro-batch each (streaming_foreachbatch_upsert,
+    streaming_update_mode_totals and api_sink_stream_roundtrip)."""
+    parts = [ev.filter(F.pmod("event_id", F.lit(n)) == i) for i in range(n)]
+    return _chunked_file_stream(spark, parts, base)
 
 
 @query(
@@ -659,7 +571,7 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
 
     base = scratch_dir("febatch_")
     ev = load_table(spark, "events", sf_dir).select("event_id", "event_type", "value")
-    stream = _event_id_mod_stream(spark, ev, base, sf_dir)
+    stream = _event_id_mod_stream(spark, ev, base)
 
     from ..streaming.ops import foreachbatch_merge_sink
 
@@ -766,15 +678,9 @@ def _neardup_suppress_run(spark: SparkSession, sf_dir: str, state_cap: int | Non
     from ..sources.tables import load_table
     from ..streaming.ops import neardup_suppress_stream
 
-    import os
-
     base = scratch_dir("nds_")
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    # pure projection+split of the immutable fixture: published once,
-    # shared by the capped/uncapped pair AND across runs
-    stream = _id_chunked_stream(
-        spark, docs, base, n_chunks=3, cache_key=f"id3docs:{fixture_fingerprint(sf_dir, 'documents')}"
-    )
+    stream = _id_chunked_stream(spark, docs, base, n_chunks=3)
     # one file per micro-batch = ONE scan task: repartition before the
     # md5+fold signature stage (the r07 single-row-group lesson, in
     # stream form) so the per-batch kernel runs at drain parallelism.
@@ -941,15 +847,7 @@ def streaming_blocklist_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(bag_fingerprint("text").alias("fp"))
         .distinct()
     )
-    import os
-
-    stream = _id_chunked_stream(
-        spark,
-        docs.filter(F.col("doc_id") >= 25),
-        base,
-        n_chunks=3,
-        cache_key=f"id3docs_ge25:{fixture_fingerprint(sf_dir, 'documents')}",
-    )
+    stream = _id_chunked_stream(spark, docs.filter(F.col("doc_id") >= 25), base, n_chunks=3)
     admitted = (
         stream.select("doc_id", bag_fingerprint("text").alias("fp"))
         .join(F.broadcast(blocklist), "fp", "left_anti")
@@ -1015,11 +913,7 @@ def streaming_timeout_finalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type", F.col("ts").cast("timestamp").alias("ts"), "value")
         .withColumn("week", ((F.dayofmonth("ts") - 1) / 7).cast("long"))
     )
-    import os
-
-    stream = _day_chunked_stream(
-        spark, ev, base, cache_key=f"day3evweek:{fixture_fingerprint(sf_dir, 'events')}"
-    )
+    stream = _day_chunked_stream(spark, ev, base)
     finalized = timeout_finalized_totals(
         stream, keys=["event_type", "week"], gap_ms=5 * 86400 * 1000, watermark="1 day"
     )
@@ -1098,11 +992,7 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("value") / 10).cast("long").alias("bkt"),
         )
     )
-    import os
-
-    stream = _day_chunked_stream(
-        spark, ev, base, cache_key=f"day3evbkt:{fixture_fingerprint(sf_dir, 'events')}"
-    )
+    stream = _day_chunked_stream(spark, ev, base)
     summaries = heavy_hitters_stream(stream, key="event_type", item_col="bkt", k=K)
 
     sink = f"{base}/summ"
@@ -1190,11 +1080,6 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: streaming_late_data_drop's batch boundaries (inclusive last days):
-#: early batch, middle batch, and the replayed late head of batch 3.
-_LATE_DROP_CUTS = ("2024-01-20", "2024-01-25", "2024-01-05")
-
-
 @query(
     "streaming_late_data_drop",
     tier="T2 (event-time watermark: late arrivals dropped past finalized windows)",
@@ -1238,24 +1123,12 @@ def streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = scratch_dir("late_drop_")
     ev = load_table(spark, "events", sf_dir).select("event_id", "ts", "event_type", "value")
     d = F.to_date("ts")
-    early_end, middle_end, replay_end = _LATE_DROP_CUTS
-    early = ev.filter(d <= early_end)
-    middle = ev.filter((d > early_end) & (d <= middle_end))
-    late_replay = ev.filter(d <= replay_end)
-    tail = ev.filter(d > middle_end)
-
-    # r18 opt: the three chunks are a pure deterministic split+replay of
-    # the immutable fixture — publish them once through the shared
-    # replay cache instead of re-writing ~3 coalesced parquet files per
-    # run (the r16 write-chunks-ONCE recipe; same one-file-per-batch +
-    # strictly-increasing-mtime contract the hand-rolled builder had).
+    early = ev.filter(d <= "2024-01-20")
+    middle = ev.filter((d > "2024-01-20") & (d <= "2024-01-25"))
+    late_replay = ev.filter(d <= "2024-01-05")
+    tail = ev.filter(d > "2024-01-25")
     stream = (
-        _chunked_file_stream(
-            spark,
-            [early, middle, late_replay.unionByName(tail)],
-            base,
-            cache_key=_events_split_key(sf_dir, "late_drop", *_LATE_DROP_CUTS),
-        )
+        _chunked_file_stream(spark, [early, middle, late_replay.unionByName(tail)], base)
         .withColumn("ts", F.col("ts").cast("timestamp"))  # watermark needs TimestampType, not NTZ
         .withWatermark("ts", "0 seconds")
     )
@@ -1295,7 +1168,7 @@ def streaming_update_mode_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = scratch_dir("updmode_")
     ev = load_table(spark, "events", sf_dir).select("event_id", "event_type", "value")
-    stream = _event_id_mod_stream(spark, ev, base, sf_dir)
+    stream = _event_id_mod_stream(spark, ev, base)
     agg = stream.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total_value")
     )

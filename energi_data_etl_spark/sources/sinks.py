@@ -77,6 +77,34 @@ def write_bucketed_table(
     )
 
 
+def _read_table(spark: SparkSession, path: str) -> DataFrame | None:
+    """`spark.read.parquet(path)`, or None on a cold start: `path` is
+    missing, or holds no data file (an empty `write_fact_table` commits
+    only a `_SUCCESS` marker). The check lists through the Hadoop FS API
+    (scheme-agnostic, as `maintenance._list_parquet_files`) and stops at
+    the first data file, skipping the names Spark's reader skips (`.*`,
+    and `_*` except `_key=value` partition directories). Deciding before
+    the read means a cold start never raises inside Spark, where a
+    registered `Observation` listener would log the failed read as an
+    ERROR; any other read error propagates."""
+    jvm = spark.sparkContext._jvm
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+
+    def has_data_file(p) -> bool:
+        for status in fs.listStatus(p):
+            name = status.getPath().getName()
+            if name.startswith(".") or (name.startswith("_") and "=" not in name):
+                continue
+            if not status.isDirectory() or has_data_file(status.getPath()):
+                return True
+        return False
+
+    if not fs.exists(root) or not has_data_file(root):
+        return None
+    return spark.read.parquet(path)
+
+
 def latest_watermark(spark: SparkSession, path: str, col: str = "date"):
     """MAX(partition column) — the reference's watermark query (:22-37).
     A Spark aggregate over the table's rows that decodes only the
@@ -85,11 +113,10 @@ def latest_watermark(spark: SparkSession, path: str, col: str = "date"):
     partition count (traced perfbench `etl`, seed 1, local[4]: 0.29 s in
     3 jobs of 6 tasks, down from 0.85 s and ~128 tasks when Spark listed
     the ~125 directories with one task each).
-    Returns None on an empty/missing table, or one that holds no data
-    file (reference's cold-start fallback path, :42-46)."""
-    try:
-        df = spark.read.parquet(path)
-    except Exception:  # noqa: BLE001 — table does not exist yet
+    Returns None on a missing table, or one that holds no data file
+    (reference's cold-start fallback path, :42-46)."""
+    df = _read_table(spark, path)
+    if df is None:
         return None
     row = df.agg(F.max(col).alias("wm")).first()
     return row["wm"] if row else None
@@ -114,25 +141,15 @@ def align_to_table_schema(df: DataFrame, spark: SparkSession, path: str) -> Data
       parquet matches by name, but deterministic order keeps file
       footers uniform.
 
-    Returns `df` unchanged for a cold-start (no table yet, or only the
-    `_SUCCESS` marker of an empty `write_fact_table`). Column
+    Returns `df` unchanged for a cold start (see `_read_table`). Column
     matching is case-insensitive (Spark's default resolution), so a
     case-variant rename upstream aligns to the table's spelling instead
     of producing a NULL-filled duplicate.
     """
-    from pyspark.errors import AnalysisException
-
-    try:
-        existing = spark.read.parquet(path).schema
-    except AnalysisException as exc:
-        # ONLY a missing path or one without data files means cold
-        # start; a corrupt footer or a transient storage error must
-        # propagate, not silently disable the alignment this helper
-        # exists to guarantee
-        klass = exc.getCondition() if hasattr(exc, "getCondition") else None
-        if klass in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA") or "Path does not exist" in str(exc):
-            return df
-        raise
+    table = _read_table(spark, path)
+    if table is None:
+        return df
+    existing = table.schema
     have = {f.name.lower(): f.name for f in df.schema.fields}
     cols = []
     for field in existing:

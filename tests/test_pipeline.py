@@ -163,6 +163,35 @@ def test_write_fact_table_skips_empty(spark, tmp_path):
     assert latest_watermark(spark, str(table), "date") == today
 
 
+def test_cold_start_is_decided_before_the_read(spark, tmp_path, monkeypatch):
+    """After an `Observation` write (its listener logs any failed read
+    as an ERROR), a missing path and a `_SUCCESS`-only path are cold
+    starts decided by listing alone: `DataFrameReader.parquet` is never
+    called. A path whose data file is corrupt is not a cold start, and
+    its read error propagates."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.sql import DataFrameReader
+
+    empty = spark.createDataFrame([], "date date, zone string, avg_price double")
+    success_only = tmp_path / "t"
+    assert not write_fact_table(empty, str(success_only))
+    assert [f.name for f in success_only.iterdir() if not f.name.startswith(".")] == ["_SUCCESS"]
+    real_parquet = DataFrameReader.parquet
+    calls = []
+    monkeypatch.setattr(DataFrameReader, "parquet", lambda self, *paths, **kw: calls.append(paths))
+    for path in (str(tmp_path / "missing"), str(success_only)):
+        assert latest_watermark(spark, path, "date") is None
+        assert align_to_table_schema(empty, spark, path) is empty
+    assert calls == []
+
+    monkeypatch.setattr(DataFrameReader, "parquet", real_parquet)
+    corrupt = tmp_path / "corrupt" / "date=2024-01-01"
+    corrupt.mkdir(parents=True)
+    (corrupt / "part-0.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Py4JJavaError, match="parquet"):
+        latest_watermark(spark, str(tmp_path / "corrupt"), "date")
+
+
 LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
 

@@ -948,66 +948,57 @@ def test_heavy_hitters_verdicts_and_exactness(spark, sf_dir):
         assert r["top1_n"] > r["n_events"] / 8, r
 
 
-def test_split_replay_cache_keys_track_split_parameters(monkeypatch, tmp_path):
-    """ADVICE r18 #1/#2, no Spark: replay-cache keys are built from the
-    same parameters the split filters use, so changing a split parameter
-    moves the cache path, while the two queries that drain the identical
-    event_id pmod-3 split still share one published cache. The queries
-    run against a fake frame (hand-built StructType) up to the point
-    where they hand their chunks to the cache builder."""
-    from types import SimpleNamespace
+def test_replay_chunks_build_in_one_job(spark, tmp_path):
+    """The replay writer builds all chunks in ONE Spark job, whatever
+    their shape: an overlapping part (streaming_late_data_drop's
+    replayed head repeats rows of part 0), an empty part and a plain
+    one. Each chunk is one file with a strictly increasing mtime, and
+    each replays as one micro-batch of exactly its part's rows — the
+    empty part as a 0-row batch, so later batches keep their numbers."""
+    from energi_data_etl_spark.queries.streaming import _chunked_file_stream
+    from energi_data_etl_spark.streaming.ops import drain_conf
+    from perfbench.trace import Tracer
 
-    from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
+    rows = spark.range(30).select(F.col("id").alias("k"), (F.col("id") * 0.5).alias("v"))
+    parts = [
+        rows.filter(F.col("k") < 10),
+        rows.filter(F.col("k") < 0),
+        rows.filter(F.col("k") < 5).unionByName(rows.filter(F.col("k") >= 10)),
+    ]
+    tracer = Tracer(spark.sparkContext, "replay-build")
+    tracer.enabled = True
+    with tracer.span("build") as build:
+        stream = _chunked_file_stream(spark, parts, str(tmp_path))
+    assert build["jobs"] == 1, build
 
-    import energi_data_etl_spark.queries.streaming as st
-    import energi_data_etl_spark.sources.tables as tables
+    src = tmp_path / "src"
+    files = sorted(os.listdir(src))
+    assert files == ["00.parquet", "01.parquet", "02.parquet"]
+    mtimes = [os.stat(src / f).st_mtime for f in files]
+    assert mtimes == sorted(set(mtimes)), mtimes
 
-    events = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-        ]
+    with drain_conf(spark):
+        q = (
+            stream.writeStream.format("noop")
+            .trigger(availableNow=True)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .start()
+        )
+        q.awaitTermination()
+    batches = [(p["batchId"], p["numInputRows"]) for p in q.recentProgress]
+    assert batches == [(0, 10), (1, 0), (2, 25)], batches
+
+
+def test_replays_leave_nothing_under_home(spark, sf_dir, tmp_path, monkeypatch):
+    """Replay inputs live in the query's own scratch dir: two replaying
+    queries create nothing under ``~/.cache`` that could outlive the
+    process."""
+    from energi_data_etl_spark.queries.streaming import (
+        streaming_foreachbatch_upsert,
+        streaming_late_data_drop,
     )
 
-    class FakeFrame:
-        def __init__(self, schema):
-            self.schema = schema
-
-        def select(self, *cols):
-            return FakeFrame(StructType([events[c] for c in cols]))
-
-        def filter(self, cond):
-            return self
-
-    class Published(Exception):
-        pass
-
-    seen = []
-
-    def fake_publish(spark, parts, base, cache_key=None):
-        seen.append((len(parts), st._resolved_cache_path(cache_key, parts[0].schema)))
-        raise Published
-
-    monkeypatch.setenv("SPARK_GRAFT_CACHE_DIR", str(tmp_path))
-    monkeypatch.setattr(tables, "load_table", lambda spark, name, sf_dir: FakeFrame(events))
-    monkeypatch.setattr(st, "F", SimpleNamespace(pmod=lambda c, n: 0, lit=lambda v: v))
-    monkeypatch.setattr(st, "_chunked_file_stream", fake_publish)
-
-    def drain(name):
-        try:
-            getattr(st, name)(None, str(tmp_path))
-        except Published:
-            return seen[-1]
-        raise AssertionError(f"{name} never published its replay chunks")
-
-    upsert = drain("streaming_foreachbatch_upsert")
-    update = drain("streaming_update_mode_totals")
-    assert upsert == update and upsert[0] == 3
-    monkeypatch.setattr(st, "_EVENT_ID_SPLITS", 4)
-    n4, path4 = drain("streaming_update_mode_totals")
-    assert n4 == 4 and path4 != update[1]
-
-    key = st._events_split_key(str(tmp_path), "late_drop", *st._LATE_DROP_CUTS)
-    moved = st._events_split_key(str(tmp_path), "late_drop", "2024-01-19", *st._LATE_DROP_CUTS[1:])
-    assert st._resolved_cache_path(key, events) != st._resolved_cache_path(moved, events)
+    monkeypatch.setenv("HOME", str(tmp_path))
+    assert streaming_late_data_drop(spark, sf_dir).count() > 0
+    assert streaming_foreachbatch_upsert(spark, sf_dir).count() > 0
+    assert not (tmp_path / ".cache").exists()
