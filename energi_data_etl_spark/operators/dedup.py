@@ -8,15 +8,17 @@ Design for scale (the whole point of these formulations):
   JVM-side); banding turns O(n²) pair search into a groupBy on
   (band, band_hash) buckets; only bucket-mates generate candidate
   pairs, then exact Jaccard verifies. No cartesian product anywhere.
-* SimHash              — 64-bit signature via explode + bitwise agg;
-  Hamming-≤k matching via the band-exact-match trick (pigeonhole):
-  split the 64 bits into k+1 chunks, at least one chunk equal → same
-  bucket, verify Hamming inside buckets only.
+* SimHash              — 60-bit md5 signature folded inside the row
+  (map stage, batch and stream alike); Hamming-≤k matching via the
+  band-exact-match trick (pigeonhole): split the 60 bits into k+1
+  chunks, at least one chunk equal → same bucket, verify Hamming
+  inside buckets only.
 * n-gram Jaccard       — exact pairwise, but only inside cheap blocks
   (lang × length bucket) — the blocking key is the scale lever.
 
-All hashing is Spark's xxhash64 (deterministic, seedable via literal
-prefix) — signatures are reproducible run-to-run, satisfying the
+MinHash hashing is Spark's xxhash64 (deterministic, seedable via
+literal prefix); SimHash hashes tokens with md5, which DuckDB
+reproduces — signatures are reproducible run-to-run, satisfying the
 "fix seeds" requirement (SURVEY §7 watch list).
 """
 
@@ -25,7 +27,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from .text import tokens
+from .text import tokens, word_kgrams
 
 __all__ = [
     "exact_dedup",
@@ -35,8 +37,8 @@ __all__ = [
     "lsh_bucket_stats",
     "exact_jaccard",
     "near_dup_minhash",
+    "SIMHASH_BITS",
     "simhash_signature",
-    "simhash_signature_row",
     "band_key_structs",
     "simhash_candidate_pairs",
     "hamming64",
@@ -64,11 +66,7 @@ def exact_dedup(df: DataFrame, key: Column, id_col: str = "doc_id") -> DataFrame
 
 def shingles(text_col: str | Column, n: int = 3) -> Column:
     """Word n-gram shingles as array<string> (distinct)."""
-    toks = tokens(text_col)
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-    )
+    return F.array_distinct(word_kgrams(tokens(text_col), n))
 
 
 def hashed_shingles(sh: Column) -> Column:
@@ -248,81 +246,39 @@ def near_dup_minhash(
 # --------------------------------------------------------------------------
 
 
-def simhash_signature(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_fn: str = "xxhash64",
-    bits: int = 64,
-) -> DataFrame:
-    """SimHash: per token, hash → for each bit position sum ±1 → sign
-    bit. Explode + one groupBy(id): two stages, linear.
-
-    The per-bit tally is expressed as ``bits`` conditional sums over the
-    exploded token hashes — wide but flat aggregation, all codegen.
-
-    ``hash_fn``: ``xxhash64`` (engine-local, the fast 64-bit default) or
-    ``md5`` — the cross-engine kernel (CLAUDE.md): the top 15 hex chars
-    of md5 parsed base-16 give 60 bits that DuckDB reproduces exactly
-    (``CAST('0x'||SUBSTRING(MD5(x),1,15) AS BIGINT)``), making the
-    whole signature — and therefore the candidate pair set —
-    oracle-checkable. Use bits=60 with md5."""
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    tok = df.repartition(parallelism, id_col).select(id_col, F.explode(tokens(text_col)).alias("tok"))
-    if hash_fn == "md5":
-        h = F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long")
-    else:
-        h = F.xxhash64("tok")
-    bit_sums = [
-        F.sum(F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)).alias(f"b{i}")
-        for i in range(bits)
-    ]
-    tallies = tok.groupBy(id_col).agg(*bit_sums)
-    sig = F.lit(0).cast("long")
-    for i in range(bits):
-        sig = sig + F.when(F.col(f"b{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(F.lit(0).cast("long"))
-    return tallies.select(id_col, sig.alias("simhash"))
+#: SimHash signature width: the top 15 hex digits of a token's md5.
+SIMHASH_BITS = 60
 
 
-def simhash_signature_row(
-    text_col: str | Column = "text",
-    hash_fn: str = "md5",
-    bits: int = 60,
-) -> Column:
-    """Row-local SimHash signature: the STREAMING-path twin of
-    `simhash_signature`. The batch kernel is explode + one groupBy(id)
-    — a shuffle a stateless stream stage can't afford (a streaming
-    groupBy(doc_id) would be an unbounded stateful agg for what is
-    logically a per-row computation). Here the whole signature is
-    computed inside the row: tokenize → per-token hash via
-    ``F.transform`` (the md5/15-hex kernel stays JVM-side, engine-
-    consistent lowercasing) → an Arrow-batched pandas UDF folds the
-    ±1 bit tallies in numpy. Tie rule is ``tally > 0`` (strict),
-    bit-for-bit the batch kernel's — pinned by
-    tests/test_streaming.py::test_row_signature_matches_batch_kernel.
+def simhash_signature(text_col: str | Column = "text") -> Column:
+    """SimHash signature of a document's tokens, computed inside the
+    row: per token the top 15 hex digits of md5 parsed base-16 (60
+    bits, JVM-side ``F.transform``), then an Arrow-batched pandas UDF
+    folds the ±1 bit tallies in numpy and sets bit i iff its tally is
+    > 0 (a tie clears the bit). DuckDB reproduces every step
+    (``CAST('0x'||SUBSTRING(MD5(tok),1,15) AS BIGINT)``), so
+    the signature — and therefore the candidate pair set — is oracle-
+    checkable. The same Column serves the batch pair search and the
+    streaming suppressor.
 
-    Empty token lists fold to signature 0; callers that must mirror a
-    groupBy-based oracle (which DROPS token-less docs) filter
-    ``size(tokens(text)) > 0`` first.
+    Token-less docs fold to signature 0; callers that mirror the
+    GROUP BY oracle (which drops them) filter ``size(tokens(text)) > 0``
+    first.
 
-    Scale: a map-only stage — no shuffle, no state; the Python cost is
-    one vectorized (n_tokens × bits) fold per doc per Arrow batch. The
-    batch explode+groupBy kernel remains the bulk-backfill path."""
+    Scale: a map stage — no shuffle, no state; the Python cost is one
+    vectorized (n_tokens × 60) fold per doc per Arrow batch."""
     import pandas as pd  # noqa: F401 — pandas_udf import-time dependency
 
-    toks = tokens(text_col)
-    if hash_fn == "md5":
-        hasher = lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")  # noqa: E731
-    else:
-        hasher = lambda t: F.xxhash64(t)  # noqa: E731
-    hashes = F.transform(toks, hasher)
+    hashes = F.transform(
+        tokens(text_col), lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
+    )
 
     @F.pandas_udf("long")
     def fold(hs):  # type: ignore[no-untyped-def]
         import numpy as np
         import pandas as pd
 
-        shifts = np.arange(bits, dtype=np.int64)
+        shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
         out = np.zeros(len(hs), dtype=np.int64)
         for i, row in enumerate(hs):
             if row is None or len(row) == 0:
@@ -340,7 +296,7 @@ def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def band_key_structs(sig_col: Column, bits: int, chunks: int) -> Column:
+def band_key_structs(sig_col: Column, chunks: int) -> Column:
     """Array of struct(chunk, key): a signature's pigeonhole band keys
     (chunk c = bits [c·width, (c+1)·width)). This expression IS the
     completeness argument — any Hamming-≤(chunks−1) pair agrees exactly
@@ -348,7 +304,7 @@ def band_key_structs(sig_col: Column, bits: int, chunks: int) -> Column:
     (`simhash_candidate_pairs`) and the streaming suppressor
     (streaming/ops.py::neardup_suppress_stream) so the two can't
     drift apart."""
-    width = bits // chunks
+    width = SIMHASH_BITS // chunks
     return F.array(
         *[
             F.struct(
@@ -363,7 +319,7 @@ def band_key_structs(sig_col: Column, bits: int, chunks: int) -> Column:
 
 
 def simhash_candidate_pairs(
-    sig_df: DataFrame, id_col: str = "doc_id", max_hamming: int = 3, bits: int = 64
+    sig_df: DataFrame, id_col: str = "doc_id", max_hamming: int = 3
 ) -> DataFrame:
     """Hamming-≤k pair search via the pigeonhole band trick: split the
     signature into k+1 chunks; any pair within distance k agrees exactly
@@ -371,14 +327,13 @@ def simhash_candidate_pairs(
 
     The signature frame is checkpointed first: both sides of the
     self-join read it, and without the checkpoint each side recomputes
-    the full |bits|-conditional-sum signature pipeline (measured as a
-    doubled corpus scan in the plan audit)."""
+    the tokenize + md5 + fold signature stage."""
     chunks = max_hamming + 1
     sig_df = sig_df.localCheckpoint(eager=False)
     banded = sig_df.select(
         id_col,
         "simhash",
-        F.explode(band_key_structs(F.col("simhash"), bits, chunks)).alias("cb"),
+        F.explode(band_key_structs(F.col("simhash"), chunks)).alias("cb"),
     ).select(id_col, "simhash", "cb.chunk", "cb.key")
     a, b = banded.alias("a"), banded.alias("b")
     return (

@@ -1,12 +1,10 @@
 """Training-data pipeline operators (BASELINE.json north star: the ops a
 large-scale LLM training-data pipeline runs between "corpus" and
 "training shards"): deterministic hash splits, leakage-safe
-cluster-aware splits, benchmark-contamination detection, token-budget
-packing, stratified sampling.
+cluster-aware splits, token-budget packing, snapshot diffs.
 
 Everything is a pure DataFrame composition — hash-based assignment is a
-map stage (no shuffle), packing is a window + floor-div, contamination
-is a hashed-shingle equi-join (bucketed, never all-pairs). Each has an
+map stage (no shuffle), packing is a window + floor-div. Each has an
 exact DuckDB twin via md5 (the only hash both engines share bit-for-bit;
 xxhash64/hash() are engine-specific and MUST NOT appear in compared
 output or join keys).
@@ -21,7 +19,6 @@ __all__ = [
     "hash_bucket",
     "assign_split",
     "pack_into_chunks",
-    "shingle_hashes",
     "snapshot_diff",
 ]
 
@@ -65,29 +62,6 @@ def pack_into_chunks(df: DataFrame, n_tokens: Column, order_col: str, budget: in
         .withColumn("__cum_before", F.sum("n_tok").over(w) - F.col("n_tok"))
         .withColumn("chunk_id", F.floor(F.col("__cum_before") / budget))
         .drop("__cum_before")
-    )
-
-
-def shingle_hashes(text_col: str, k: int = 3, hash_fn: str = "md5") -> Column:
-    """Distinct k-gram shingles of the whitespace tokens, hashed to
-    int64 (the text.py lesson: join set-op keys as ints, not strings).
-
-    hash_fn="md5" (default) is cross-engine reproducible — required
-    wherever a DuckDB oracle recomputes the same hashes — but costs an
-    md5 + hex-parse per gram. hash_fn="xxhash64" is the hot-path choice
-    (the contamination scan ran 3× faster at 100k docs, BASELINE.md
-    "Pipeline-tier scale probe"): engine-local, so only valid when both join sides are hashed by THIS
-    engine in the same job (true for any contamination/overlap scan)."""
-    from .text import tokens
-
-    toks = tokens(text_col)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)))
-    if hash_fn == "xxhash64":
-        return F.array_distinct(F.transform(grams, lambda g: F.xxhash64(g)))
-    return F.array_distinct(
-        F.transform(grams, lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("bigint"))
     )
 
 

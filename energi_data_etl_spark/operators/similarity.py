@@ -144,6 +144,18 @@ def unit_vector(a: Column) -> Column:
     )
 
 
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Per query, the k best (query_id, neighbor_id, __cos) rows by
+    cosine, ties to the smaller neighbor id → (query_id, neighbor_id,
+    rank, cos_sim) with cos_sim rounded to 4 places."""
+    w = Window.partitionBy("query_id").orderBy(F.col("__cos").desc(), F.col("neighbor_id").asc())
+    return (
+        scored.select("*", F.row_number().over(w).alias("rank"))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", F.round("__cos", 4).alias("cos_sim"))
+    )
+
+
 def exact_knn(
     queries: DataFrame,
     corpus: DataFrame,
@@ -162,12 +174,7 @@ def exact_knn(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", dot(F.col("__qv"), F.col("__cv")).alias("__cos"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("__cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("__cos", 4).alias("cos_sim"))
-    )
+    return _top_k(scored, k)
 
 
 def neardup_pairs_matmul(
@@ -762,12 +769,7 @@ def ann_ivf_knn(
         .groupBy("query_id", "neighbor_id")
         .agg(F.first("__cos").alias("__cos"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("__cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("__cos", 4).alias("cos_sim"))
-    )
+    return _top_k(scored, k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -933,15 +935,10 @@ def ann_lsh_knn(
         .groupBy("query_id", "neighbor_id")
         .agg(F.first("__cos").alias("__cos"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("__cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("__cos", 4).alias("cos_sim"))
-    )
+    return _top_k(scored, k)
 
 
-def gram_partials(df: DataFrame, col: str = "embedding", dim: int = 64) -> DataFrame:
+def gram_partials(df: DataFrame, col: str = "embedding") -> DataFrame:
     """Single-pass distributed Gram accumulation — the PCA / covariance
     precursor: every partition folds its vectors into one ``X.T @ X``
     (d x d), a column sum (d) and a count, so the shuffle that follows
@@ -959,15 +956,13 @@ def gram_partials(df: DataFrame, col: str = "embedding", dim: int = 64) -> DataF
     import pandas as pd
 
     def fold(batches):
-        g = np.zeros((dim, dim), dtype=np.float64)
-        s = np.zeros(dim, dtype=np.float64)
-        n = 0
+        g, s, n = 0.0, 0.0, 0
         for pdf in batches:
             if not len(pdf):
                 continue
             x = np.vstack(pdf[col].to_numpy()).astype(np.float64, copy=False)
-            g += x.T @ x
-            s += x.sum(axis=0)
+            g = g + x.T @ x
+            s = s + x.sum(axis=0)
             n += x.shape[0]
         if n:
             yield pd.DataFrame({"g": [g.ravel().tolist()], "s": [s.tolist()], "n": [n]})
@@ -975,7 +970,7 @@ def gram_partials(df: DataFrame, col: str = "embedding", dim: int = 64) -> DataF
     return df.select(col).mapInPandas(fold, schema="g array<double>, s array<double>, n bigint")
 
 
-def covariance_matrix(df: DataFrame, col: str = "embedding", dim: int = 64) -> DataFrame:
+def covariance_matrix(df: DataFrame, col: str = "embedding") -> DataFrame:
     """Population covariance matrix from one corpus pass: reduce the
     per-partition Gram partials (posexplode -> sum per flat index — a
     shuffle of partitions·d² scalar rows, nothing corpus-sized), then
@@ -984,16 +979,15 @@ def covariance_matrix(df: DataFrame, col: str = "embedding", dim: int = 64) -> D
     turns this into PCA axes is a driver-side numpy call on a d x d
     matrix — the only part of the pipeline that is not data-parallel,
     and it is O(d³), data-size-independent."""
-    parts = gram_partials(df, col, dim).localCheckpoint(eager=False)
+    parts = gram_partials(df, col).localCheckpoint(eager=False)
+    # the width d is the data's: each partial's column-sum vector has d entries
     gsum = (
-        parts.select(F.posexplode("g").alias("idx", "v"))
-        .groupBy("idx")
-        .agg(F.sum("v").alias("sxy"))
-        .select(
-            (F.col("idx") / dim).cast("int").alias("i"),
-            F.pmod("idx", F.lit(dim)).cast("int").alias("j"),
-            "sxy",
+        parts.select(F.size("s").alias("d"), F.posexplode("g").alias("idx", "v"))
+        .groupBy(
+            (F.col("idx") / F.col("d")).cast("int").alias("i"),
+            F.pmod("idx", F.col("d")).cast("int").alias("j"),
         )
+        .agg(F.sum("v").alias("sxy"))
     )
     ssum = (
         parts.select(F.posexplode("s").alias("idx", "v"))

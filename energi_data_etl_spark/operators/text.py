@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 
 __all__ = [
     "tokens",
+    "word_kgrams",
     "token_count",
     "stopword_ratio",
     "language_scores",
@@ -38,6 +39,17 @@ def tokens(col: str | Column, lowercase: bool = True) -> Column:
     if lowercase:
         c = F.lower(c)
     return F.filter(F.split(c, " "), lambda t: F.length(t) > 0)
+
+
+def word_kgrams(toks: str | Column, k: int) -> Column:
+    """Ordered word k-grams of a token array → array<string>, each the
+    k tokens joined by one space, duplicates kept. A doc with fewer
+    than k tokens yields one gram of all its tokens (an empty array
+    yields ``[""]``). THE k-gram expression: shingles, winnowing and the
+    gram-counting queries all call it."""
+    t = F.col(toks) if isinstance(toks, str) else toks
+    idx = F.sequence(F.lit(0), F.greatest(F.size(t) - k, F.lit(0)))
+    return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(t, i + 1, k)))
 
 
 def token_count(col: str | Column) -> Column:
@@ -118,10 +130,7 @@ def winnowing_fingerprint(text_col: str = "text", k: int = 3, w: int = 4) -> Col
     reproducible across engines; lexicographic min over hex digests is
     a valid uniform selector. Pure expression — map stage.
     """
-    toks = tokens(text_col)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    kgram_hashes = F.transform(idx, lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i + 1, k))))
+    kgram_hashes = F.transform(word_kgrams(tokens(text_col), k), F.md5)
     n_h = F.size(kgram_hashes)
     win_idx = F.sequence(F.lit(1), F.greatest(n_h - w + 1, F.lit(1)))
     mins = F.transform(win_idx, lambda i: F.array_min(F.slice(kgram_hashes, i, w)))

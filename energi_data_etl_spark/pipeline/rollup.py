@@ -20,13 +20,23 @@ append, energy_etl.py:22-108). Generalized here into engine operators:
 
 from __future__ import annotations
 
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.sinks import latest_watermark, write_fact_table
 
 __all__ = ["refresh_rollup", "streaming_rollup"]
+
+
+def _overwrite_days(days: DataFrame, rollup_path: str) -> None:
+    """Replace only the date partitions present in ``days``, one file each."""
+    (
+        days.repartition(1, F.col("date"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("date")
+        .parquet(rollup_path)
+    )
 
 
 def refresh_rollup(
@@ -56,22 +66,18 @@ def refresh_rollup(
     n_days = rolled.select("date").distinct().count()
     if n_days == 0:
         return 0
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        if wm is None:
-            write_fact_table(rolled, rollup_path, partition_by=("date",), mode="append", audit=True)
-        else:
-            # overwrite ONLY the partitions present in `rolled`.
-            # repartition(1) is safe ONLY because the payload is the
-            # post-aggregation rollup (|days|x|types| rows per refresh,
-            # never fact-sized) and buys one file per date partition;
-            # if the rollup grain ever grows past one task's comfort,
-            # switch to repartition("date") (r13 fixed-count lesson).
-            out = rolled.withColumn("load_timestamp", F.current_timestamp())
-            out.repartition(1, F.col("date")).write.mode("overwrite").partitionBy("date").parquet(rollup_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    if wm is None:
+        write_fact_table(rolled, rollup_path, partition_by=("date",), mode="append", audit=True)
+    else:
+        # overwrite ONLY the partitions present in `rolled` (the write
+        # option, not the session conf, so no other query sees it).
+        # repartition(1) is safe ONLY because the payload is the
+        # post-aggregation rollup (|days|x|types| rows per refresh,
+        # never fact-sized) and buys one file per date partition;
+        # if the rollup grain ever grows past one task's comfort,
+        # switch to repartition("date").
+        out = rolled.withColumn("load_timestamp", F.current_timestamp())
+        _overwrite_days(out, rollup_path)
     return n_days
 
 
@@ -88,22 +94,16 @@ def streaming_rollup(
     give effective exactly-once)."""
 
     def upsert_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
         days = (
             batch_df.withColumn("date", F.to_date("ts"))
             .groupBy("date", key_col)
             .agg(F.avg(value_col).alias("avg_value"), F.count(F.lit(1)).alias("n_events"))
             .withColumn("load_timestamp", F.current_timestamp())
         )
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            # single-task write is bounded by the per-batch AGGREGATE
-            # size (|days in batch|x|types|), not the batch row count —
-            # see the incremental_rollup note above
-            days.repartition(1, F.col("date")).write.mode("overwrite").partitionBy("date").parquet(rollup_path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # single-task write is bounded by the per-batch AGGREGATE
+        # size (|days in batch|x|types|), not the batch row count —
+        # see the incremental_rollup note above
+        _overwrite_days(days, rollup_path)
 
     (
         stream.writeStream.foreachBatch(upsert_batch)

@@ -11,6 +11,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ..operators import dedup as D
 from ..operators import pipeline as P
 from ..operators import text as X
 from ..sources.tables import load_table
@@ -154,7 +155,7 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (evaluated twice per branch, once single-threaded below the
     # repartition); inline, no filter is inferred and each branch hashes
     # its slice exactly once, post-shuffle
-    sh = P.shingle_hashes("text", k=3, hash_fn="xxhash64")
+    sh = D.hashed_shingles(D.shingles("text", 3))
     d = load_table(spark, "documents", sf_dir).repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )
@@ -734,7 +735,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sparkContext.defaultParallelism, "doc_id"
     )
     per_h = (
-        d.select("source", F.explode(P.shingle_hashes("text", k=3, hash_fn="xxhash64")).alias("h"))
+        d.select("source", F.explode(D.hashed_shingles(D.shingles("text", 3))).alias("h"))
         .groupBy("h")
         .agg(F.sort_array(F.collect_set("source")).alias("ss"))
         .filter(F.size("ss") > 1)
@@ -1389,13 +1390,9 @@ def boilerplate_ngram_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.explode(
             F.array_distinct(
-                F.when(
-                    F.size("t") >= 3,
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("t") - 2),
-                        lambda i: F.concat_ws(" ", F.slice("t", i, 3)),
-                    ),
-                ).otherwise(F.array().cast("array<string>"))
+                F.when(F.size("t") >= 3, X.word_kgrams("t", 3)).otherwise(
+                    F.array().cast("array<string>")
+                )
             )
         ).alias("g"),
     ).localCheckpoint(eager=False)  # feeds df-count AND the audit join-back

@@ -156,18 +156,16 @@ def neardup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# `neardup_simhash` (xxhash64 production SimHash, rows-only) was
-# retired from the catalog in r16 (VERDICT r15 #7): its only driver row
-# was an r04 `err: no_oracle` slot-burn, and its ALGORITHM is certified
-# bit-for-bit by `neardup_simhash_md5` below (same pipeline, md5
-# kernel, brute-force-pairs oracle). The xxhash64 path stays the
-# production operator (`operators/dedup.py::simhash_signature` /
-# `simhash_candidate_pairs` defaults) and is exact-method tested in
-# tests/test_llm_ops.py — the SURVEY §5.2 rows-only policy, minus the
-# ledger ambiguity.
+# The SimHash the oracle certifies is the one that runs: batch and
+# stream share `operators/dedup.py::simhash_signature` (md5 token hash,
+# 60 bits, row-local fold), which runs neardup_simhash_md5 in
+# 1.10-1.18 s where an explode + groupBy kernel took 2.38 s (sf0.1,
+# local[4], min of 3, BASELINE.md). There is no xxhash64 mode: it would
+# sign 40k docs in 0.79 s vs md5's 1.37 s, but DuckDB cannot replay it,
+# so no oracle could check it.
 
 
-def simhash_md5_sig_cte(bits: int = 60) -> str:
+def simhash_md5_sig_cte() -> str:
     """The shared DuckDB CTE chain rebuilding the md5-kernel SimHash
     signature per document (top 15 md5 hex chars → base-16 long, ±1 bit
     tallies, sign bits — the cross-engine kernel, CLAUDE.md). Used by
@@ -179,7 +177,7 @@ def simhash_md5_sig_cte(bits: int = 60) -> str:
     sig_terms = " + ".join(
         f"(CASE WHEN SUM(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) > 0 "
         f"THEN (CAST(1 AS BIGINT) << {i}) ELSE 0 END)"
-        for i in range(bits)
+        for i in range(D.SIMHASH_BITS)
     )
     return f"""
         WITH toks AS (
@@ -198,12 +196,12 @@ def simhash_md5_sig_cte(bits: int = 60) -> str:
         )"""
 
 
-def _simhash_md5_oracle(bits: int = 60, max_hamming: int = 3) -> str:
+def _simhash_md5_oracle(max_hamming: int = 3) -> str:
     """DuckDB replica of the md5-kernel SimHash: same 60-bit signature
     per document (`simhash_md5_sig_cte`), then BRUTE-FORCE all-pairs
     Hamming — so the oracle certifies the Spark pigeonhole banding finds
     EXACTLY the Hamming-≤k pair set, completeness included."""
-    return f"""{simhash_md5_sig_cte(bits)}
+    return f"""{simhash_md5_sig_cte()}
         SELECT s1.doc_id AS a, s2.doc_id AS b,
                CAST(BIT_COUNT(XOR(s1.simhash, s2.simhash)) AS BIGINT) AS hamming
         FROM sig s1 JOIN sig s2 ON s1.doc_id < s2.doc_id
@@ -218,28 +216,30 @@ def _simhash_md5_oracle(bits: int = 60, max_hamming: int = 3) -> str:
     oracle=_simhash_md5_oracle(),
 )
 def neardup_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The correctness twin of `neardup_simhash`: identical pipeline
-    (token → hash → ±1 bit tallies → sign signature → pigeonhole
-    chunk-band join → Hamming verify) but on the md5 cross-engine
-    kernel (top 15 hex chars → 60 bits, CLAUDE.md), which DuckDB
-    reproduces bit-for-bit. The oracle rebuilds the SAME signatures and
-    brute-forces ALL pairs — a hash match therefore certifies both
-    directions of the banding: no false pair survives the verify AND
-    no Hamming-≤3 pair escapes the pigeonhole bands (completeness, the
-    part tests could only sample). xxhash64 stays the production hash
-    (`neardup_simhash`, rows-only): one engine-local 64-bit hash call
-    per token vs md5+hex-parse, same plan shape — this twin pays the
-    kernel cost to make the ALGORITHM driver-certifiable, the same
-    split as exact_knn vs ann_lsh_topk.
+    """SimHash near-dup pairs: token → md5 hash → ±1 bit tallies → sign
+    signature (`D.simhash_signature`, folded inside the row) →
+    pigeonhole chunk-band join → Hamming verify. DuckDB reproduces the
+    md5 kernel (top 15 hex chars → 60 bits) bit-for-bit. The
+    oracle rebuilds the SAME signatures and brute-forces ALL pairs — a
+    hash match therefore certifies both directions of the banding: no
+    false pair survives the verify AND no Hamming-≤3 pair escapes the
+    pigeonhole bands (completeness, the part tests could only sample).
+    Token-less docs are dropped before signing, as the oracle's
+    GROUP BY drops them.
 
-    Scale: identical to neardup_simhash — explode + one groupBy(id)
-    for signatures (60 conditional sums, all codegen), chunk-band
-    equi-join for candidates; the oracle's all-pairs check is the
-    DuckDB side only, never the Spark plan."""
+    Scale: signatures are a map stage over the scan's own splits,
+    candidates one chunk-band equi-join; the oracle's all-pairs check is
+    the DuckDB side only, never the Spark plan. The fixture is one row
+    group, yet fanning it out costs more than it saves: at sf0.1 a
+    repartition to 32 threads on a 4-core host runs 32 Python tasks and
+    took 3.1-4.1 s against 1.1-1.7 s for the single scan task (same at
+    4 threads, ~1.1 s)."""
     d = load_table(spark, "documents", sf_dir)
-    sigs = D.simhash_signature(d, hash_fn="md5", bits=60)
+    sigs = d.filter(F.size(X.tokens("text")) > 0).select(
+        "doc_id", D.simhash_signature("text").alias("simhash")
+    )
     return (
-        D.simhash_candidate_pairs(sigs, max_hamming=3, bits=60)
+        D.simhash_candidate_pairs(sigs, max_hamming=3)
         .select("a", "b", F.col("hamming").cast("long").alias("hamming"))
         .orderBy("a", "b")
     )
@@ -984,7 +984,7 @@ def embedding_covariance_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, "embeddings", sf_dir).repartition(
         spark.sparkContext.defaultParallelism
     )
-    cov = S.covariance_matrix(e, "embedding", dim=64)
+    cov = S.covariance_matrix(e, "embedding")
     return cov.filter((F.col("i") < 8) & (F.col("j") <= F.col("i"))).select(
         "i", "j", (F.floor(F.col("cov") * 1000000.0) / 1000000.0).alias("cov")
     )
@@ -1123,9 +1123,7 @@ def vocabulary_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus-linear stage runs as one task (CLAUDE.md r07 rule)
     d = d.repartition(spark.sparkContext.defaultParallelism)
     max_id = d.agg(F.max("doc_id")).collect()[0][0] + 1  # bounded driver scalar
-    toks = X.tokens("text")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - 3, F.lit(0)))
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 3)))
+    grams = X.word_kgrams(X.tokens("text"), 3)
     words = d.select(
         (F.col("doc_id") * 10 / F.lit(max_id)).cast("int").alias("bucket"),
         F.explode(grams).alias("gram"),
@@ -1240,9 +1238,7 @@ def inverted_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, "documents", sf_dir).select("doc_id", "text")
     d = d.repartition(spark.sparkContext.defaultParallelism)  # fan out the gram explode
     n_docs = d.count()  # bounded driver scalar for the relative gate
-    toks = X.tokens("text")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - 2, F.lit(0)))
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 2)))
+    grams = X.word_kgrams(X.tokens("text"), 2)
     pairs = d.select("doc_id", F.explode(grams).alias("gram")).distinct()
     postings = (
         pairs.groupBy("gram")

@@ -594,7 +594,7 @@ def _neardup_suppress_oracle() -> str:
     from .llm import simhash_md5_sig_cte
 
     return (
-        simhash_md5_sig_cte(bits=60)
+        simhash_md5_sig_cte()
         + """
         SELECT d.doc_id AS doc_id, d.simhash AS simhash
         FROM sig d
@@ -625,7 +625,7 @@ def _neardup_suppress_capped_oracle(cap: int) -> str:
     from .llm import simhash_md5_sig_cte
 
     return (
-        simhash_md5_sig_cte(bits=60)
+        simhash_md5_sig_cte()
         + f""",
         bounds AS (SELECT MIN(doc_id) AS mn, MAX(doc_id) AS mx FROM documents),
         bands AS (
@@ -673,7 +673,7 @@ def _neardup_suppress_run(spark: SparkSession, sf_dir: str, state_cap: int | Non
     replay → row-local md5 SimHash → `neardup_suppress_stream`
     (optionally state-capped) → per-batch reduce + idempotent
     per-batch-id parquet append → read-back of the admitted set."""
-    from ..operators.dedup import simhash_signature_row
+    from ..operators.dedup import simhash_signature
     from ..operators.text import tokens
     from ..sources.tables import load_table
     from ..streaming.ops import neardup_suppress_stream
@@ -687,9 +687,9 @@ def _neardup_suppress_run(spark: SparkSession, sf_dir: str, state_cap: int | Non
     sigs = (
         stream.repartition("doc_id")
         .filter(F.size(tokens("text")) > 0)
-        .select("doc_id", simhash_signature_row("text", hash_fn="md5", bits=60).alias("simhash"))
+        .select("doc_id", simhash_signature("text").alias("simhash"))
     )
-    verdicts = neardup_suppress_stream(sigs, bits=60, max_hamming=3, state_cap=state_cap)
+    verdicts = neardup_suppress_stream(sigs, max_hamming=3, state_cap=state_cap)
 
     sink = f"{base}/kept"
     progress = {"last": -1}
@@ -731,7 +731,7 @@ def streaming_neardup_suppress(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time near-duplicate suppression — the streaming twin of
     the batch L2 family: documents arrive id-ordered in three
     micro-batches, each computes its 60-bit md5-kernel SimHash
-    ROW-LOCALLY (`simhash_signature_row` — no shuffle, no streaming
+    ROW-LOCALLY (`simhash_signature` — no shuffle, no streaming
     groupBy), is banded into 4 pigeonhole chunks, and
     `neardup_suppress_stream` admits it iff NO earlier document within
     any shared band bucket is within Hamming ≤ 3 — state (per-bucket

@@ -272,7 +272,7 @@ def stateful_user_totals(stream: DataFrame, timeout: str = "NoTimeout") -> DataF
 
 
 def neardup_suppress_stream(
-    sig_stream: DataFrame, bits: int = 60, max_hamming: int = 3, state_cap: int | None = None
+    sig_stream: DataFrame, max_hamming: int = 3, state_cap: int | None = None
 ) -> DataFrame:
     """Streaming near-duplicate SUPPRESSION (T6×L2×U2): first-seen-wins
     dedup of a document firehose by SimHash, with LSH-banded state in
@@ -341,7 +341,7 @@ def neardup_suppress_stream(
     banded = sig_stream.select(
         "doc_id",
         "simhash",
-        F.explode(band_key_structs(F.col("simhash"), bits, chunks)).alias("cb"),
+        F.explode(band_key_structs(F.col("simhash"), chunks)).alias("cb"),
     ).select("doc_id", "simhash", F.col("cb.chunk").alias("chunk"), F.col("cb.key").alias("key"))
 
     out_schema = "doc_id long, simhash long, hit boolean"
@@ -564,70 +564,6 @@ def stream_to_parquet(stream: DataFrame, path: str, checkpoint: str) -> None:
         .trigger(availableNow=True)
         .start()
         .awaitTermination()
-    )
-
-
-def has_transform_with_state() -> bool:
-    """transformWithStateInPandas needs google.protobuf in the Python
-    env (the driver-side state worker imports StateMessage_pb2) and the
-    RocksDB state store provider. Protobuf is NOT in this container, so
-    the capability is probed, never assumed — callers fall back to
-    applyInPandasWithState (stateful_user_totals), which expresses the
-    same keyed-state semantics on the battle-tested v1 API."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def stateful_user_totals_tws(stream: DataFrame) -> DataFrame:
-    """stateful_user_totals on the v2 stateful API
-    (transformWithStateInPandas, Spark 4): a StatefulProcessor with a
-    typed ValueState replaces the raw GroupState tuple — the API adds
-    composable state variables (value/list/map), timers, and TTL, which
-    is what production state machines outgrow applyInPandasWithState
-    for. Semantics here are IDENTICAL to stateful_user_totals so the
-    two are differentially testable when the environment has protobuf
-    (tests/test_streaming.py gates on has_transform_with_state()).
-
-    Requires spark.sql.streaming.stateStore.providerClass =
-    ...RocksDBStateStoreProvider (set it before starting the query).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class Totals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState("totals", "n long, total double")
-
-        def handleInputRows(self, key, rows, timer_values):  # noqa: ANN001
-            import pandas as pd
-
-            n, total = self._st.get() if self._st.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._st.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 4)]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            Totals(),
-            outputStructType="user_id long, n_events long, total_value double",
-            outputMode="Update",
-            timeMode="None",
-        )
     )
 
 

@@ -552,7 +552,7 @@ def probe_state_decomp(spark, docs_small: int, docs_big: int,
                 key = f"{provider}_{mode}"
                 with _with_provider(spark, provider):
                     row[key] = _drain_with_state_metrics(
-                        neardup_suppress_stream(stream, bits=60, max_hamming=3, state_cap=sc)
+                        neardup_suppress_stream(stream, max_hamming=3, state_cap=sc)
                     )
                 print(f"[suppress {label}] {key}: {row[key]}", flush=True)
         out["suppress"][label] = row

@@ -196,3 +196,26 @@ def test_api_document_path_is_formatted_once():
             f"{path.name}:{i}" for i, line in enumerate(text.splitlines(), 1) if i not in docs and spelling.search(line)
         ]
     assert len(found) == 1, f"the API document path is spelled {len(found)} times: {found}"
+
+
+def test_md5_60_token_hash_and_kgram_slice_are_written_once():
+    """Package code writes the 15-hex-digit md5 token hash once
+    (`dedup.simhash_signature`) and the word k-gram slice once
+    (`text.word_kgrams`); every other caller goes through them.
+    Docstrings and the DuckDB oracle SQL may spell either."""
+    import ast
+    import re
+
+    spellings = {
+        "md5-60": re.compile(r"F\.substring\(F\.md5\(.*,\s*1,\s*15\)"),
+        "k-gram slice": re.compile(r"concat_ws\(\" \", F\.slice\("),
+    }
+    found = {k: [] for k in spellings}
+    for path in (Path(__file__).resolve().parents[1] / "energi_data_etl_spark").rglob("*.py"):
+        text = path.read_text()
+        docs = {i for d in _docstrings(ast.parse(text)) for i in range(d.lineno, d.end_lineno + 1)}
+        for i, line in enumerate(text.splitlines(), 1):
+            for k, rx in spellings.items():
+                if i not in docs and rx.search(line):
+                    found[k].append(f"{path.name}:{i}")
+    assert {k: len(v) for k, v in found.items()} == {"md5-60": 1, "k-gram slice": 1}, found

@@ -65,9 +65,36 @@ def test_minhash_finds_synthetic_near_dups(spark):
 # --------------------------------------------------------------------------
 
 
+def _simhash_sigs(df):
+    return df.select("doc_id", D.simhash_signature("text").alias("simhash"))
+
+
+def _md5_60_simhash(text):
+    """Pure-Python md5-60 SimHash: bit i is set iff more tokens have it
+    set than clear (a tie clears it); no tokens → 0."""
+    import hashlib
+
+    hs = [int(hashlib.md5(t.encode()).hexdigest()[:15], 16) for t in text.lower().split(" ") if t]
+    tallies = [sum(1 if (h >> i) & 1 else -1 for h in hs) for i in range(D.SIMHASH_BITS)]
+    return sum(1 << i for i, t in enumerate(tallies) if t > 0), tallies
+
+
+def test_simhash_signature_matches_pure_python_md5_60(spark):
+    """The one SimHash kernel, checked bit for bit against a
+    pure-Python md5-60 SimHash: a token-less doc signs to 0, and the
+    two-token doc has tied bit tallies, which must come out cleared."""
+    texts = ["", "   ", "Alpha beta", "alpha  alpha beta gamma", "the quick brown fox jumps over the lazy dog"]
+    rows = [(i, t) for i, t in enumerate(texts)]
+    got = {r.doc_id: r.simhash for r in _simhash_sigs(spark.createDataFrame(rows, "doc_id long, text string")).collect()}
+    want = {i: _md5_60_simhash(t)[0] for i, t in rows}
+    assert got == want
+    assert got[0] == got[1] == 0
+    assert 0 in _md5_60_simhash(texts[2])[1], "the two-token doc must exercise a tied tally"
+
+
 def test_simhash_identical_docs_distance_zero(spark):
     rows = [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta"), (3, "zeta eta theta iota kappa")]
-    sigs = D.simhash_signature(spark.createDataFrame(rows, "doc_id long, text string"))
+    sigs = _simhash_sigs(spark.createDataFrame(rows, "doc_id long, text string"))
     s = {r.doc_id: r.simhash for r in sigs.collect()}
     assert s[1] == s[2] != s[3]
     pairs = D.simhash_candidate_pairs(sigs, max_hamming=3).collect()
@@ -78,7 +105,7 @@ def test_simhash_small_edit_small_distance(spark):
     base = ["w%d" % i for i in range(60)]
     edited = base[:-1] + ["different"]
     df = spark.createDataFrame([(1, " ".join(base)), (2, " ".join(edited))], "doc_id long, text string")
-    sigs = {r.doc_id: r.simhash for r in D.simhash_signature(df).collect()}
+    sigs = {r.doc_id: r.simhash for r in _simhash_sigs(df).collect()}
     from energi_data_etl_spark.operators.dedup import hamming64  # noqa: F401
 
     dist = bin(sigs[1] ^ sigs[2]).count("1")
@@ -292,12 +319,29 @@ def test_covariance_matrix_matches_numpy_exactly(spark, sf_dir):
 
     e = load_table(spark, "embeddings", sf_dir).repartition(8)
     got = np.zeros((64, 64))
-    for r in covariance_matrix(e, "embedding", dim=64).collect():
+    for r in covariance_matrix(e, "embedding").collect():
         got[r.i, r.j] = r.cov
     x = np.vstack([np.asarray(r.embedding, dtype=np.float64) for r in e.select("embedding").collect()])
     want = np.cov(x, rowvar=False, bias=True)  # population (divide by n)
     assert np.abs(got - want).max() < 1e-9
     assert np.abs(got - got.T).max() < 1e-12
+
+
+def test_covariance_matrix_reads_the_vector_width_from_the_data(spark):
+    """An 8-d column gives the 8x8 population covariance: the width is
+    the data's, not a parameter."""
+    import numpy as np
+
+    from energi_data_etl_spark.operators.similarity import covariance_matrix
+
+    x = np.random.default_rng(7).normal(size=(200, 8))
+    df = spark.createDataFrame([(v.tolist(),) for v in x], "embedding array<double>").repartition(3)
+    got = np.zeros((8, 8))
+    rows = covariance_matrix(df, "embedding").collect()
+    for r in rows:
+        got[r.i, r.j] = r.cov
+    assert len(rows) == 64
+    assert np.abs(got - np.cov(x, rowvar=False, bias=True)).max() < 1e-9
 
 
 def test_quantize_error_int8_matches_numpy_exactly(spark, sf_dir):

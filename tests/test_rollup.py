@@ -37,7 +37,9 @@ def test_incremental_refresh_equals_full_recompute(spark, tmp_path):
     day2_rest = [(_ts("2024-01-02T05:00:00"), "click", 200.0)]
     day3 = [(_ts("2024-01-03T00:00:00"), "view", 7.0)]
     full = day1 + day2_partial + day2_rest + day3
+    before = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     assert refresh_rollup(spark, _ev(spark, full), path) == 2  # day2 redone + day3
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == before  # a write option, not a session change
 
     got = _rollup_rows(spark, path)
     want = {
@@ -62,7 +64,9 @@ def test_refresh_noop_when_no_new_days(spark, tmp_path):
 def test_streaming_rollup_idempotent_on_replay(spark, sf_dir, tmp_path):
     path, ckpt = str(tmp_path / "sroll"), str(tmp_path / "sckpt")
     src = f"{sf_dir}/events.parquet"
+    mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     streaming_rollup(events_stream(spark, src), path, ckpt)
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == mode
     first = _rollup_rows(spark, path)
     assert len(first) == 150  # 30 days × 5 types
     streaming_rollup(events_stream(spark, src), path, ckpt)  # replay: checkpoint no-op
