@@ -8,9 +8,14 @@ Two tiers, as the mandate prescribes:
   higher-order fold (zip_with + aggregate), then per-query top-k via
   window rank. Linear in |corpus| × |queries| — right answer when the
   query set is small; never the scale path for all-pairs.
-* LSH-bucketed ANN (random hyperplanes) — the scale path: signature is
-  a map stage; only bucket-mates are compared. Recall measured against
-  the exact tier in tests (tests/test_llm_ops.py).
+* approximate top-k — the scale path; recall is measured against the
+  exact tier in tests (tests/test_llm_ops.py).
+  - IVF (`ann_ivf_knn`): a k-means quantizer; the collected query batch
+    probes its nearest cells on the driver, and ONE scan of the corpus
+    assigns each row its cell and scores it against the queries probing
+    that cell. Only the per-query top-k window shuffles.
+  - LSH (random hyperplanes, `ann_lsh_knn`): the signature is a map
+    stage; only bucket-mates are compared.
 
 Vectors are float32 arrays; all arithmetic casts to double FIRST so
 results are reproducible across engines (and DuckDB's list functions).
@@ -54,6 +59,12 @@ DISTRIBUTED_FIT_THRESHOLD = 500_000
 #: few hundred cells the flat matmul is trivial and picks a better cell
 #: set.
 TWO_LEVEL_MIN_CELLS = 256
+
+
+#: Float64 values the IVF search gathers per side in one kernel call
+#: (32 MB): a corpus batch whose (query, row) pairs would exceed it is
+#: scored in row slices.
+PAIR_BLOCK_VALUES = 1 << 22
 
 
 #: Floor under every L2 norm divided by: a zero vector normalises to zero
@@ -300,17 +311,17 @@ def fit_centroids_distributed(
       cell; the driver collects K rows, renormalizes, re-broadcasts.
 
     ``two_level=True`` returns the IMI quantizer ``(Cc, Cf, k_fine,
-    n_valid)`` in the exact broadcast layout ann_ivf_knn / semdedup
-    use: the coarse level is fit with the distributed Lloyd above
-    (√K centroids — cheap), corpus-sample points are then assigned to
-    their coarse cell ONCE, and each coarse cell's fine centroids are
+    n_valid)`` in the exact layout ann_ivf_knn / semdedup use: the
+    coarse level is fit with the distributed Lloyd above (√K centroids
+    — cheap), corpus-sample points are then assigned to their coarse
+    cell ONCE, and each coarse cell's fine centroids are
     fit LOCALLY inside ``groupBy(coarse).applyInPandas`` — K local fits
     of ~pts_per_cell × √K points each, fully parallel, never on the
     driver. Per-cell fine fits subsample to a bounded point budget so a
     skewed coarse cell cannot blow task memory.
 
     Single-level (``two_level=False``) returns a (K, d) ndarray. Both
-    shapes drop straight into the existing broadcast + probe code.
+    shapes drop straight into `_nearest_cell` and `_probe`.
 
     Determinism: given fixed partitioning the assignment argmaxes are
     deterministic; cross-partition float summation order in the
@@ -633,6 +644,75 @@ def _fit_quantizer(
     return Cc, Cf, k_fine, n_valid
 
 
+def _probe(v, quantizer, nprobe: int, probe_pool: int):
+    """(n, width) distinct cell ids each unit query row of ``v`` probes:
+    its ``nprobe`` nearest cells. Flat: argsort over the (K, d)
+    centroids. Two-level: the multi-sequence probe — pool the top
+    ``probe_pool·√nprobe`` coarse cells, score every fine centroid
+    inside the pool against the query (exact, not the coarse proxy),
+    and keep the GLOBAL top-nprobe cells by that score. A fixed grid of
+    fine cells per probed coarse cell misses the neighbors of a query
+    whose true neighbors concentrate under one coarse cell (recall 0.56
+    vs 0.68 for exact flat top-nprobe at 100k/K=195). As probe_pool → Kc
+    this converges to exact flat top-nprobe cell selection; at the
+    default 4 the probe costs (Kc + 4√nprobe·kf)·d flops per QUERY and
+    leaves the corpus assignment untouched."""
+    import math
+
+    import numpy as np
+
+    if nprobe <= 1:
+        return _nearest_cell(v, quantizer)[:, None]
+    if not isinstance(quantizer, tuple):
+        return np.argsort(-(v @ quantizer.T), axis=1)[:, :nprobe]
+    Ccm, Cfm, kf, nv = quantizer
+    nc = min(len(Ccm), max(1, probe_pool * (math.isqrt(nprobe - 1) + 1)))
+    coarse_top = np.argsort(-(v @ Ccm.T), axis=1)[:, :nc]
+    scores = np.full((len(v), nc * kf), -np.inf)
+    cells = np.zeros((len(v), nc * kf), dtype=np.int64)
+    for s in range(nc):
+        cc = coarse_top[:, s]
+        for ci in np.unique(cc):
+            m = cc == ci
+            sims = v[m] @ Cfm[ci].T
+            sims[:, nv[ci] :] = -np.inf  # padded alias slots
+            scores[np.where(m)[0][:, None], np.arange(s * kf, (s + 1) * kf)] = sims
+            cells[m, s * kf : (s + 1) * kf] = ci * kf + np.arange(kf)
+    width = min(nprobe, nc * kf)
+    top = np.argpartition(-scores, width - 1, axis=1)[:, :width]
+    return np.take_along_axis(cells, top, axis=1)
+
+
+def _top_pairs(ids, U, cell, probe, q_ids, Qu, k: int):
+    """The IVF search kernel over one block of corpus rows: ``ids``,
+    unit rows ``U`` and their ``cell``s, against the unit query block
+    ``Qu`` whose probes ``probe`` lists as sorted distinct (cell, query
+    index) rows. Scores every (query, row) pair where the query probes
+    the row's cell, drops self-pairs (same id), and keeps per query
+    every pair at least as close as its k-th best, so exact ties reach
+    `_top_k`. Returns (query ids, neighbor ids, cosines).
+
+    The cosine is an elementwise product summed per pair, so identical
+    vectors score bit-identically wherever they sit; a BLAS matmul's
+    rounding depends on the matrix shape, which put twins one ulp apart
+    in different Arrow batches and broke the smaller-id tiebreak."""
+    import numpy as np
+
+    lo = np.searchsorted(probe[:, 0], cell, "left")
+    counts = np.searchsorted(probe[:, 0], cell, "right") - lo
+    rows = np.repeat(np.arange(len(cell)), counts)
+    # the j-th pair of a row takes the j-th probe entry of the row's cell
+    qs = probe[np.arange(len(rows)) - np.repeat(np.cumsum(counts) - counts - lo, counts), 1]
+    keep = q_ids[qs] != ids[rows]
+    qs, rows = qs[keep], rows[keep]
+    cos = (Qu[qs] * U[rows]).sum(axis=1)
+    order = np.lexsort((-cos, qs))
+    qs, rows, cos = qs[order], rows[order], cos[order]
+    kth = cos[np.minimum(np.searchsorted(qs, qs) + k - 1, np.searchsorted(qs, qs, "right") - 1)]
+    keep = cos >= kth
+    return q_ids[qs[keep]], ids[rows[keep]], cos[keep]
+
+
 def ann_ivf_knn(
     queries: DataFrame,
     corpus: DataFrame,
@@ -650,36 +730,42 @@ def ann_ivf_knn(
 ) -> DataFrame:
     """IVF-style ANN: coarse k-means quantizer → inverted lists per
     centroid cell → queries probe their `nprobe` nearest cells only.
+    Returns (query_id, neighbor_id, rank, cos_sim), the `exact_knn`
+    schema and tiebreak.
+
+    The search is ONE scan of the corpus. The query batch is the small
+    side (as in `exact_knn`): it is collected once on the driver (one
+    row per query id), unit-normalised and probed (`_probe`), and the
+    probe is inverted into sorted (cell, query) rows. Those, the query
+    block and the quantizer ride in the closure of one `mapInPandas`
+    over the corpus: each Arrow batch assigns its rows to cells
+    (`_nearest_cell`, shared with semdedup_prune) and scores each row
+    against the queries that probe its cell (`_top_pairs`, vectorised
+    over the whole batch), dropping self-pairs. Per query it emits every
+    row at least as close as its k-th best in the batch, so exact ties
+    survive to `_top_k` — the one shuffle (by query id). The corpus is
+    never shuffled or joined, and no broadcast is made.
 
     ``two_level`` (auto-on above TWO_LEVEL_MIN_CELLS, the measured
-    crossover) switches assignment to the coarse×fine quantizer (FAISS
-    IMI shape): √K coarse centroids, √K fine per coarse cell. At 100 TB
-    the inverted index must scale K with N to keep cells bounded, and
-    single-level assignment is the same N·K·d wall SemDeDup hit —
-    two-level is N·2√K·d. Corpus vectors take their one nearest cell
-    (`_nearest_cell`, shared with semdedup_prune); queries use the
-    multi-sequence refined probe (r16): pool the top
-    ``probe_pool·√nprobe`` coarse cells, score every fine centroid in
-    the pool, keep the GLOBAL top-nprobe cells — converging to exact
-    flat top-nprobe cell selection as the pool grows, at query-side
-    cost only. Cell semantics, join shape, output schema and the
-    recall-verdict surface are unchanged; only the assignment flops
-    and the probe differ (recall pinned in tests/test_llm_ops.py for
-    both modes).
+    crossover) switches to the coarse×fine quantizer (FAISS IMI shape):
+    √K coarse centroids, √K fine per coarse cell. At 100 TB K must grow
+    with N to keep cells bounded, and single-level assignment is the
+    same N·K·d wall SemDeDup hit — two-level is N·2√K·d. Queries use
+    the multi-sequence refined probe. Cell semantics and output are the
+    same in both modes; only the assignment flops and the probe differ
+    (recall pinned in tests/test_llm_ops.py for both).
 
     The quantizer comes from `_fit_quantizer` (seeded sample on the
-    driver, or distributed past DISTRIBUTED_FIT_THRESHOLD) — the
-    standard IVF recipe: the quantizer is tiny and global, the
-    assignment is a broadcast map stage, and search joins on the cell
-    id (shuffle by cell, never a cross join). recall/cost dial =
-    n_centroids × nprobe.
+    driver, or distributed past DISTRIBUTED_FIT_THRESHOLD).
+    recall/cost dial = n_centroids × nprobe.
 
     Pass `corpus_count` when the caller already knows it (catalog
     stats, a prior action) to skip the extra count() job over the full
     corpus.
 
     Operating envelope (pinned by tests/test_llm_ops.py): recall
-    tracks the probed fraction nprobe/n_centroids. The fixture's
+    tracks the probed fraction nprobe/n_centroids, and with nprobe =
+    n_centroids the result is `exact_knn`'s. The fixture's
     i.i.d.-random embeddings are the WORST case — no cluster structure,
     so true neighbors spread almost uniformly across cells: measured
     recall@5 ≈ 0.6 at the 4/16 default (quarter of the corpus probed)
@@ -688,88 +774,40 @@ def ann_ivf_knn(
     (linear cost in probed fraction) when a workload needs a guarantee
     on unstructured vectors. Published two-level operating point
     (PROBES_r16, worst-case 1M i.i.d. vectors / K=1953): recall@5 0.81
-    at nprobe=384 and 0.88 at nprobe=512 (was 0.39 at np=64 before the
-    r16 refined probe + fit-sample floor); corpus assignment cost
-    unchanged — the recall is bought on the query side, where flops are
-    per-QUERY, not per-corpus-vector.
+    at nprobe=384 and 0.88 at nprobe=512 — the recall is bought on the
+    query side, where flops are per-QUERY, not per-corpus-vector.
     """
-    import math
-
     import numpy as np
 
+    schema = "query_id long, neighbor_id long, __cos double"
+    batch = dict(queries.select(id_col, vec_col).collect())  # one row per query id
+    if not batch:
+        return _top_k(corpus.sparkSession.createDataFrame([], schema), k)
     n_corpus = corpus_count if corpus_count is not None else corpus.count()
     quantizer = _fit_quantizer(corpus, n_centroids, vec_col, sample_size, kmeans_iters, seed, n_corpus, two_level)
-    b_C = corpus.sparkSession.sparkContext.broadcast(quantizer)
+    q_ids = np.array(list(batch), dtype=np.int64)
+    Qu = _unit_rows(np.array(list(batch.values()), dtype=np.float64))
+    P = _probe(Qu, quantizer, nprobe, probe_pool)
+    probe = np.unique(np.column_stack([P.ravel(), np.repeat(np.arange(len(P)), P.shape[1])]), axis=0)
+    # corpus rows per kernel call: at most PAIR_BLOCK_VALUES gathered
+    # doubles per side, even if every row lands in the busiest cell
+    busiest = np.unique(probe[:, 0], return_counts=True)[1].max()
+    step = max(1, PAIR_BLOCK_VALUES // (Qu.shape[1] * busiest))
 
-    def _probe(v):  # -> (n, width) distinct cell ids per query
-        Q = b_C.value
-        if nprobe <= 1:
-            return _nearest_cell(v, Q)[:, None]
-        if not isinstance(Q, tuple):
-            return np.argsort(-(v @ Q.T), axis=1)[:, :nprobe]
-        Ccm, Cfm, kf, nv = Q
-        # Multi-sequence refined probe (r16, VERDICT r15 #2): the old
-        # nc×nf grid took a FIXED ceil(nprobe/√nprobe) fine cells from
-        # each of the top-√nprobe coarse cells — a query whose true
-        # neighbors concentrate under one coarse cell got only nf of them
-        # (measured recall gap vs exact flat top-nprobe: 0.56 vs 0.68 at
-        # 100k/K=195). Now: pool the top `probe_pool·√nprobe` coarse
-        # cells, score EVERY fine centroid inside the pool against the
-        # query (the pre-normalized dot kernel — exact, not the coarse
-        # proxy), and keep the GLOBAL top-nprobe cells by that score. As
-        # probe_pool → Kc this converges to exact flat top-nprobe cell
-        # selection; at the default 4 the probe flops are
-        # (Kc + 4√nprobe·kf)·d per QUERY — query-side only, the corpus
-        # assignment is untouched, so the "assignment cost" axis of the
-        # operating curve is 1.0×.
-        nc = min(len(Ccm), max(1, probe_pool * (math.isqrt(nprobe - 1) + 1)))
-        coarse_top = np.argsort(-(v @ Ccm.T), axis=1)[:, :nc]
-        scores = np.full((len(v), nc * kf), -np.inf)
-        cells = np.zeros((len(v), nc * kf), dtype=np.int64)
-        for s in range(nc):
-            cc = coarse_top[:, s]
-            for ci in np.unique(cc):
-                m = cc == ci
-                sims = v[m] @ Cfm[ci].T
-                sims[:, nv[ci] :] = -np.inf  # padded alias slots
-                scores[np.where(m)[0][:, None], np.arange(s * kf, (s + 1) * kf)] = sims
-                cells[m, s * kf : (s + 1) * kf] = ci * kf + np.arange(kf)
-        width = min(nprobe, nc * kf)
-        top = np.argpartition(-scores, width - 1, axis=1)[:, :width]
-        return np.take_along_axis(cells, top, axis=1)
+    def score_batches(batches):
+        import pandas as pd
 
-    def cells(assign):
-        def assign_batches(batches):
-            import pandas as pd
+        for pdf in batches:
+            for lo in range(0, len(pdf), step):
+                part = pdf.iloc[lo : lo + step]
+                U = _unit_rows(np.array(list(part.iloc[:, 1]), dtype=np.float64))
+                q, n, cos = _top_pairs(
+                    part.iloc[:, 0].to_numpy(), U, _nearest_cell(U, quantizer), probe, q_ids, Qu, k
+                )
+                if len(q):
+                    yield pd.DataFrame({"query_id": q, "neighbor_id": n, "__cos": cos})
 
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                top = assign(_unit_rows(np.array(list(pdf.iloc[:, 1]), dtype=np.float64)))
-                width = top.shape[1]
-                out = {
-                    pdf.columns[0]: np.repeat(pdf.iloc[:, 0].to_numpy(), width),
-                    pdf.columns[1]: [row for row in pdf.iloc[:, 1] for _ in range(width)],
-                    "cell": top.ravel().astype(np.int32),
-                }
-                yield pd.DataFrame(out)
-
-        return assign_batches
-
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
-    qc = q.mapInPandas(cells(_probe), "query_id long, __qv array<float>, cell int")
-    cc = c.mapInPandas(
-        cells(lambda v: _nearest_cell(v, b_C.value)[:, None]), "neighbor_id long, __cv array<float>, cell int"
-    )
-    scored = (
-        qc.join(cc, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cosine(F.col("__qv"), F.col("__cv")).alias("__cos"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.first("__cos").alias("__cos"))
-    )
-    return _top_k(scored, k)
+    return _top_k(corpus.select(id_col, vec_col).mapInPandas(score_batches, schema), k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:

@@ -656,9 +656,10 @@ def probe_heavy_hitters(spark, ev_small: int, ev_big: int) -> dict:
 def probe_ann_ivf(spark, n_vec: int, target_cell: int, nprobe: int, n_queries: int) -> dict:
     """VERDICT r13 item 7: at 100 TB the IVF codebook scales K ∝ N, and
     single-level assignment is N·K·d flops — the same wall semdedup hit
-    at K in the hundreds. Measure ann_ivf_knn end-to-end (fit + assign
-    + probe-join + top-k) at a corpus-scaled K in BOTH quantizer modes,
-    plus corpus recall@k vs the exact matmul kNN on the same queries."""
+    at K in the hundreds. Measure ann_ivf_knn end-to-end (fit + probe
+    + one corpus scan that assigns and scores + top-k) at a
+    corpus-scaled K in BOTH quantizer modes, plus corpus recall@k vs the
+    exact matmul kNN on the same queries."""
     from energi_data_etl_spark.operators import similarity as S
 
     d = scratch_dir("ann_ivf_probe_")

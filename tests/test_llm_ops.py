@@ -146,6 +146,56 @@ def test_ann_ivf_recall_vs_exact(spark, sf_dir):
     assert recall_wide >= recall_default, "widening nprobe must not lose recall"
 
 
+def _twin_corpus(spark, n_base=150, dim=8):
+    """n_base random vectors, each stored twice: vec_id i and its exact
+    copy i + n_base, so every cosine ties with the twin's."""
+    import numpy as np
+
+    X = np.random.RandomState(5).randn(n_base, dim)
+    rows = [(i + off, [float(x) for x in X[i]]) for off in (0, n_base) for i in range(n_base)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+@pytest.mark.parametrize("two_level", [False, True], ids=["one_level", "two_level"])
+def test_ann_ivf_probing_every_cell_is_exact_knn(spark, two_level):
+    """nprobe = n_centroids probes every cell, so IVF must return
+    exact_knn's rows: the same ranks (twin ties to the smaller id, the
+    self-pair dropped for queries drawn from the corpus) and cosines."""
+    e = _twin_corpus(spark)
+    q = e.filter(F.col("vec_id") % 7 == 0)
+    exact = {(r.query_id, r.neighbor_id, r.rank): r.cos_sim for r in S.exact_knn(q, e, k=5).collect()}
+    got = {
+        (r.query_id, r.neighbor_id, r.rank): r.cos_sim
+        for r in S.ann_ivf_knn(q, e, k=5, n_centroids=16, nprobe=16, two_level=two_level).collect()
+    }
+    assert got.keys() == exact.keys()
+    for key, cos in exact.items():
+        assert got[key] == pytest.approx(cos, abs=1e-4), key
+
+
+def test_ann_ivf_empty_query_batch(spark):
+    e = _twin_corpus(spark)
+    assert S.ann_ivf_knn(e.filter(F.col("vec_id") < 0), e, k=5).collect() == []
+
+
+def test_ann_ivf_search_scans_the_corpus_once(spark, monkeypatch):
+    """The search shuffles only for the top-k window (by query_id): no
+    join carries the corpus to the queries, and no broadcast is made."""
+    from pyspark import SparkContext
+
+    from energi_data_etl_spark.plans.inspect import explain_str
+
+    calls = []
+    broadcast = SparkContext.broadcast
+    monkeypatch.setattr(SparkContext, "broadcast", lambda sc, value: calls.append(value) or broadcast(sc, value))
+    e = _twin_corpus(spark)
+    plan = explain_str(S.ann_ivf_knn(e.filter(F.col("vec_id") < 10), e, k=5), mode="simple")
+    assert calls == []
+    assert "Join" not in plan, plan
+    exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 1 and "hashpartitioning(query_id" in exchanges[0], plan
+
+
 def test_ann_is_deterministic(spark, sf_dir):
     e = load_table(spark, "embeddings", sf_dir)
     q = e.filter(F.col("vec_id") < 5)
